@@ -32,11 +32,11 @@ working set across the bench's repeated sweeps.
 
 Consumers that never call ``release_tracked()`` (unit tests, library
 users) fall back to the pre-round-13 behavior — blocks freed when the
-JVM garbage-collects the RDD — except that the registry caps itself:
-past ``_CAP`` tracked handles the OLDEST are released eagerly (an
-entry that old has long since been materialized; a single operator
-call never tracks more than a handful of frames, so the working set
-is never evicted).
+JVM garbage-collects the RDD. The registry caps itself so it cannot
+grow without bound: past ``_CAP`` tracked handles the OLDEST reference
+is dropped WITHOUT unpersisting it, because a library consumer may
+still hold and re-run that frame; its blocks then live until the JVM
+collects the RDD, as if it had never been tracked.
 
 ``free_checkpoint(df)`` releases one checkpointed frame immediately —
 for iterative operators where generation N+1 is materialized and
@@ -46,6 +46,8 @@ stopped context or a plan that is not a LogicalRDD is ignored).
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import DataFrame
 
@@ -59,9 +61,11 @@ __all__ = [
 
 _CAP = 128
 
-# (kind, py4j handle): kind "rdd" unpersists a checkpointed RDD,
-# "jdf" a CacheManager (persist) Dataset entry
-_TRACKED: list[tuple[str, object]] = []
+# py4j handles with an unpersist(blocking) method: checkpointed RDDs
+# and CacheManager (persist) Datasets. Guarded by _LOCK: operators may
+# run on several driver threads.
+_TRACKED: list[object] = []
+_LOCK = threading.Lock()
 
 
 def checkpoint_rdd_handle(df: DataFrame):
@@ -78,14 +82,18 @@ def checkpoint_rdd_handle(df: DataFrame):
         return None
 
 
-def _release(kind: str, handle) -> None:
+def _release(handle) -> None:
     try:
-        if kind == "rdd":
-            handle.unpersist(False)
-        else:
-            handle.unpersist(False)
+        handle.unpersist(False)
     except Exception:
         pass  # context stopped / gateway gone: nothing to free
+
+
+def _track_handle(handle) -> None:
+    with _LOCK:
+        _TRACKED.append(handle)
+        if len(_TRACKED) > _CAP:
+            del _TRACKED[0]  # drop the reference only; never unpersist here
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -94,9 +102,7 @@ def track(df: DataFrame) -> DataFrame:
     chaining. No-op (safe) when the frame is not a checkpoint leaf."""
     h = checkpoint_rdd_handle(df)
     if h is not None:
-        _TRACKED.append(("rdd", h))
-        while len(_TRACKED) > _CAP:
-            _release(*_TRACKED.pop(0))
+        _track_handle(h)
     return df
 
 
@@ -104,11 +110,9 @@ def track_persist(df: DataFrame) -> DataFrame:
     """persist() analogue of ``track``: register a CacheManager entry
     for release at the next ``release_tracked()``."""
     try:
-        _TRACKED.append(("jdf", df._jdf))
+        _track_handle(df._jdf)
     except Exception:
-        return df
-    while len(_TRACKED) > _CAP:
-        _release(*_TRACKED.pop(0))
+        pass
     return df
 
 
@@ -117,10 +121,12 @@ def release_tracked() -> int:
     queries — once the previous query's result (and every frame
     derived from it) has been fully materialized and will never run
     again. Returns the number of handles released."""
-    n = len(_TRACKED)
-    while _TRACKED:
-        _release(*_TRACKED.pop())
-    return n
+    with _LOCK:
+        handles = _TRACKED[::-1]
+        _TRACKED.clear()
+    for h in handles:
+        _release(h)
+    return len(handles)
 
 
 def free_checkpoint(df: DataFrame) -> None:
@@ -129,4 +135,4 @@ def free_checkpoint(df: DataFrame) -> None:
     frame (or a frame derived from it) again."""
     h = checkpoint_rdd_handle(df)
     if h is not None:
-        _release("rdd", h)
+        _release(h)

@@ -21,8 +21,6 @@ Column expressions rather than UDFs.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -34,7 +32,6 @@ __all__ = [
     "cosine_distance",
     "hamming",
     "distance_expr",
-    "distance_udf",
     "SPACES",
 ]
 
@@ -123,50 +120,6 @@ def hamming(a: Column | str, b: Column | str) -> Column:
 
 
 SPACES = ("l2", "ip", "cos", "hamming")
-
-
-def distance_udf(space: str) -> "Column":
-    """Arrow-batched numpy twin of ``distance_expr``.
-
-    Catalyst evaluates higher-order array lambdas interpreted (no
-    codegen); this kernel stacks each Arrow batch into one (rows, dim)
-    float64 matrix and reduces it in C — measured 2.7× faster on a
-    100q × 200k pair join (Arrow transfer of both arrays per row then
-    dominates; see RECALL.md). For exact whole-table scans use
-    pipeline/ann.py's GEMM path instead, which ships base partitions
-    once and broadcasts the queries — ~30× over the expression there.
-    Semantics match distance.go:5-41 exactly (squared L2, −dot, 1−cos
-    with zero-norm→1.0, count-unequal); values differ from the
-    expression path only in final-ulp summation order (numpy pairwise
-    vs in-order fold), which is why driver ORACLE queries keep
-    kernel='expr'."""
-    if space not in SPACES:
-        raise ValueError(f"unknown space: {space!r}; expected one of {SPACES}")
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.DoubleType())
-    def _dist(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.array(a.tolist(), dtype=np.float64)
-        B = np.array(b.tolist(), dtype=np.float64)
-        if A.size == 0:
-            return pd.Series(np.zeros(0))
-        if space == "l2":
-            d = A - B
-            out = (d * d).sum(axis=1)
-        elif space == "ip":
-            out = -(A * B).sum(axis=1)
-        elif space == "cos":
-            na = np.sqrt((A * A).sum(axis=1))
-            nb = np.sqrt((B * B).sum(axis=1))
-            denom = na * nb
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out = 1.0 - (A * B).sum(axis=1) / denom
-            out = np.where(denom == 0, 1.0, out)
-        else:  # hamming
-            out = (A != B).sum(axis=1).astype(np.float64)
-        return pd.Series(out)
-
-    return _dist
 
 
 def distance_expr(space: str, a: Column | str, b: Column | str) -> Column:

@@ -30,14 +30,16 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from oasisdb_spark.index.ivf import deterministic_sample, run_query_chunks
+from oasisdb_spark.index.flat import topk_per_query
+from oasisdb_spark.index.ivf import apply_id_filter, deterministic_sample, run_query_chunks
+from oasisdb_spark.index.kernels import local_topk, refine_exact, scored_schema
 from oasisdb_spark.pipeline.ann import _packbits64, _popcount64
 
-__all__ = ["train_binq", "encode_binq", "build_binq", "knn_binq"]
+__all__ = ["train_binq", "encode_binq", "build_binq", "load_binq", "append_binq", "knn_binq"]
 
 TRAIN_SAMPLE_CAP = 200_000
 
@@ -101,8 +103,24 @@ def build_binq(
         os.makedirs(model_dir, exist_ok=True)
         np.save(os.path.join(model_dir, "means.npy"), means)
         codes.write.mode("overwrite").parquet(os.path.join(out_dir, "codes"))
-        codes = base.sparkSession.read.parquet(os.path.join(out_dir, "codes"))
+        return load_binq(base.sparkSession, out_dir)
     return means, codes
+
+
+def load_binq(spark, out_dir: str) -> tuple[np.ndarray, DataFrame]:
+    """Read back the index build_binq wrote to out_dir: the same
+    (means, code_df) pair build_binq returns."""
+    return (
+        np.load(os.path.join(out_dir, "model", "means.npy")),
+        spark.read.parquet(os.path.join(out_dir, "codes")),
+    )
+
+
+def append_binq(new_df: DataFrame, out_dir: str) -> None:
+    """Add-after-build: encode new (id, vector) rows against the
+    trained means of the index at out_dir and append their codes."""
+    means, _ = load_binq(new_df.sparkSession, out_dir)
+    encode_binq(new_df, means).write.mode("append").parquet(os.path.join(out_dir, "codes"))
 
 
 def knn_binq(
@@ -147,21 +165,16 @@ def knn_binq(
     q_codes = _pack_rows(Q, np.ascontiguousarray(means, dtype=np.float32))
     bc_q = spark.sparkContext.broadcast((np.array(qids, dtype=object), q_codes))
     shortlist = max(k, k * max(refine_factor, 1)) if refine_base is not None else k
+    code_df = apply_id_filter(code_df, id_filter)
 
-    if id_filter is not None:
-        code_df = code_df.join(id_filter.select("id"), on="id", how="left_semi")
-
-    out_schema = T.StructType([
-        T.StructField("query_id", queries.schema[query_id_col].dataType, True),
-        T.StructField("id", code_df.schema["id"].dataType, True),
-        T.StructField("distance", T.LongType(), False),
-    ])
+    out_schema = scored_schema(
+        queries.schema[query_id_col].dataType, code_df.schema["id"].dataType, T.LongType()
+    )
 
     def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_arr, qc = bc_q.value
         qc64 = qc.view(np.uint64)
-        nq = len(ids_arr)
-        if nq == 0:
+        if len(ids_arr) == 0:
             return
         for pdf in batches:
             if len(pdf) == 0:
@@ -169,49 +182,17 @@ def knn_binq(
             codes = np.array(pdf["code"].tolist(), dtype=np.int64).view(np.uint64)
             # (nb, nq) hamming distances via XOR + popcount
             D = _popcount64(codes[:, None, :] ^ qc64[None, :, :])
-            kk = min(shortlist, len(pdf))
-            part = np.argpartition(D, kk - 1, axis=0)[:kk]
-            yield pd.DataFrame({
-                "query_id": np.repeat(ids_arr, kk),
-                "id": pdf["id"].values[part.T.reshape(-1)],
-                "distance": D[part.T.reshape(-1), np.repeat(np.arange(nq), kk)],
-            })
+            yield local_topk(ids_arr, pdf["id"].values, D, shortlist)
 
-    scored = code_df.mapInPandas(_scan, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc_nulls_last(), F.col("id").asc()
-    )
-    top = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= shortlist)
-
+    top = topk_per_query(code_df.mapInPandas(_scan, schema=out_schema), shortlist)
     if refine_base is None:
-        return top.filter(F.col("rank") <= k).select(
-            "query_id", "id", "rank", F.col("distance").cast("double").alias("distance")
+        top = top.withColumn("distance", F.col("distance").cast("double"))
+    else:
+        # the exact re-rank scores the float32 query vectors the codes
+        # were packed from
+        q = queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(query_vec_col).cast("array<float>").alias("query_vec"),
         )
-
-    from oasisdb_spark.functions.distance import distance_expr
-
-    qdf = spark.createDataFrame(
-        list(zip(qids, [[float(v) for v in row] for row in Q])),
-        T.StructType([
-            T.StructField("query_id", queries.schema[query_id_col].dataType, True),
-            T.StructField("query_vec", T.ArrayType(T.FloatType()), True),
-        ]),
-    )
-    cand = (
-        top.select("query_id", "id")
-        .join(F.broadcast(qdf), on="query_id")
-        .join(refine_base.select(F.col("id"), F.col("vector")), on="id")
-    )
-    exact = cand.select(
-        "query_id", "id", distance_expr(space, "query_vec", "vector").alias("distance")
-    )
-    # asc_nulls_last: a NULL refine vector yields a NULL exact distance,
-    # which must rank WORST (the topk_per_query rule)
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc_nulls_last(), F.col("id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "id", "rank", "distance")
-    )
+        top = refine_exact(top, q, refine_base, k, space)
+    return top.select("query_id", "id", "rank", "distance")

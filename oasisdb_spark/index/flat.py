@@ -63,32 +63,23 @@ def knn_flat(
     query_vec_col: str = "query_vec",
     id_col: str = "id",
     vec_col: str = "vector",
-    kernel: str = "expr",
 ) -> DataFrame:
     """Exact kNN: every query scored against every base vector.
 
     Returns (query_id, id, distance, rank). Equivalent of
     flat.go:106-136 Search / db/document.go:136-168 SearchVectors.
 
-    kernel='expr' (default): in-order float64 fold Column expression —
+    Scores with the in-order float64 fold Column expression —
     bit-reproducible vs SQL oracles; interpreted, so fine for small
-    scoring sets. kernel='pandas': Arrow-batched numpy (measured 2.7×
-    on a 100q × 200k pair join; last-ulp summation-order differences).
-    Both kernels materialize the query×base pair join — for large exact
-    scans use pipeline/ann.py's GEMM path (base scanned once, queries
-    broadcast, ~30× over expr), which search_vectors routes to."""
-    from oasisdb_spark.functions.distance import distance_udf
-
+    scoring sets. It materializes the query×base pair join — for large
+    exact scans use pipeline/ann.py's GEMM path (base scanned once,
+    queries broadcast, ~30× over the expression), which search_vectors
+    routes to."""
     q = F.broadcast(
         queries.select(
             F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("query_vec")
         )
     )
     b = base.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector"))
-    dist = (
-        distance_expr(space, "query_vec", "vector")
-        if kernel == "expr"
-        else distance_udf(space)("query_vec", "vector")
-    )
-    scored = q.join(b).select("query_id", "id", dist.alias("distance"))
+    scored = q.join(b).select("query_id", "id", distance_expr(space, "query_vec", "vector").alias("distance"))
     return topk_per_query(scored, k)

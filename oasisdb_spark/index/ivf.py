@@ -35,9 +35,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from oasisdb_spark.index.flat import topk_per_query
+from oasisdb_spark.index.kernels import distances_from_dots, local_topk, nearest_centroids, scored_schema, write_lists
 from oasisdb_spark.index.kmeans import kmeans_fit
 
-__all__ = ["train_centroids", "assign_clusters", "build_ivf", "add_to_ivf", "knn_ivf", "rank_probes", "deterministic_sample", "ivf_search_stats"]
+__all__ = ["train_centroids", "assign_clusters", "build_ivf", "load_ivf", "add_to_ivf", "append_ivf", "knn_ivf", "rank_probes", "deterministic_sample", "ivf_search_stats"]
 
 DEFAULT_NLIST = 100  # const.go:26-30
 DEFAULT_NPROBE = 10
@@ -81,6 +82,13 @@ def deterministic_sample(df: DataFrame, n: int, cap: int, vec_col: str) -> DataF
     return df.where(F.pmod(F.xxhash64(F.col(vec_col)), F.lit(space)) < thresh)
 
 
+def _centroid_matrix(centroids_df: DataFrame) -> np.ndarray:
+    """The centroids table as an (nlist, dim) float32 array, by cluster_id."""
+    return np.array(
+        [r["centroid"] for r in centroids_df.orderBy("cluster_id").collect()], dtype=np.float32
+    )
+
+
 def assign_clusters(
     df: DataFrame,
     centroids: np.ndarray,
@@ -95,17 +103,14 @@ def assign_clusters(
     cols = df.columns
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc.value.astype(np.float64)
-        c2 = (c**2).sum(axis=1)[None, :]
         for pdf in batches:
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float32).astype(np.float64)
-            if len(x) == 0:
+            if len(pdf) == 0:
                 pdf[out_col] = np.array([], dtype=np.int32)
                 yield pdf
                 continue
-            d = (x**2).sum(axis=1)[:, None] + c2 - 2.0 * (x @ c.T)
+            x = np.array(pdf[vec_col].tolist(), dtype=np.float32)
             pdf = pdf.copy()
-            pdf[out_col] = d.argmin(axis=1).astype(np.int32)
+            pdf[out_col] = nearest_centroids(x, bc.value).astype(np.int32)
             yield pdf
 
     return df.mapInPandas(_map, schema=schema).select(*cols, out_col)
@@ -133,15 +138,18 @@ def build_ivf(
     )
     if out_dir:
         cent_df.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "centroids"))
-        # repartition on the partition column first: one task writes each
-        # inverted list (one file per cluster) instead of every task
-        # opening every partition dir — measured 2.4× faster at 200k/256
-        index_df.repartition("cluster_id").write.mode("overwrite").partitionBy("cluster_id").parquet(
-            os.path.join(out_dir, "lists")
-        )
-        cent_df = spark.read.parquet(os.path.join(out_dir, "centroids"))
-        index_df = spark.read.parquet(os.path.join(out_dir, "lists"))
+        write_lists(index_df, os.path.join(out_dir, "lists"), "overwrite")
+        return load_ivf(spark, out_dir)
     return cent_df, index_df
+
+
+def load_ivf(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Read back the index build_ivf wrote to out_dir: the same
+    (centroids_df, index_df) pair build_ivf returns."""
+    return (
+        spark.read.parquet(os.path.join(out_dir, "centroids")),
+        spark.read.parquet(os.path.join(out_dir, "lists")),
+    )
 
 
 def add_to_ivf(
@@ -161,17 +169,18 @@ def add_to_ivf(
     Centroids drift as data grows, so periodic build_index rebuilds stay
     the compaction analogue; this is the cheap write path between them.
     Returns a fresh reader over the updated lists."""
-    spark = new_df.sparkSession
-    centroids = np.array(
-        [r["centroid"] for r in centroids_df.orderBy("cluster_id").collect()], dtype=np.float32
-    )
     assigned = assign_clusters(
-        new_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector")), centroids
+        new_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector")),
+        _centroid_matrix(centroids_df),
     )
-    assigned.repartition("cluster_id").write.mode("append").partitionBy("cluster_id").parquet(
-        lists_dir
-    )
-    return spark.read.parquet(lists_dir)
+    write_lists(assigned, lists_dir, "append")
+    return new_df.sparkSession.read.parquet(lists_dir)
+
+
+def append_ivf(new_df: DataFrame, out_dir: str) -> None:
+    """add_to_ivf against the index build_ivf wrote to out_dir."""
+    cent_df, _ = load_ivf(new_df.sparkSession, out_dir)
+    add_to_ivf(new_df, cent_df, os.path.join(out_dir, "lists"))
 
 
 def rank_probes(
@@ -198,16 +207,12 @@ def rank_probes(
     )
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc.value.astype(np.float64)
-        c2 = (c**2).sum(axis=1)[None, :]
-        p = min(nprobe, c.shape[0])
+        p = min(nprobe, bc.value.shape[0])
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.array(pdf["query_vec"].tolist(), dtype=np.float32).astype(np.float64)
-            d = (x**2).sum(axis=1)[:, None] + c2 - 2.0 * (x @ c.T)
-            # deterministic top-p: argsort on (distance, cluster_id)
-            probes = np.argsort(d, axis=1, kind="stable")[:, :p]
+            x = np.array(pdf["query_vec"].tolist(), dtype=np.float32)
+            probes = nearest_centroids(x, bc.value, p)
             out = pdf.loc[pdf.index.repeat(p)].reset_index(drop=True)
             out["cluster_id"] = probes.reshape(-1).astype(np.int32)
             yield out
@@ -235,14 +240,12 @@ def knn_ivf(
     does); the candidate re-ranking uses `space`.
 
     kernel: 'expr' = oracle-bit-exact fold expression (default, fine
-    while nprobe/nlist keeps candidates small); 'pandas' = Arrow-batched
-    numpy kernel for large candidate volumes (see distance_udf);
-    'gemm' = cogrouped per-cluster GEMM (l2/ip/cos) — probes and index
-    cogroup on cluster_id and each cluster scores as ONE matrix
-    multiply with a local top-k trim, so each base vector crosses
-    Arrow once per CLUSTER instead of once per candidate row
-    (~|cluster| fewer vector transfers than 'pandas'; the right shape
-    for table-sized query sets like whole-base self-kNN). GEMM carries
+    while nprobe/nlist keeps candidates small); 'gemm' = cogrouped
+    per-cluster GEMM (l2/ip/cos) — probes and index cogroup on
+    cluster_id and each cluster scores as ONE matrix multiply with a
+    local top-k trim, so each base vector crosses Arrow once per
+    CLUSTER instead of once per candidate row (the right shape for
+    table-sized query sets like whole-base self-kNN). GEMM carries
     the usual last-ulp summation noise vs the fold expression — keep
     oracle-gated runs on 'expr'.
 
@@ -261,27 +264,18 @@ def knn_ivf(
     on cluster_id, co-located with the index's cluster_id partitioning,
     instead of broadcasting a base-sized frame.
     """
-    from oasisdb_spark.functions.distance import distance_expr, distance_udf
+    from oasisdb_spark.functions.distance import distance_expr
 
-    if kernel not in ("expr", "pandas", "gemm"):
-        raise ValueError(
-            f"knn_ivf: kernel must be expr|pandas|gemm, got {kernel!r}"
-        )
-    centroids = np.array(
-        [r["centroid"] for r in centroids_df.orderBy("cluster_id").collect()], dtype=np.float32
-    )
+    if kernel not in ("expr", "gemm"):
+        raise ValueError(f"knn_ivf: kernel must be expr|gemm, got {kernel!r}")
+    centroids = _centroid_matrix(centroids_df)
     probes = rank_probes(queries, centroids, nprobe, query_id_col, query_vec_col)
     if kernel == "gemm":
         return _knn_ivf_gemm(probes, index_df, k, space, id_filter)
     if broadcast_probes:
         probes = F.broadcast(probes)
     cand = apply_id_filter(probes.join(index_df, on="cluster_id"), id_filter)
-    dist = (
-        distance_expr(space, "query_vec", "vector")
-        if kernel == "expr"
-        else distance_udf(space)("query_vec", "vector")
-    )
-    scored = cand.select("query_id", "id", dist.alias("distance"))
+    scored = cand.select("query_id", "id", distance_expr(space, "query_vec", "vector").alias("distance"))
     return topk_per_query(scored, k)
 
 
@@ -299,64 +293,25 @@ def _knn_ivf_gemm(
     query (candidates never materialize as rows), then the global
     topk_per_query window merges the per-cluster shortlists —
     <= nprobe·k rows per query reach the final shuffle. Arrow traffic
-    is |probes| + |index| vectors total, vs 2 vectors PER CANDIDATE
-    ROW in the join+UDF shape. Tie handling matches topk_per_query:
-    the local trim selects by (distance, id), so boundary ties survive
-    to the global merge in the same total order."""
+    is |probes| + |index| vectors total. The local trim (kernels.
+    local_topk) keeps boundary ties in (distance, id) order, the total
+    order of the global merge."""
     if space not in ("l2", "ip", "cos"):
         raise ValueError(
             f"knn_ivf kernel='gemm' supports l2/ip/cos, got {space!r}; "
-            "use kernel='pandas' for hamming"
+            "use kernel='expr' for hamming"
         )
-    idx = index_df
-    if id_filter is not None:
-        idx = idx.join(id_filter.select("id"), on="id", how="left_semi")
-    qid_type = probes.schema["query_id"].dataType
-    id_type = idx.schema["id"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", qid_type, True),
-            T.StructField("id", id_type, True),
-            T.StructField("distance", T.DoubleType(), True),
-        ]
-    )
+    idx = apply_id_filter(index_df, id_filter)
+    out_schema = scored_schema(probes.schema["query_id"].dataType, idx.schema["id"].dataType)
 
     def _score(key, probe_pdf: pd.DataFrame, index_pdf: pd.DataFrame):
         if len(probe_pdf) == 0 or len(index_pdf) == 0:
             return pd.DataFrame({"query_id": [], "id": [], "distance": []})
         Q = np.array(probe_pdf["query_vec"].tolist(), dtype=np.float64)
         X = np.array(index_pdf["vector"].tolist(), dtype=np.float64)
-        G = X @ Q.T  # (nb, nq)
-        if space == "l2":
-            x_sq = (X**2).sum(axis=1)
-            q_sq = (Q**2).sum(axis=1)
-            # clamp: cancellation can push x²+q²-2xq slightly negative
-            D = np.maximum(x_sq[:, None] + q_sq[None, :] - 2.0 * G, 0.0)
-        elif space == "ip":
-            D = -G
-        else:  # cos
-            x_norm = np.sqrt((X**2).sum(axis=1))
-            q_norm = np.sqrt((Q**2).sum(axis=1))
-            denom = x_norm[:, None] * q_norm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                D = np.where(denom > 0, 1.0 - G / denom, 1.0)
-        ids = index_pdf["id"].to_numpy()
-        # local top-k by (distance, id): pre-sort rows by id (stable),
-        # then argsort on distance keeps the id order among ties
-        order = np.argsort(ids, kind="stable")
-        ids, D = ids[order], D[order]
-        nb = len(ids)
-        kk = min(k, nb)
-        sel = np.argsort(D, axis=0, kind="stable")[:kk]  # (kk, nq)
-        nq = len(probe_pdf)
-        qids = probe_pdf["query_id"].to_numpy()
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, kk),
-                "id": ids[sel.T.reshape(-1)],
-                "distance": D[sel.T.reshape(-1), np.repeat(np.arange(nq), kk)],
-            }
-        )
+        x_sq, q_sq = (X**2).sum(axis=1), (Q**2).sum(axis=1)
+        D = distances_from_dots(space, X @ Q.T, x_sq[:, None], q_sq[None, :])  # (nb, nq)
+        return local_topk(probe_pdf["query_id"].to_numpy(), index_pdf["id"].to_numpy(), D, k)
 
     shortlists = (
         probes.groupBy("cluster_id")
@@ -386,9 +341,7 @@ def ivf_search_stats(
     rows) — the index itself is scanned only for its per-cluster counts
     (metadata-level parquet count), never for vectors."""
     sizes = index_df.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
-    centroids = np.array(
-        [r["centroid"] for r in centroids_df.orderBy("cluster_id").collect()], dtype=np.float32
-    )
+    centroids = _centroid_matrix(centroids_df)
     probes = rank_probes(queries, centroids, nprobe, query_id_col, query_vec_col)
     return (
         probes.join(F.broadcast(sizes), on="cluster_id", how="left")

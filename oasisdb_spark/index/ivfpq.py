@@ -38,10 +38,11 @@ from pyspark.sql import types as T
 
 from oasisdb_spark.errors import ErrInvalidParams
 from oasisdb_spark.index.flat import topk_per_query
-from oasisdb_spark.index.ivf import apply_id_filter, rank_probes, run_query_chunks, train_centroids, assign_clusters
+from oasisdb_spark.index.ivf import apply_id_filter, rank_probes, run_query_chunks, train_centroids
+from oasisdb_spark.index.kernels import nearest_centroids, refine_exact, scored_schema, write_lists
 from oasisdb_spark.index.kmeans import kmeans_fit
 
-__all__ = ["train_pq", "encode_pq", "build_ivfpq", "add_to_ivfpq", "knn_ivfpq"]
+__all__ = ["train_pq", "encode_pq", "build_ivfpq", "load_ivfpq", "add_to_ivfpq", "append_ivfpq", "knn_ivfpq"]
 
 KSUB = 256  # 2^nbits, nbits=8 only (ivfpq.go:104-106)
 
@@ -66,11 +67,7 @@ def train_pq(
     sub = dim // m
     sample = deterministic_sample(base.select(vec_col), base.count(), sample_cap, vec_col)
     x = np.array(sample.toPandas()[vec_col].tolist(), dtype=np.float32)
-    # residual = vector - nearest coarse centroid
-    c = centroids.astype(np.float64)
-    d = ((x.astype(np.float64) ** 2).sum(1)[:, None] + (c**2).sum(1)[None, :]
-         - 2.0 * x.astype(np.float64) @ c.T)
-    resid = x - centroids[d.argmin(1)]
+    resid = x - centroids[nearest_centroids(x, centroids)]
     books = np.zeros((m, KSUB, sub), dtype=np.float32)
     for j in range(m):
         block = resid[:, j * sub : (j + 1) * sub]
@@ -100,23 +97,16 @@ def encode_pq(
     keep = [f.name for f in df.schema.fields if f.name != vec_col]
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc_c.value.astype(np.float64)
         books = bc_b.value
-        c2 = (c**2).sum(1)[None, :]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             x = np.array(pdf[vec_col].tolist(), dtype=np.float32)
-            xd = x.astype(np.float64)
-            d = (xd**2).sum(1)[:, None] + c2 - 2.0 * (xd @ c.T)
-            assign = d.argmin(1).astype(np.int32)
+            assign = nearest_centroids(x, bc_c.value).astype(np.int32)
             resid = x - bc_c.value[assign]
             codes = np.empty((len(x), m), dtype=np.int16)
             for j in range(m):
-                block = resid[:, j * sub : (j + 1) * sub].astype(np.float64)
-                bj = books[j].astype(np.float64)
-                dj = (block**2).sum(1)[:, None] + (bj**2).sum(1)[None, :] - 2.0 * block @ bj.T
-                codes[:, j] = dj.argmin(1).astype(np.int16)
+                codes[:, j] = nearest_centroids(resid[:, j * sub : (j + 1) * sub], books[j])
             out = pdf[keep].copy()
             out["cluster_id"] = assign
             out["codes"] = list(codes)
@@ -143,17 +133,24 @@ def build_ivfpq(
         codebooks,
     )
     if out_dir:
-        spark = base.sparkSession
-        # one writer task per inverted list (see ivf.py build note)
-        index_df.repartition("cluster_id").write.mode("overwrite").partitionBy("cluster_id").parquet(
-            os.path.join(out_dir, "lists")
-        )
+        write_lists(index_df, os.path.join(out_dir, "lists"), "overwrite")
         np_dir = os.path.join(out_dir, "model")
         os.makedirs(np_dir, exist_ok=True)
         np.save(os.path.join(np_dir, "centroids.npy"), centroids)
         np.save(os.path.join(np_dir, "codebooks.npy"), codebooks)
-        index_df = spark.read.parquet(os.path.join(out_dir, "lists"))
+        return load_ivfpq(base.sparkSession, out_dir)
     return centroids, codebooks, index_df
+
+
+def load_ivfpq(spark, out_dir: str) -> tuple[np.ndarray, np.ndarray, DataFrame]:
+    """Read back the index build_ivfpq wrote to out_dir: the same
+    (centroids, codebooks, index_df) triple build_ivfpq returns."""
+    model = os.path.join(out_dir, "model")
+    return (
+        np.load(os.path.join(model, "centroids.npy")),
+        np.load(os.path.join(model, "codebooks.npy")),
+        spark.read.parquet(os.path.join(out_dir, "lists")),
+    )
 
 
 def add_to_ivfpq(
@@ -174,10 +171,14 @@ def add_to_ivfpq(
         centroids,
         codebooks,
     )
-    encoded.repartition("cluster_id").write.mode("append").partitionBy("cluster_id").parquet(
-        lists_dir
-    )
+    write_lists(encoded, lists_dir, "append")
     return spark.read.parquet(lists_dir)
+
+
+def append_ivfpq(new_df: DataFrame, out_dir: str) -> None:
+    """add_to_ivfpq against the index build_ivfpq wrote to out_dir."""
+    centroids, codebooks, _ = load_ivfpq(new_df.sparkSession, out_dir)
+    add_to_ivfpq(new_df, centroids, codebooks, os.path.join(out_dir, "lists"))
 
 
 def knn_ivfpq(
@@ -250,13 +251,7 @@ def knn_ivfpq(
     )
     cand = apply_id_filter(F.broadcast(probes).join(index_df, on="cluster_id"), id_filter)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[query_id_col].dataType, True),
-            T.StructField("id", index_df.schema["id"].dataType, True),
-            T.StructField("distance", T.DoubleType(), False),
-        ]
-    )
+    out_schema = scored_schema(queries.schema[query_id_col].dataType, index_df.schema["id"].dataType)
 
     def _adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cents = bc_c.value
@@ -297,15 +292,7 @@ def knn_ivfpq(
     scored = cand.mapInPandas(_adc, schema=out_schema)
     if refine_base is None:
         return topk_per_query(scored, k)
-    shortlist = topk_per_query(scored, k * refine_factor).select("query_id", "id")
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("query_vec")
     )
-    from oasisdb_spark.functions.distance import distance_expr
-
-    rescored = (
-        shortlist.join(refine_base.select("id", "vector"), on="id")
-        .join(F.broadcast(q), on="query_id")
-        .select("query_id", "id", distance_expr(space, "query_vec", "vector").alias("distance"))
-    )
-    return topk_per_query(rescored, k)
+    return refine_exact(topk_per_query(scored, k * refine_factor), q, refine_base, k, space)

@@ -36,8 +36,11 @@ from oasisdb_spark.index.flat import topk_per_query
 from oasisdb_spark.index.ivf import (
     apply_id_filter, deterministic_sample, rank_probes, run_query_chunks, train_centroids,
 )
+from oasisdb_spark.index.kernels import (
+    distances_from_dots, nearest_centroids, refine_exact, scored_schema, write_lists,
+)
 
-__all__ = ["train_sq", "encode_sq", "build_ivfsq", "knn_ivfsq"]
+__all__ = ["train_sq", "encode_sq", "build_ivfsq", "load_ivfsq", "append_ivfsq", "knn_ivfsq"]
 
 
 def train_sq(base: DataFrame, vec_col: str = "vector", sample_cap: int = 65_536):
@@ -81,15 +84,12 @@ def encode_sq(
     ]
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc_c.value.astype(np.float64)
-        c2 = (c**2).sum(1)[None, :]
         lo, hi = bc_r.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             x = np.array(pdf[vec_col].tolist(), dtype=np.float32)
-            xd = x.astype(np.float64)
-            assign = ((xd**2).sum(1)[:, None] + c2 - 2.0 * (xd @ c.T)).argmin(1)
+            assign = nearest_centroids(x, bc_c.value)
             codes = _quantize(x, lo, hi)
             out = pdf[keep].copy()
             out["cluster_id"] = assign.astype(np.int32)
@@ -116,17 +116,35 @@ def build_ivfsq(
         centroids, vmin, vmax,
     )
     if out_dir:
-        spark = base.sparkSession
-        index_df.repartition("cluster_id").write.mode("overwrite").partitionBy("cluster_id").parquet(
-            os.path.join(out_dir, "lists")
-        )
+        write_lists(index_df, os.path.join(out_dir, "lists"), "overwrite")
         np_dir = os.path.join(out_dir, "model")
         os.makedirs(np_dir, exist_ok=True)
         np.save(os.path.join(np_dir, "centroids.npy"), centroids)
         np.save(os.path.join(np_dir, "vmin.npy"), vmin)
         np.save(os.path.join(np_dir, "vmax.npy"), vmax)
-        index_df = spark.read.parquet(os.path.join(out_dir, "lists"))
+        return load_ivfsq(base.sparkSession, out_dir)
     return centroids, vmin, vmax, index_df
+
+
+def load_ivfsq(spark, out_dir: str):
+    """Read back the index build_ivfsq wrote to out_dir: the same
+    (centroids, vmin, vmax, index_df) build_ivfsq returns."""
+    model = os.path.join(out_dir, "model")
+    return (
+        np.load(os.path.join(model, "centroids.npy")),
+        np.load(os.path.join(model, "vmin.npy")),
+        np.load(os.path.join(model, "vmax.npy")),
+        spark.read.parquet(os.path.join(out_dir, "lists")),
+    )
+
+
+def append_ivfsq(new_df: DataFrame, out_dir: str) -> None:
+    """Add-after-build: quantize new (id, vector) rows against the
+    trained centroids and ranges of the index at out_dir and append
+    them to its inverted lists — no retrain."""
+    centroids, vmin, vmax, _ = load_ivfsq(new_df.sparkSession, out_dir)
+    encoded = encode_sq(new_df.select("id", "vector"), centroids, vmin, vmax)
+    write_lists(encoded, os.path.join(out_dir, "lists"), "append")
 
 
 def knn_ivfsq(
@@ -188,19 +206,12 @@ def knn_ivfsq(
         "query_id", "cluster_id"
     )
     cand = apply_id_filter(F.broadcast(probes).join(index_df, on="cluster_id"), id_filter)
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[query_id_col].dataType, True),
-            T.StructField("id", index_df.schema["id"].dataType, True),
-            T.StructField("distance", T.DoubleType(), False),
-        ]
-    )
+    out_schema = scored_schema(queries.schema[query_id_col].dataType, index_df.schema["id"].dataType)
 
     def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         all_qids, Qm = bc_q.value
         qpos = {q: i for i, q in enumerate(all_qids)}
         q_sq = (Qm**2).sum(axis=1)
-        q_norm = np.sqrt(q_sq)
         lo, hi = bc_r.value
         for pdf in batches:
             if len(pdf) == 0:
@@ -211,29 +222,13 @@ def knn_ivfsq(
             # row-wise distance to each row's own query (candidates come
             # pre-paired with a query by the probe join)
             dot = np.einsum("ij,ij->i", X, Qm[cols])
-            if space == "l2":
-                x_sq = (X**2).sum(axis=1)
-                d = np.maximum(x_sq + q_sq[cols] - 2.0 * dot, 0.0)
-            elif space == "ip":
-                d = -dot
-            else:  # cos
-                x_norm = np.sqrt((X**2).sum(axis=1))
-                denom = np.maximum(x_norm * q_norm[cols], 1e-30)
-                d = 1.0 - dot / denom
+            d = distances_from_dots(space, dot, (X**2).sum(axis=1), q_sq[cols])
             yield pd.DataFrame({"query_id": pdf["query_id"], "id": pdf["id"], "distance": d})
 
     scored = cand.mapInPandas(_score, schema=out_schema)
     if refine_base is None:
         return topk_per_query(scored, k)
-    shortlist = topk_per_query(scored, k * refine_factor).select("query_id", "id")
-    from oasisdb_spark.functions.distance import distance_expr
-
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("query_vec")
     )
-    rescored = (
-        shortlist.join(refine_base.select("id", "vector"), on="id")
-        .join(F.broadcast(q), on="query_id")
-        .select("query_id", "id", distance_expr(space, "query_vec", "vector").alias("distance"))
-    )
-    return topk_per_query(rescored, k)
+    return refine_exact(topk_per_query(scored, k * refine_factor), q, refine_base, k, space)

@@ -28,11 +28,12 @@ two actions: the scalar sum and the renorm; checkpoint blocks are
 node-sized and non-replicated — an executor loss mid-job fails the
 query and the batch job reruns, the standard iterative-batch trade)
 and tracked for release at the harness's next between-queries point
-(ckpt.track, guide §5). Precondition (loud, not silent): S_a and S_h
-must stay below 2^63 — sum(h) * max_outdeg bounds them; with SCALE
-1e12 that holds to ~10^6 average degree. Raw sums are exact regardless
-(decimal/HUGEINT); the guard is on the int64 downcast of scores, which
-renorm keeps at <= SCALE by construction.
+(ckpt.track, guide §5). Unchecked precondition: S_a and S_h must
+stay below 2^63 — sum(h) * max_outdeg bounds them; with SCALE 1e12
+that holds to ~10^6 average degree. Nothing checks it at run time:
+past it the per-node long sums wrap silently (ANSI off) before the
+decimal cast. The pass totals are exact decimal/HUGEINT sums, and
+renorm keeps each int64 score at <= SCALE by construction.
 
 Form history (OPTIMIZATION r13, VERDICT r12 #3): round 12 composed the
 whole iteration into one job by riding each pass total as a one-row

@@ -25,16 +25,14 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from oasisdb_spark.index.flat import topk_per_query
+from oasisdb_spark.index.ivf import run_query_chunks
+from oasisdb_spark.index.kernels import distances_from_dots, local_topk, scored_schema
 
 __all__ = ["knn_brute_batched", "cosine_topk_batched"]
-
-
-def _topk_merge(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def _packbits64(M: np.ndarray) -> np.ndarray:
@@ -53,23 +51,6 @@ def _popcount64(words: np.ndarray) -> np.ndarray:
     """Popcount over the last axis of a uint64 array via a byte LUT."""
     b = words.view(np.uint8).reshape(*words.shape[:-1], -1)
     return _POP8[b].sum(axis=-1, dtype=np.int64)
-
-
-def _emit_topk(pdf: pd.DataFrame, qids, D: np.ndarray, k: int, select_key: np.ndarray | None = None):
-    """Local top-k per query inside one Arrow batch (shared by the GEMM
-    and hamming kernels): (nb, nq) distances → <= k rows per query.
-    select_key: optional tie-deterministic selection key (same shape as
-    D); defaults to D itself (fine for continuous distances)."""
-    nq = D.shape[1]
-    kk = min(k, len(pdf))
-    part = np.argpartition(D if select_key is None else select_key, kk - 1, axis=0)[:kk]
-    yield pd.DataFrame(
-        {
-            "query_id": np.repeat(qids, kk),
-            "id": pdf["id"].values[part.T.reshape(-1)],
-            "distance": D[part.T.reshape(-1), np.repeat(np.arange(nq), kk)],
-        }
-    )
 
 
 def knn_brute_batched(
@@ -124,38 +105,25 @@ def knn_brute_batched(
             f"caller's hard cap {hard_query_cap} — brute scoring at this size "
             "is quadratic; use the IVF composition or raise the cap explicitly"
         )
-    if len(q_rows) > max_query_rows:
-        out = None
-        for lo in range(0, len(q_rows), max_query_rows):
-            chunk = spark.createDataFrame(
-                q_rows[lo : lo + max_query_rows], queries.select(query_id_col, query_vec_col).schema
-            )
-            part = knn_brute_batched(
-                chunk, base, k, space, query_id_col, query_vec_col, id_col, vec_col, max_query_rows, gemm_dtype
-            )
-            out = part if out is None else out.unionByName(part)
-        return out
+    chunked = run_query_chunks(
+        spark, q_rows, queries.select(query_id_col, query_vec_col).schema, max_query_rows,
+        lambda chunk: knn_brute_batched(
+            chunk, base, k, space, query_id_col, query_vec_col, id_col, vec_col, max_query_rows, gemm_dtype
+        ),
+    )
+    if chunked is not None:
+        return chunked
     q_ids = [r[query_id_col] for r in q_rows]
     _dt = np.float64 if gemm_dtype == "float64" else np.float32
     Q = np.array([r[query_vec_col] for r in q_rows], dtype=_dt)
     bc = spark.sparkContext.broadcast((q_ids, Q))
 
-    id_type = base.schema[id_col].dataType
-    qid_type = queries.schema[query_id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", qid_type, True),
-            T.StructField("id", id_type, True),
-            T.StructField("distance", T.DoubleType(), True),
-        ]
-    )
+    out_schema = scored_schema(queries.schema[query_id_col].dataType, base.schema[id_col].dataType)
     b = base.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector"))
 
     def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids, Qm = bc.value
-        Qt = Qm.T  # (dim, nq)
         q_sq = (Qm.astype(np.float64) ** 2).sum(axis=1)  # (nq,)
-        q_norm = np.sqrt(q_sq)
         nq = len(qids)
         q_binary = space == "hamming" and bool(np.isin(Qm, (0.0, 1.0)).all())
         q_packed = _packbits64(Qm) if q_binary else None
@@ -163,50 +131,25 @@ def knn_brute_batched(
             if len(pdf) == 0:
                 continue
             X = np.array(pdf["vector"].tolist(), dtype=Qm.dtype)  # (nb, dim)
-            if space == "hamming":
-                # integer distances tie constantly: pre-sort the batch by
-                # id and select on the composite key dist*nb + row, so the
-                # local top-k keeps boundary ties in (distance, id) order
-                # — the same total order the global merge (and the SQL
-                # oracle) uses. Still O(nb) selection per query.
-                order = np.argsort(pdf["id"].values, kind="stable")
-                pdf = pdf.iloc[order]
-                X = X[order]
-                if q_binary and bool(np.isin(X, (0.0, 1.0)).all()):
-                    # packed-bits path: XOR + popcount over uint64 words
-                    xp = _packbits64(X)
-                    D = _popcount64(xp[:, None, :] ^ q_packed[None, :, :])
-                else:
-                    # general floats: elementwise-inequality count, chunked
-                    # over queries to bound the (nb, chunk, dim) bool cube
-                    cols = []
-                    step = max(1, (1 << 24) // max(1, X.shape[0] * X.shape[1]))
-                    for lo in range(0, nq, step):
-                        cols.append(
-                            (X[:, None, :] != Qm[None, lo : lo + step, :]).sum(axis=2)
-                        )
-                    D = np.concatenate(cols, axis=1)
-                nb = len(pdf)
-                key = D.astype(np.int64) * nb + np.arange(nb, dtype=np.int64)[:, None]
-                yield from _emit_topk(pdf, qids, D.astype(np.float64), k, select_key=key)
-                continue
-            G = (X @ Qt).astype(np.float64)  # (nb, nq) dot products
-            if space == "l2":
+            if space != "hamming":
+                G = (X @ Qm.T).astype(np.float64)  # (nb, nq) dot products
                 x_sq = (X.astype(np.float64) ** 2).sum(axis=1)
-                # clamp: ||x||²+||q||²-2x·q can go slightly negative from
-                # cancellation when x≈q; true squared distance is >= 0
-                D = np.maximum(x_sq[:, None] + q_sq[None, :] - 2.0 * G, 0.0)
-            elif space == "ip":
-                D = -G
-            else:  # cos
-                x_norm = np.sqrt((X.astype(np.float64) ** 2).sum(axis=1))
-                denom = x_norm[:, None] * q_norm[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    D = np.where(denom > 0, 1.0 - G / denom, 1.0)
-            yield from _emit_topk(pdf, qids, D, k)
+                D = distances_from_dots(space, G, x_sq[:, None], q_sq[None, :])
+            elif q_binary and bool(np.isin(X, (0.0, 1.0)).all()):
+                # packed-bits path: XOR + popcount over uint64 words
+                D = _popcount64(_packbits64(X)[:, None, :] ^ q_packed[None, :, :])
+            else:
+                # general floats: elementwise-inequality count, chunked
+                # over queries to bound the (nb, chunk, dim) bool cube
+                step = max(1, (1 << 24) // max(1, X.shape[0] * X.shape[1]))
+                D = np.concatenate(
+                    [(X[:, None, :] != Qm[None, lo : lo + step, :]).sum(axis=2) for lo in range(0, nq, step)],
+                    axis=1,
+                )
+            yield local_topk(qids, pdf["id"].values, D.astype(np.float64, copy=False), k)
 
     scored = b.mapInPandas(_score, schema=out_schema)
-    return _topk_merge(scored, k)
+    return topk_per_query(scored, k)
 
 
 def cosine_topk_batched(

@@ -467,9 +467,9 @@ def mutual_knn_pairs_ivf(
     join shuffles on cluster_id, co-located with the index's
     cluster_id partitioning. ``kernel``: 'expr' (default — in-order
     float64 fold Columns, the oracle dialect; right for oracle-gated
-    runs and small candidate volumes), 'pandas' (Arrow row kernel), or
-    'gemm' (cogrouped per-cluster GEMM — the production shape for
-    whole-base self-kNN: |base|·nprobe/nlist·|base| candidate rows
+    runs and small candidate volumes) or 'gemm' (cogrouped
+    per-cluster GEMM — the production shape for whole-base self-kNN:
+    |base|·nprobe/nlist·|base| candidate rows
     never materialize; each cluster scores as one matrix multiply and
     only local top-k shortlists reach the merge. Last-ulp
     summation-order noise only — the same GEMM-twin contract the brute

@@ -27,16 +27,19 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
+from typing import Callable, NamedTuple
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from oasisdb_spark import errors
 from oasisdb_spark.catalog import Catalog
-from oasisdb_spark.index.flat import knn_flat
-from oasisdb_spark.index.ivf import build_ivf, knn_ivf
-from oasisdb_spark.index.ivfpq import build_ivfpq, knn_ivfpq
+from oasisdb_spark.index.binq import append_binq, build_binq, knn_binq, load_binq
+from oasisdb_spark.index.ivf import append_ivf, build_ivf, knn_ivf, load_ivf
+from oasisdb_spark.index.ivfpq import append_ivfpq, build_ivfpq, knn_ivfpq, load_ivfpq
+from oasisdb_spark.index.ivfsq import append_ivfsq, build_ivfsq, knn_ivfsq, load_ivfsq
+from oasisdb_spark.pipeline import ann
 
 __all__ = [
     "build_index",
@@ -47,40 +50,120 @@ __all__ = [
 ]
 
 
+class _Search(NamedTuple):
+    """What an indexed search needs besides queries, index and k."""
+
+    params: dict
+    space: str
+    refine_base: DataFrame  # the collection's (id, vector) rows
+    id_filter: DataFrame | None
+    nprobe_boost: int
+
+
+class _Tier(NamedTuple):
+    """One index type (the reference's VectorIndex, index.go:22-52).
+
+    build(data, out_dir, params) writes the index files; load(spark,
+    out_dir) reads them back as the tuple the tier's knn function takes
+    before k — (model..., lists); add(docs, out_dir) appends to the
+    lists; search(queries, index, k, _Search) runs the kNN. Flat keeps
+    no index files (the collection IS the index, flat.go:14-20), so it
+    has only build, and its searches take the exact scan."""
+
+    build: Callable
+    load: Callable | None = None
+    add: Callable | None = None
+    search: Callable | None = None
+
+
+def _nlist(params: dict, data: DataFrame) -> int:
+    return _resolve_nlist(params.get("nlist", "100"), data.count())
+
+
+def _nprobe(s: _Search) -> int:
+    return int(s.params.get("nprobe", "10")) * s.nprobe_boost  # the knn functions cap at nlist
+
+
+def _efsearch_nprobe(s: _Search) -> int:
+    # efsearch⇒nprobe mapping: scan roughly efsearch/ef_default
+    # fraction of lists, floor 1 (SURVEY.md §7 phase 3.5)
+    return max(1, int(s.params.get("efsearch", "10")) // 2) * s.nprobe_boost
+
+
+def _ivf_tier(nprobe: Callable[[_Search], int]) -> _Tier:
+    return _Tier(
+        build=lambda data, d, p: build_ivf(data, nlist=_nlist(p, data), out_dir=d),
+        load=load_ivf,
+        add=append_ivf,
+        search=lambda q, index, k, s: knn_ivf(
+            q, *index, k, nprobe=nprobe(s), space=s.space, id_filter=s.id_filter
+        ),
+    )
+
+
+# The one dispatch on index_type. The build and search entries look the
+# tier functions up by their names in this module at call time, so a
+# wrapper installed on, say, search.knn_ivf sees every call.
+_TIERS = {
+    "flat": _Tier(build=lambda data, d, p: os.makedirs(d, exist_ok=True)),
+    "ivf_flat": _ivf_tier(_nprobe),
+    # hnsw tier = IVF tables with an nprobe preset derived from efsearch
+    "hnsw": _ivf_tier(_efsearch_nprobe),
+    "ivfpq": _Tier(
+        build=lambda data, d, p: build_ivfpq(
+            data, nlist=_nlist(p, data), m=int(p.get("m", "8")), out_dir=d
+        ),
+        load=load_ivfpq,
+        add=append_ivfpq,
+        search=lambda q, index, k, s: knn_ivfpq(
+            q, *index, k, nprobe=_nprobe(s), space=s.space, refine_base=s.refine_base,
+            refine_factor=int(s.params.get("refine_factor", "4")), id_filter=s.id_filter,
+        ),
+    ),
+    "ivfsq": _Tier(
+        build=lambda data, d, p: build_ivfsq(data, nlist=_nlist(p, data), out_dir=d),
+        load=load_ivfsq,
+        add=append_ivfsq,
+        search=lambda q, index, k, s: knn_ivfsq(
+            q, *index, k, nprobe=_nprobe(s), space=s.space,
+            refine_base=s.refine_base if s.params.get("refine_factor") else None,
+            refine_factor=int(s.params.get("refine_factor", "4")), id_filter=s.id_filter,
+        ),
+    ),
+    "binq": _Tier(
+        build=lambda data, d, p: build_binq(data, out_dir=d),
+        load=load_binq,
+        add=append_binq,
+        search=lambda q, index, k, s: knn_binq(
+            q, *index, k, refine_base=s.refine_base,
+            refine_factor=int(s.params.get("refine_factor", "8")), space=s.space,
+            id_filter=s.id_filter,
+        ),
+    ),
+}
+
+
+def _tier(index_type: str) -> _Tier:
+    try:
+        return _TIERS[index_type]
+    except KeyError:
+        raise errors.ErrInvalidParams(f"unknown index type {index_type!r}") from None
+
+
 def build_index(catalog: Catalog, name: str) -> int:
     """Build the collection's index tables and bump index_version.
-    Returns the new version. Flat needs no derived table (the collection
-    IS the index, flat.go:14-20); hnsw tier uses IVF tables with an
-    nprobe preset derived from efsearch."""
+    Returns the new version."""
     coll = catalog.get_collection(name)
+    tier = _tier(coll.index_type)
     data = catalog.read_documents(name)
     version = coll.index_version + 1
-    out_dir = catalog.index_path(name, version)
-    if coll.index_type in ("ivf_flat", "hnsw"):
-        nlist = _resolve_nlist(coll.params.get("nlist", "100"), data.count())
-        build_ivf(data, nlist=nlist, out_dir=out_dir)
-    elif coll.index_type == "ivfpq":
-        nlist = _resolve_nlist(coll.params.get("nlist", "100"), data.count())
-        build_ivfpq(data, nlist=nlist, m=int(coll.params.get("m", "8")), out_dir=out_dir)
-    elif coll.index_type == "ivfsq":
-        from oasisdb_spark.index.ivfsq import build_ivfsq
-
-        nlist = _resolve_nlist(coll.params.get("nlist", "100"), data.count())
-        build_ivfsq(data, nlist=nlist, out_dir=out_dir)
-    elif coll.index_type == "binq":
-        from oasisdb_spark.index.binq import build_binq
-
-        build_binq(data, out_dir=out_dir)
-    elif coll.index_type == "flat":
-        os.makedirs(out_dir, exist_ok=True)
+    tier.build(data, catalog.index_path(name, version), coll.params)
     catalog.bump_index_version(name)
     # snapshot GC (reference deletes superseded snapshots after save,
     # index_manager.go:387-438): keep the new version plus its
     # predecessor for in-flight readers pinned to the old version;
     # everything older is unreachable (searches always resolve the
     # catalog's current version) and is removed.
-    import shutil
-
     for v in range(1, version - 1):
         shutil.rmtree(catalog.index_path(name, v), ignore_errors=True)
     return version
@@ -92,8 +175,6 @@ def _resolve_nlist(param: str, n_rows: int) -> int:
     for per-query candidate volume to stay flat). Always clamped to
     [1, n_rows]; the explicit-int path preserves the reference's
     fixed-nlist behavior (const.go:26-30)."""
-    import math
-
     if str(param).lower() == "auto":
         nlist = int(math.sqrt(max(n_rows, 1)))
     else:
@@ -114,43 +195,15 @@ def add_to_index(catalog: Catalog, name: str, docs: DataFrame) -> None:
     index); unbuilt collections need nothing (searches scan current
     data)."""
     coll = catalog.get_collection(name)
-    if coll.index_version == 0 or coll.index_type == "flat":
+    tier = _tier(coll.index_type)
+    if coll.index_version == 0 or tier.add is None:
         return
     d = catalog.index_path(name, coll.index_version)
-    lists_dir = os.path.join(d, "codes" if coll.index_type == "binq" else "lists")
     # genuinely-new ids only: an id already in the lists keeps its built
     # vector until the next rebuild (documented upsert-staleness
     # semantics) — appending it again would duplicate it in the index
-    existing = catalog.spark.read.parquet(lists_dir).select("id")
-    docs = docs.join(existing, on="id", how="left_anti")
-    if coll.index_type in ("ivf_flat", "hnsw"):
-        from oasisdb_spark.index.ivf import add_to_ivf
-
-        cent = catalog.spark.read.parquet(os.path.join(d, "centroids"))
-        add_to_ivf(docs, cent, lists_dir)
-    elif coll.index_type == "ivfpq":
-        from oasisdb_spark.index.ivfpq import add_to_ivfpq
-
-        cents = np.load(os.path.join(d, "model", "centroids.npy"))
-        books = np.load(os.path.join(d, "model", "codebooks.npy"))
-        add_to_ivfpq(docs, cents, books, lists_dir)
-    elif coll.index_type == "ivfsq":
-        from oasisdb_spark.index.ivfsq import encode_sq
-
-        cents = np.load(os.path.join(d, "model", "centroids.npy"))
-        vmin = np.load(os.path.join(d, "model", "vmin.npy"))
-        vmax = np.load(os.path.join(d, "model", "vmax.npy"))
-        encoded = encode_sq(
-            docs.select(F.col("id"), F.col("vector")), cents, vmin, vmax
-        )
-        encoded.repartition("cluster_id").write.mode("append").partitionBy("cluster_id").parquet(lists_dir)
-    elif coll.index_type == "binq":
-        from oasisdb_spark.index.binq import encode_binq
-
-        means = np.load(os.path.join(d, "model", "means.npy"))
-        encode_binq(docs.select("id", "vector"), means).write.mode("append").parquet(lists_dir)
-    else:
-        raise errors.ErrInvalidParams(f"unknown index type {coll.index_type!r}")
+    existing = tier.load(catalog.spark, d)[-1].select("id")
+    tier.add(docs.join(existing, on="id", how="left_anti"), d)
 
 
 def _without_tombstones(catalog: Catalog, name: str, lists: DataFrame) -> DataFrame:
@@ -161,22 +214,6 @@ def _without_tombstones(catalog: Catalog, name: str, lists: DataFrame) -> DataFr
     if ts is None:
         return lists
     return lists.join(F.broadcast(ts.select("id")), on="id", how="left_anti")
-
-
-def _load_ivf(catalog: Catalog, name: str, version: int):
-    d = catalog.index_path(name, version)
-    cent = catalog.spark.read.parquet(os.path.join(d, "centroids"))
-    lists = catalog.spark.read.parquet(os.path.join(d, "lists"))
-    return cent, lists
-
-
-def _nprobe_for(coll) -> int:
-    if coll.index_type == "hnsw":
-        # efsearch⇒nprobe mapping: scan roughly efsearch/ef_default
-        # fraction of lists, floor 1 (SURVEY.md §7 phase 3.5)
-        ef = int(coll.params.get("efsearch", "10"))
-        return max(1, ef // 2)
-    return int(coll.params.get("nprobe", "10"))
 
 
 def search_vectors(
@@ -192,9 +229,9 @@ def search_vectors(
     search_documents' pre-filter pushdown).
     """
     coll = catalog.get_collection(name)
+    tier = _tier(coll.index_type)
     data = candidates if candidates is not None else catalog.read_documents(name)
-    brute_only = coll.index_version == 0 or coll.index_type == "flat"
-    if brute_only or (candidates is not None and coll.space == "hamming"):
+    if coll.index_version == 0 or tier.search is None or (candidates is not None and coll.space == "hamming"):
         # no built index (search-before-build sees current data — strictly
         # better than the reference's partial-data race, SURVEY.md §4) →
         # exact scan; hamming keeps the brute path under filters too (its
@@ -203,9 +240,7 @@ def search_vectors(
         # materialization — the only exact strategy that survives large
         # collections; see RECALL.md): GEMM for l2/ip/cos, XOR-popcount
         # over packed bits for hamming.
-        from oasisdb_spark.pipeline.ann import knn_brute_batched
-
-        return knn_brute_batched(queries, data, k, space=coll.space)
+        return ann.knn_brute_batched(queries, data, k, space=coll.space)
     # Filtered ANN: a metadata pre-filter no longer forfeits the index —
     # the filtered id set semi-joins the candidates AFTER probe pruning
     # (id_filter in knn_ivf/knn_ivfsq/knn_ivfpq), so the filter costs
@@ -224,58 +259,9 @@ def search_vectors(
         n_total = catalog.read_documents(name).count()
         if n_filtered > 0:
             nprobe_boost = max(1, math.ceil(n_total / n_filtered))
-    if coll.index_type in ("ivf_flat", "hnsw"):
-        cent, lists = _load_ivf(catalog, name, coll.index_version)
-        lists = _without_tombstones(catalog, name, lists)
-        nprobe = _nprobe_for(coll) * nprobe_boost  # knn_ivf caps at nlist
-        return knn_ivf(
-            queries, cent, lists, k, nprobe=nprobe, space=coll.space,
-            id_filter=id_filter,
-        )
-    if coll.index_type == "ivfsq":
-        from oasisdb_spark.index.ivfsq import knn_ivfsq
-
-        d = catalog.index_path(name, coll.index_version)
-        cents = np.load(os.path.join(d, "model", "centroids.npy"))
-        vmin = np.load(os.path.join(d, "model", "vmin.npy"))
-        vmax = np.load(os.path.join(d, "model", "vmax.npy"))
-        lists = _without_tombstones(
-            catalog, name, catalog.spark.read.parquet(os.path.join(d, "lists"))
-        )
-        return knn_ivfsq(
-            queries, cents, vmin, vmax, lists, k,
-            nprobe=_nprobe_for(coll) * nprobe_boost, space=coll.space,
-            refine_base=data if coll.params.get("refine_factor") else None,
-            refine_factor=int(coll.params.get("refine_factor", "4")),
-            id_filter=id_filter,
-        )
-    if coll.index_type == "binq":
-        from oasisdb_spark.index.binq import knn_binq
-
-        d = catalog.index_path(name, coll.index_version)
-        means = np.load(os.path.join(d, "model", "means.npy"))
-        codes = _without_tombstones(
-            catalog, name, catalog.spark.read.parquet(os.path.join(d, "codes"))
-        )
-        return knn_binq(
-            queries, means, codes, k, refine_base=data,
-            refine_factor=int(coll.params.get("refine_factor", "8")),
-            space=coll.space, id_filter=id_filter,
-        )
-    if coll.index_type == "ivfpq":
-        d = catalog.index_path(name, coll.index_version)
-        cents = np.load(os.path.join(d, "model", "centroids.npy"))
-        books = np.load(os.path.join(d, "model", "codebooks.npy"))
-        lists = _without_tombstones(
-            catalog, name, catalog.spark.read.parquet(os.path.join(d, "lists"))
-        )
-        return knn_ivfpq(
-            queries, cents, books, lists, k,
-            nprobe=_nprobe_for(coll) * nprobe_boost, space=coll.space, refine_base=data,
-            refine_factor=int(coll.params.get("refine_factor", "4")),
-            id_filter=id_filter,
-        )
-    raise errors.ErrInvalidParams(f"unknown index type {coll.index_type!r}")
+    *model, lists = tier.load(catalog.spark, catalog.index_path(name, coll.index_version))
+    index = (*model, _without_tombstones(catalog, name, lists))
+    return tier.search(queries, index, k, _Search(coll.params, coll.space, data, id_filter, nprobe_boost))
 
 
 def cached_search_vectors(

@@ -26,14 +26,26 @@ CHECKS: list[tuple[str, str, list[str]]] = []
 
 
 def plan_of(df) -> str:
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # a frame is explained then dropped here — release the entry's
-    # tracked checkpoint blocks so ~100 checks in one session don't
-    # accumulate dead generations (ckpt lifecycle, r13 guide §5)
-    from oasisdb_spark.ckpt import release_tracked
+    return df._jdf.queryExecution().executedPlan().toString()
 
-    release_tracked()
-    return plan
+
+class Failures:
+    """Failed-check count. Every check ends by adding its result here,
+    once all of that check's frames are done, so this is also where the
+    check's tracked checkpoint blocks are released: ~100 checks in one
+    session must not accumulate dead generations (ckpt lifecycle, r13
+    guide §5), and no frame may lose its blocks while its check still
+    runs it."""
+
+    def __init__(self) -> None:
+        self.n = 0
+
+    def __iadd__(self, failed) -> "Failures":
+        from oasisdb_spark.ckpt import release_tracked
+
+        release_tracked()
+        self.n += int(failed)
+        return self
 
 
 def audit(name: str, df, must_contain: list[str]) -> bool:
@@ -51,7 +63,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as m
 
-    failures = 0
+    failures = Failures()
 
     # 1. flat knn: broadcast the query side; base table is streamed, not shuffled
     failures += not audit(
@@ -1221,9 +1233,9 @@ def main() -> None:
         print(f"== {entry} composes on the memoized '{memo_kind}' artifact: {'OK' if ok else 'FAIL'}")
         failures += not ok
 
-    print(f"\n{'ALL PLANS OK' if not failures else f'{failures} PLAN CHECKS FAILED'}")
+    print(f"\n{'ALL PLANS OK' if not failures.n else f'{failures.n} PLAN CHECKS FAILED'}")
     spark.stop()
-    sys.exit(1 if failures else 0)
+    sys.exit(1 if failures.n else 0)
 
 
 if __name__ == "__main__":

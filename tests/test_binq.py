@@ -139,3 +139,26 @@ def test_binq_collection_end_to_end(spark, tmp_path, embeddings):
     cat.delete_document("bq", "0")
     hits = [r["id"] for r in search_vectors(cat, "bq", q, k=5).collect()]
     assert "0" not in hits
+
+
+def test_hamming_ties_keep_id_order(spark):
+    """Without refine, results follow the (hamming, id) total order even
+    when many rows tie at the k-th distance: ±1 vectors in 8-d have only
+    nine hamming values, so every partition holds boundary ties."""
+    rng = np.random.default_rng(7)
+    X = rng.choice([-1.0, 1.0], size=(400, 8))
+    base = spark.createDataFrame(
+        [(i, [float(v) for v in x]) for i, x in enumerate(X)], "id BIGINT, vector ARRAY<FLOAT>"
+    ).repartition(4)
+    Q = X[:6]
+    queries = spark.createDataFrame(
+        [(j, [float(v) for v in q]) for j, q in enumerate(Q)], "query_id INT, query_vec ARRAY<FLOAT>"
+    )
+    got = knn_binq(queries, np.zeros(8, dtype=np.float32), encode_binq(base, np.zeros(8)), k=5)
+    ids = np.arange(len(X))
+    for j, q in enumerate(Q):
+        ham = (X != q).sum(axis=1)
+        want = list(ids[np.lexsort((ids, ham))][:5])
+        rows = sorted(got.filter(F.col("query_id") == j).collect(), key=lambda r: r["rank"])
+        assert [r["id"] for r in rows] == want, j
+        assert [r["distance"] for r in rows] == [float(h) for h in np.sort(ham)[:5]]

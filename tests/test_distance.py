@@ -68,45 +68,3 @@ def test_l2_matches_python_float64(spark, embeddings):
     df = spark.createDataFrame([(a, b)], "a ARRAY<FLOAT>, b ARRAY<FLOAT>")
     got = df.select(l2_squared("a", "b").alias("d")).first()["d"]
     assert math.isclose(got, expected, rel_tol=1e-12)
-
-
-def test_distance_udf_matches_expr_all_spaces(spark):
-    """The Arrow-batched production kernel must agree with the
-    oracle-exact expression kernel to float tolerance in every space."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from oasisdb_spark.functions.distance import distance_expr, distance_udf
-
-    rows = [
-        ([1.0, 2.0, 3.0], [4.0, 6.0, 3.0]),
-        ([0.0, 0.0, 0.0], [1.0, 1.0, 1.0]),   # zero-norm guard (cos)
-        ([1.5, -2.5, 0.5], [1.5, -2.5, 0.5]),  # identical
-        ([-1.0, 0.25, 8.0], [2.0, 0.25, -8.0]),
-    ]
-    df = spark.createDataFrame(rows, "a ARRAY<FLOAT>, b ARRAY<FLOAT>")
-    for space in ("l2", "ip", "cos", "hamming"):
-        got = df.select(
-            distance_expr(space, "a", "b").alias("e"),
-            distance_udf(space)("a", "b").alias("u"),
-        ).collect()
-        for r in got:
-            assert math.isclose(r["e"], r["u"], rel_tol=1e-9, abs_tol=1e-12), (space, r)
-
-
-def test_knn_flat_pandas_kernel_same_topk(spark):
-    from pyspark.sql import functions as F
-
-    from oasisdb_spark.index.flat import knn_flat
-    from oasisdb_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vector"))
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    a = {(r["query_id"], r["rank"]): r["id"] for r in knn_flat(qs, base, 10).collect()}
-    b = {(r["query_id"], r["rank"]): r["id"]
-         for r in knn_flat(qs, base, 10, kernel="pandas").collect()}
-    assert a == b

@@ -2,10 +2,12 @@
 search_vectors / search_documents (with the WORKING metadata filter the
 reference only declares — document.go:171, design.md:58-59)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from oasisdb_spark.catalog import Catalog
+from oasisdb_spark.index.flat import knn_flat
 from oasisdb_spark.search import build_index, search_documents, search_vectors
 
 
@@ -233,3 +235,96 @@ def test_adaptive_nprobe_recovers_filtered_recall(spark, loaded, embeddings):
     assert {(r["query_id"], r["id"], r["rank"]) for r in res} == {
         (r["query_id"], r["id"], r["rank"]) for r in ref
     }
+
+
+@pytest.mark.parametrize("space", ["l2", "ip"])
+def test_flat_tier_ties_follow_distance_id_order(spark, tmp_path, space):
+    """search_vectors on a flat collection keeps knn_flat's (distance,
+    id) contract when duplicate vectors tie at the k-th distance.
+    Small-integer coordinates keep the float32 GEMM exact."""
+    rng = np.random.default_rng(3)
+    distinct = rng.integers(-3, 4, size=(40, 8)).astype(float)
+    X = np.tile(distinct, (10, 1))
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat.create_collection("t", dimension=8, index_type="flat", space=space)
+    cat.upsert_documents("t", spark.createDataFrame(
+        [(str(i), [float(v) for v in x], {}) for i, x in enumerate(X)],
+        "id STRING, vector ARRAY<FLOAT>, parameters MAP<STRING,STRING>",
+    ).repartition(4))
+    q = spark.createDataFrame(
+        [(j, [float(v) for v in rng.integers(-3, 4, size=8)]) for j in range(6)],
+        "query_id INT, query_vec ARRAY<FLOAT>",
+    )
+    base = cat.read_documents("t").select("id", "vector")
+
+    def ranked(df):
+        return sorted((r["query_id"], r["rank"], r["id"]) for r in df.collect())
+
+    assert ranked(search_vectors(cat, "t", q, k=5)) == ranked(knn_flat(q, base, k=5, space=space))
+
+
+def test_tier_table_covers_every_index_type():
+    from oasisdb_spark import search
+    from oasisdb_spark.catalog import INDEX_TYPES
+
+    assert set(search._TIERS) == set(INDEX_TYPES)
+
+
+def test_unknown_index_type_raises_everywhere(spark, loaded, embeddings, monkeypatch):
+    import dataclasses
+
+    from oasisdb_spark.errors import ErrInvalidParams
+    from oasisdb_spark.search import add_to_index
+
+    real = loaded.get_collection("emb")
+    monkeypatch.setattr(
+        loaded, "get_collection", lambda name: dataclasses.replace(real, index_type="bogus")
+    )
+    docs = loaded.read_documents("emb").limit(1)
+    for call in (
+        lambda: build_index(loaded, "emb"),
+        lambda: add_to_index(loaded, "emb", docs),
+        lambda: search_vectors(loaded, "emb", _q(spark, embeddings), k=5),
+    ):
+        with pytest.raises(ErrInvalidParams, match="bogus"):
+            call()
+    monkeypatch.undo()
+    assert loaded.get_collection("emb").index_version == 0  # no silent bump
+
+
+def test_benchmark_patch_points_see_every_call(spark, tmp_path, embeddings, monkeypatch):
+    """perfbench/tracing.py times layers by replacing these module
+    attributes; searches and builds must go through them at call time."""
+    from oasisdb_spark import search
+    from oasisdb_spark.index import ivf, ivfpq
+    from oasisdb_spark.pipeline import ann
+
+    calls = {}
+
+    def count(module, attr):
+        fn = getattr(module, attr)
+        key = f"{module.__name__}.{attr}"
+        calls[key] = 0
+
+        def wrapper(*a, **kw):
+            calls[key] += 1
+            return fn(*a, **kw)
+
+        monkeypatch.setattr(module, attr, wrapper)
+
+    for attr in ("knn_ivf", "build_ivf", "knn_ivfpq", "build_ivfpq"):
+        count(search, attr)
+    count(ivf, "kmeans_fit")
+    count(ivfpq, "kmeans_fit")
+    count(ann, "knn_brute_batched")
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    docs = embeddings.select(
+        F.col("vec_id").cast("string").alias("id"), F.col("embedding").alias("vector")
+    )
+    for name in ("hnsw", "ivfpq"):
+        cat.create_collection(name, dimension=64, index_type=name, params={"nlist": 4, "m": 8})
+        cat.upsert_documents(name, docs)
+        search_vectors(cat, name, _q(spark, embeddings), k=5).collect()
+        build_index(cat, name)
+        search_vectors(cat, name, _q(spark, embeddings), k=5).collect()
+    assert all(calls.values()), calls
