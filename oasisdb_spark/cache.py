@@ -8,10 +8,13 @@ reference's cache is UNSAFE: only deletes invalidate (handlers.go:
 "do not replicate the bug").
 
 This implementation keys every entry on the collection's
-``index_version`` (the catalog's monotone build counter), so ANY
-rebuild — which is how upserts become searchable — invalidates all
-prior entries for that collection implicitly. Explicit prefix
-invalidation (the reference's delete-path behavior) is also provided.
+``index_version`` (the catalog's monotone build counter), so a rebuild
+invalidates all prior entries for that collection implicitly. Writes
+that keep the version — upserts (add_to_index appends to the built
+lists), document deletes, set_params and collection deletes — drop the
+collection's entries explicitly through ``invalidate_prefix``
+(OasisClient does this on each such call), so a search after an
+acknowledged write never returns a pre-write result.
 
 Scale note: a driver-side result cache only pays off for repeated
 point queries (the reference's REST serving pattern). Batch plans

@@ -10,19 +10,24 @@ Architecture: the reference splits a document into an LSM KV record
 (metadata) and an in-memory vector index entry, coordinated by WAL +
 snapshot machinery (~1.5k LoC). On Spark all of that collapses into
 immutable Parquet tables (SURVEY.md §1.4): a collection is a directory
-of row-groups, the catalog is a small parquet table, and upsert/delete
-are read-merge-rewrite into a fresh GENERATION directory behind an
-atomically-flipped pointer file (lock-free snapshot isolation for
-readers — see _atomic_overwrite). Deletes are
-CORRECT here — the reference's IVF delete is a no-op TODO
+of row-groups, and upsert/delete are read-merge-rewrite into a fresh
+GENERATION directory behind an atomically-flipped pointer file
+(lock-free snapshot isolation for readers — see _atomic_overwrite).
+Deletes are CORRECT here — the reference's IVF delete is a no-op TODO
 (ivf.go:170-173) and HNSW only tombstones (hnswalg.h:925).
+
+The catalog is one JSON file, name → Collection fields (the reference's
+JSON record under ``collection:{name}``, collection.go:50,80-87). Every
+call reads it afresh — no Spark job, and two Catalog objects on one
+warehouse stay coherent — and every write replaces it whole with the
+same temp-file + os.replace step as the generation pointers, so an
+unlocked reader never sees a torn catalog.
 
 Scale notes: per-collection data lives partitioned; rewrite-on-upsert is
 the Parquet-only equivalent of Delta MERGE (documented trade-off — with
 Delta/Iceberg available the write path becomes MERGE INTO and is
 incremental). Point lookups (get_document) push an id predicate to the
-parquet scan (min/max pruning). The catalog table is tiny and always
-broadcast.
+parquet scan (min/max pruning).
 """
 
 from __future__ import annotations
@@ -32,7 +37,7 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -57,19 +62,6 @@ DEFAULT_PARAMS = {
     "flat": {},
 }
 
-_CATALOG_SCHEMA = T.StructType(
-    [
-        T.StructField("name", T.StringType(), False),
-        T.StructField("dimension", T.IntegerType(), False),
-        T.StructField("index_type", T.StringType(), False),
-        T.StructField("space", T.StringType(), False),
-        T.StructField("params", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("index_version", T.LongType(), False),
-        T.StructField("created_at", T.LongType(), False),
-    ]
-)
-
 _DOC_SCHEMA_FIELDS = [
     T.StructField("id", T.StringType(), False),
     T.StructField("vector", T.ArrayType(T.FloatType()), True),
@@ -88,24 +80,45 @@ class Collection:
     index_version: int = 0
 
 
+def _replace_file(path: str, text: str) -> None:
+    """Atomically replace ``path`` with ``text``: write a temp file in the
+    same directory, then os.replace it over the target (atomic on POSIX;
+    on S3/HDFS the equivalent is a conditional PUT). A failure leaves the
+    old file untouched."""
+    tmp = f"{path}.tmp.{uuid.uuid4().hex[:6]}"
+    try:
+        with open(tmp, "w") as fh:
+            fh.write(text)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
 class Catalog:
     """All collection state under one warehouse directory.
 
     Layout:
-      warehouse/_collections/            catalog parquet
-      warehouse/collections/{name}/data/ document rows
-      warehouse/collections/{name}/index/v{N}/  index tables (see index/)
+      warehouse/catalog.json                     name → Collection fields
+      warehouse/collections/{name}/data/         document rows (g* generations + _current)
+      warehouse/collections/{name}/tombstones/   ids deleted since the last build (same layout)
+      warehouse/collections/{name}/index/v{N}/   index tables (see index/)
     """
 
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.warehouse = warehouse
+        self._catalog_file = os.path.join(warehouse, "catalog.json")
+        if os.path.isdir(os.path.join(warehouse, "_collections")) and not os.path.exists(
+            self._catalog_file
+        ):
+            raise errors.OasisError(
+                f"{warehouse} has an old Parquet catalog (_collections/) and no catalog.json; "
+                "convert it with the recipe in MIGRATING.md §7"
+            )
         os.makedirs(warehouse, exist_ok=True)
 
     # ---------- paths ----------
-    def _catalog_path(self) -> str:
-        return os.path.join(self.warehouse, "_collections")
-
     def _coll_dir(self, name: str) -> str:
         return os.path.join(self.warehouse, "collections", name)
 
@@ -119,14 +132,22 @@ class Catalog:
         return os.path.join(self._coll_dir(name), "tombstones")
 
     # ---------- catalog io ----------
-    def _read_catalog(self) -> DataFrame:
-        p = self._resolve(self._catalog_path())
-        if p is None:
-            return self.spark.createDataFrame([], _CATALOG_SCHEMA)
-        return self.spark.read.parquet(p)
+    def _records(self) -> dict[str, dict]:
+        """name → asdict(Collection); {} before the first create."""
+        try:
+            with open(self._catalog_file) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return {}
 
-    def _write_catalog(self, df: DataFrame) -> None:
-        self._atomic_overwrite(df.coalesce(1), self._catalog_path())
+    def _save(self, records: dict[str, dict]) -> None:
+        _replace_file(self._catalog_file, json.dumps(records, indent=1, sort_keys=True))
+
+    @staticmethod
+    def _record(records: dict[str, dict], name: str) -> dict:
+        if name not in records:
+            raise errors.ErrCollectionNotFound(f"collection {name!r} not found")
+        return records[name]
 
     # Generation-versioned overwrite. The round-2 implementation renamed
     # the live directory aside and deleted it after the swap; a reader
@@ -134,23 +155,22 @@ class Catalog:
     # hit FileNotFound — caught by scripts/stress_test.py on its first
     # run (the reference's compact_test.py failure class). Generations
     # make every scan target immutable: a write lands in a fresh g* dir
-    # and flips a one-line pointer file with os.replace (atomic on POSIX
-    # and object-store-friendly: on S3/HDFS the pointer is a tiny
-    # conditional PUT). Nothing a reader can hold is ever renamed;
-    # superseded generations are GC'd keep-2 + age-gated, bounding disk
-    # at ~2-3× live data between writes (the same predecessor-retention
-    # policy as the index-version GC in search.build_index).
+    # and flips a one-line pointer file with _replace_file. Nothing a
+    # reader can hold is ever renamed; superseded generations are GC'd
+    # keep-2 + age-gated, bounding disk at ~2-3× live data between
+    # writes (the same predecessor-retention policy as the index-version
+    # GC in search.build_index).
     _GC_KEEP = 2              # generations always retained (current + predecessor)
     _GC_MIN_AGE_S = 120.0     # older generations must also be this stale
 
     def _resolve(self, path: str) -> str | None:
-        """Current generation dir for a versioned table root; the root
-        itself for a legacy unversioned layout; None if absent."""
-        ptr = os.path.join(path, "_current")
-        if os.path.exists(ptr):
-            with open(ptr) as fh:
+        """Current generation dir of a versioned table root; None when it
+        has none (never written, or tombstones cleared by a rebuild)."""
+        try:
+            with open(os.path.join(path, "_current")) as fh:
                 return os.path.join(path, fh.read().strip())
-        return path if os.path.exists(path) else None
+        except FileNotFoundError:
+            return None
 
     def _atomic_overwrite(self, df: DataFrame, path: str) -> None:
         """Write a new immutable generation then atomically flip the
@@ -160,37 +180,25 @@ class Catalog:
         prev = self._resolve(path)
         gen = f"g{time.time_ns():020d}_{uuid.uuid4().hex[:6]}"
         df.write.mode("overwrite").parquet(os.path.join(path, gen))
-        tmp_ptr = os.path.join(path, f"_current.tmp.{uuid.uuid4().hex[:6]}")
-        with open(tmp_ptr, "w") as fh:
-            fh.write(gen)
-        os.replace(tmp_ptr, os.path.join(path, "_current"))
+        _replace_file(os.path.join(path, "_current"), gen)
         # stamp the SUPERSEDED target's mtime = flip time, so the GC age
         # gate measures time-since-supersession, not time-since-creation.
         # Gating on creation mtime left a hole: a table idle >120 s then
         # written twice quickly would GC the old generation with zero
         # grace for a reader that resolved it moments earlier (the
-        # FileNotFound race the generations exist to prevent). Stamping
-        # legacy root part files at the upgrade flip also lets the GC
-        # retire them later (they are superseded data like any g*).
+        # FileNotFound race the generations exist to prevent).
         if prev is not None:
             try:
-                if os.path.basename(prev).startswith("g"):
-                    os.utime(prev)
-                else:  # legacy unversioned root upgraded in place
-                    for entry in os.listdir(prev):
-                        full = os.path.join(prev, entry)
-                        if os.path.isfile(full) and not entry.startswith(("_current", "g")):
-                            os.utime(full)
+                os.utime(prev)
             except OSError:
                 pass  # concurrent GC already removed it
         self._gc_generations(path)
 
     def _gc_generations(self, path: str) -> None:
-        """Remove superseded scan targets once they are both (a) older
+        """Remove superseded generations once they are both (a) older
         than the keep-2 window and (b) stale for _GC_MIN_AGE_S since
         SUPERSESSION (mtime stamped at pointer flip) — long enough for
-        any in-flight reader's job to finish. Covers g* generations and
-        root-level parquet files left by a legacy-layout upgrade."""
+        any in-flight reader's job to finish."""
         gens = sorted(d for d in os.listdir(path) if d.startswith("g"))
         now = time.time()
         for d in gens[: -self._GC_KEEP] if len(gens) > self._GC_KEEP else []:
@@ -200,18 +208,6 @@ class Catalog:
                     shutil.rmtree(full, ignore_errors=True)
             except OSError:
                 pass  # concurrent GC — already gone
-        if gens and os.path.exists(os.path.join(path, "_current")):
-            # versioned layout: any plain files at the root are legacy
-            # upgrade leftovers, unreachable since the first flip
-            for entry in os.listdir(path):
-                full = os.path.join(path, entry)
-                if not os.path.isfile(full) or entry.startswith("_current"):
-                    continue
-                try:
-                    if now - os.path.getmtime(full) >= self._GC_MIN_AGE_S:
-                        os.remove(full)
-                except OSError:
-                    pass
 
     # ---------- collection CRUD (S2-S5) ----------
     def create_collection(
@@ -247,41 +243,33 @@ class Catalog:
             raise errors.ErrInvalidParams(
                 f"{index_type} does not support the hamming space; use flat or ivf_flat"
             )
-        cat = self._read_catalog()
-        if cat.filter(F.col("name") == name).limit(1).count() > 0:
+        records = self._records()
+        if name in records:
             raise errors.ErrCollectionExists(f"collection {name!r} already exists")
-        row = self.spark.createDataFrame(
-            [(name, dimension, index_type, space, merged, metadata or {}, 0, int(time.time()))],
-            _CATALOG_SCHEMA,
-        )
-        self._write_catalog(cat.unionByName(row))
+        coll = Collection(name, dimension, index_type, space, merged, dict(metadata or {}), 0)
+        records[name] = asdict(coll)
+        self._save(records)
         os.makedirs(self._coll_dir(name), exist_ok=True)
-        return Collection(name, dimension, index_type, space, merged, metadata or {}, 0)
+        return coll
 
     def get_collection(self, name: str) -> Collection:
-        rows = self._read_catalog().filter(F.col("name") == name).collect()
-        if not rows:
-            raise errors.ErrCollectionNotFound(f"collection {name!r} not found")
-        r = rows[0]
-        return Collection(
-            r["name"], r["dimension"], r["index_type"], r["space"],
-            dict(r["params"] or {}), dict(r["metadata"] or {}), r["index_version"],
-        )
+        return Collection(**self._record(self._records(), name))
 
     def list_collections(self) -> list[str]:
-        return [r["name"] for r in self._read_catalog().select("name").orderBy("name").collect()]
+        return sorted(self._records())
 
     def delete_collection(self, name: str) -> None:
-        cat = self._read_catalog()
-        if cat.filter(F.col("name") == name).limit(1).count() == 0:
-            raise errors.ErrCollectionNotFound(f"collection {name!r} not found")
-        self._write_catalog(cat.filter(F.col("name") != name))
+        records = self._records()
+        self._record(records, name)
+        del records[name]
+        self._save(records)
         shutil.rmtree(self._coll_dir(name), ignore_errors=True)
 
     def set_params(self, name: str, params: dict) -> None:
         """S11 set_params — runtime knobs (efsearch/nprobe). Stored in the
         catalog; the search planner reads them (handlers.go:323-354)."""
-        coll = self.get_collection(name)
+        records = self._records()
+        rec = self._record(records, name)
         valid = {"efsearch", "nprobe", "M", "efConstruction", "nlist", "m", "nbits", "maxElements", "refine_factor", "adaptive_nprobe"}
         for k, v in params.items():
             if k not in valid:
@@ -299,38 +287,28 @@ class Catalog:
                 if isinstance(e, errors.ErrInvalidParams):
                     raise
                 raise errors.ErrInvalidParams(f"param {k} must be an integer, got {v!r}")
-        merged = dict(coll.params)
-        merged.update({k: str(v) for k, v in params.items()})
-        self._update_catalog_row(name, params=merged)
-
-    def _update_catalog_row(self, name: str, **updates) -> None:
-        cat = self._read_catalog()
-        others = cat.filter(F.col("name") != name)
-        row = cat.filter(F.col("name") == name).collect()[0].asDict()
-        row.update(updates)
-        updated = self.spark.createDataFrame(
-            [tuple(row[f.name] for f in _CATALOG_SCHEMA.fields)], _CATALOG_SCHEMA
-        )
-        self._write_catalog(others.unionByName(updated))
+        rec["params"].update({k: str(v) for k, v in params.items()})
+        self._save(records)
 
     def bump_index_version(self, name: str) -> int:
-        coll = self.get_collection(name)
-        new_v = coll.index_version + 1
-        self._update_catalog_row(name, index_version=new_v)
+        records = self._records()
+        rec = self._record(records, name)
+        rec["index_version"] += 1
+        self._save(records)
         # a fresh build reads the live doc store, so deletes accumulated
         # against the previous version are baked in — clear the
-        # tombstones by flipping to an EMPTY generation. Never rmtree:
-        # an in-flight search holds resolved file paths into the
-        # superseded generation (FileScanRDD), and deleting it under the
-        # reader raced to FAILED_READ_FILE.FILE_NOT_EXIST in
-        # scripts/stress_test.py — the same reader-race class the
-        # generation-versioned doc store fixed.
-        if os.path.exists(self.tombstone_path(name)):
-            self._atomic_overwrite(
-                self.spark.createDataFrame([], "id STRING").coalesce(1),
-                self.tombstone_path(name),
-            )
-        return new_v
+        # tombstones by removing their pointer (read_tombstones then
+        # returns None). Never rmtree: an in-flight search holds resolved
+        # file paths into the superseded generation (FileScanRDD), and
+        # deleting it under the reader raced to
+        # FAILED_READ_FILE.FILE_NOT_EXIST in scripts/stress_test.py. The
+        # generation is stamped as superseded and left to the age-gated
+        # GC of the next tombstone write.
+        prev = self._resolve(self.tombstone_path(name))
+        if prev is not None:
+            os.remove(os.path.join(self.tombstone_path(name), "_current"))
+            os.utime(prev)
+        return rec["index_version"]
 
     def read_tombstones(self, name: str) -> DataFrame | None:
         """Ids deleted since the current index version was built (None if
@@ -341,9 +319,9 @@ class Catalog:
         p = self._resolve(self.tombstone_path(name))
         if p is None:
             return None
-        # explicit schema: an empty generation (post-rebuild clear) or a
-        # legacy append layout mid-commit can present zero parquet
-        # footers; schema inference would throw UNABLE_TO_INFER_SCHEMA
+        # explicit schema: a generation written from an empty frame can
+        # hold zero parquet footers; schema inference would throw
+        # UNABLE_TO_INFER_SCHEMA
         return self.spark.read.schema("id STRING").parquet(p)
 
     # ---------- document CRUD (S6-S10) ----------

@@ -14,7 +14,8 @@ swapping the constructor: HTTP server + base_url become a SparkSession
                             builds — document.go:309-327)
 - set_params              → .../documents/setparams (S11)
 - search_vectors          → .../vectors/search (Q1), LRU result cache
-                            in front (Q13) keyed on index_version
+                            in front (Q13) keyed on index_version and
+                            dropped by every write to the collection
 - search_documents        → .../documents/search (Q2) — here the
                             metadata filter WORKS (pre-filter pushdown;
                             the reference ignores it, design.md:58-59)
@@ -116,11 +117,14 @@ class OasisClient:
         (db/document.go:53-92 → index_manager.go:441-470 AddVector); the
         parity here is upsert + incremental add-after-build. Ids already
         in the built index keep their built vector until the next
-        build_index (documented staleness semantics, SURVEY.md §4)."""
+        build_index (documented staleness semantics, SURVEY.md §4).
+        add_to_index keeps index_version, so the collection's cached
+        results are dropped here: the next search sees the write."""
         from oasisdb_spark.search import add_to_index
 
         self.catalog.upsert_documents(collection, docs)
         add_to_index(self.catalog, collection, docs)
+        self.cache.invalidate_prefix(collection)
 
     def get_document(self, collection: str, doc_id: str) -> dict[str, Any]:
         row = self.catalog.get_document(collection, doc_id)
@@ -147,6 +151,7 @@ class OasisClient:
 
     def set_params(self, collection: str, parameters: Mapping[str, Any]) -> None:
         self.catalog.set_params(collection, dict(parameters))
+        self.cache.invalidate_prefix(collection)  # results under the old knobs
 
     # Search ------------------------------------------------------------
     def search_vectors(

@@ -276,8 +276,10 @@ def cached_search_vectors(
     before the index). Returns collected (id, distance, rank) rows.
 
     The cache key includes the collection's index_version, so results
-    can never be stale after an upsert+rebuild — the safety the
-    reference lacks (SURVEY.md Q13). Use plain search_vectors for batch
+    can never be stale after a rebuild; writes that keep the version
+    (upserts, deletes, set_params) must invalidate_prefix the cache, as
+    OasisClient does — the safety the reference lacks (SURVEY.md Q13).
+    Use plain search_vectors for batch
     query DataFrames; caching collected results only makes sense for
     repeated point lookups."""
     coll = catalog.get_collection(name)

@@ -20,15 +20,17 @@ One catalog, one collection, four concurrent actors for WALL_SECS:
 - churner     : catalog-level churn — create a fresh collection, load
                 it, build its index, search it, delete it — racing the
                 long-lived collection's rebuilds through the shared
-                read-merge-rewrite catalog file (the reference's
-                cache-prefix-invalidation path, handlers.go:128-149);
+                catalog.json, rewritten whole by temp file + os.replace
+                (the reference's cache-prefix-invalidation path,
+                handlers.go:128-149);
                 asserts the victim vanishes from list_collections while
                 "c" survives every cycle
 
 Mutators (writer / rebuilder / streamer) serialize on one lock — the
 documented concurrency model (the REST server holds srv._lock across
-mutations; catalog writes are read-merge-rewrite). Readers take no lock:
-the atomic directory swap plus index_version pinning must keep every
+mutations; catalog writes read catalog.json, change it and replace it
+whole). Readers take no lock: the atomic generation-pointer flip, the
+atomic catalog.json replace and index_version pinning must keep every
 unsynchronized read well-formed. That read-side freedom is the property
 under test.
 

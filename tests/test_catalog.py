@@ -1,11 +1,14 @@
 """Collection/document CRUD — mirrors internal/db/collection_test.go,
 document_test.go and the F5 error-path cases in FIXTURES.md."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from oasisdb_spark import errors
 from oasisdb_spark.catalog import Catalog
+from oasisdb_spark.client import OasisClient
 
 
 @pytest.fixture()
@@ -28,6 +31,8 @@ def test_create_get_list_delete(catalog):
     # hnsw default (collection.go:45-47)
     assert catalog.get_collection("c2").index_type == "hnsw"
     assert catalog.list_collections() == ["c1", "c2"]
+    assert catalog.bump_index_version("c2") == 1
+    assert catalog.get_collection("c2").index_version == 1
     catalog.delete_collection("c1")
     assert catalog.list_collections() == ["c2"]
 
@@ -158,3 +163,57 @@ def test_null_vector_and_null_id_rejected_at_ingest(catalog, spark):
     )
     with pytest.raises(errors.ErrInvalidParams, match="id"):
         catalog.upsert_documents("cnull", ni)
+
+
+def test_metadata_calls_run_no_spark_jobs(spark, tmp_path):
+    """Catalog lookups and a result-cache hit are driver-only: the
+    serving path pays no Spark job for metadata."""
+    client = OasisClient(spark, str(tmp_path / "wh"))
+    client.create_collection("c", 4, index_type="ivf_flat")
+    client.batch_upsert_documents(
+        "c", [{"id": str(i), "vector": [float(i), 0.0, 0.0, 0.0]} for i in range(5)]
+    )
+    client.search_vectors("c", [1.0, 0.0, 0.0, 0.0], limit=2)  # fills the cache
+    cat, sc = client.catalog, spark.sparkContext
+    calls = {
+        "get_collection": lambda: cat.get_collection("c"),
+        "list_collections": cat.list_collections,
+        "set_params": lambda: cat.set_params("c", {"nprobe": 3}),
+        "cache_hit": lambda: client.search_vectors("c", [1.0, 0.0, 0.0, 0.0], limit=2),
+    }
+    try:
+        for name, call in calls.items():
+            group = f"metadata-{name}-{tmp_path.name}"
+            sc.setJobGroup(group, name)
+            call()
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert client.cache.hits == 1
+
+
+def test_failed_catalog_write_keeps_previous_catalog(spark, catalog, monkeypatch):
+    catalog.create_collection("keep", dimension=4, index_type="flat")
+    before = catalog.get_collection("keep")
+
+    def fail(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(os, "replace", fail)
+    with pytest.raises(OSError, match="disk full"):
+        catalog.create_collection("lost", dimension=4)
+    monkeypatch.undo()
+    reopened = Catalog(spark, catalog.warehouse)
+    assert reopened.list_collections() == ["keep"]
+    assert reopened.get_collection("keep") == before
+    assert not [f for f in os.listdir(catalog.warehouse) if ".tmp." in f]
+
+
+def test_old_parquet_catalog_is_refused(spark, tmp_path):
+    """A warehouse from before catalog.json holds only _collections/;
+    it must be converted (MIGRATING.md §7), never read as empty."""
+    old = tmp_path / "old"
+    (old / "_collections").mkdir(parents=True)
+    with pytest.raises(errors.OasisError, match="MIGRATING.md"):
+        Catalog(spark, str(old))

@@ -102,3 +102,21 @@ def test_client_upsert_after_build_is_searchable(client):
     client.upsert_document("live", doc_id="99", vector=[99.0, 0.0, 0.0, 0.0])
     res = client.search_vectors("live", vector=[98.5, 0.0, 0.0, 0.0], limit=1)
     assert res["ids"] == ["99"]
+
+
+def test_search_after_write_is_not_served_from_cache(client):
+    """Read-your-writes: an upsert between rebuilds (add_to_index keeps
+    index_version) and a set_params both drop the collection's cached
+    results."""
+    client.create_collection("ryw", 4, parameters={"nlist": "4"})  # hnsw
+    client.build_index("ryw", _docs(40))
+    q = [10.2, 0.0, 0.0, 0.0]
+    assert client.search_vectors("ryw", q, limit=3)["ids"][0] == "10"
+    client.upsert_document("ryw", doc_id="new", vector=q)
+    res = client.search_vectors("ryw", q, limit=3)
+    assert res["ids"][0] == "new" and res["distances"][0] == 0.0
+
+    misses = client.cache.misses
+    client.set_params("ryw", {"efsearch": 8})
+    assert client.search_vectors("ryw", q, limit=3)["ids"][0] == "new"
+    assert client.cache.misses == misses + 1

@@ -141,8 +141,8 @@ def test_indexed_search_excludes_deleted(spark, tmp_path, embeddings):
     hits = [r["id"] for r in search_vectors(cat, "del", q, k=5).collect()]
     assert "7" not in hits and len(hits) == 5
     build_index(cat, "del")
-    # rebuild clears tombstones by flipping to an empty generation (an
-    # absent dir and an empty set are both "no pending deletes")
+    # rebuild clears tombstones by removing their pointer (no pointer
+    # and an empty set are both "no pending deletes")
     ts = cat.read_tombstones("del")
     assert ts is None or ts.count() == 0
     hits = [r["id"] for r in search_vectors(cat, "del", q, k=5).collect()]
