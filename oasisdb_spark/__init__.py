@@ -8,11 +8,12 @@ neighbor search over four index kinds (flat, ivf_flat, ivfpq, hnsw) and
 four distance spaces (l2, ip, cos, hamming). This package reproduces that
 surface as DataFrame plans:
 
-- ``Catalog``          collection CRUD (reference internal/db/collection.go)
-- ``Documents``        document upsert/get/delete (internal/db/document.go)
+- ``catalog.Catalog``  collection CRUD and document upsert/get/delete
+                       (reference internal/db/{collection,document}.go)
 - ``functions.distance``  the distance kernels (internal/index/distance.go)
-- ``index.*``          index strategies: flat / ivf_flat / ivfpq / lsh
-                       (internal/index/{flat,ivf,ivfpq,hnsw}.go)
+- ``index.*``          index strategies: flat / ivf / ivfpq / ivfsq / binq
+                       / lsh (internal/index/{flat,ivf,ivfpq,hnsw}.go;
+                       ivfsq and binq are extension tiers)
 - ``search``           search_vectors / search_documents (internal/server/handlers.go)
 - ``embed``            embedding providers (internal/embedding/)
 - ``client`` / ``server``  the reference SDK surface (client-sdk/Python)

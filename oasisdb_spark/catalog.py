@@ -61,6 +61,8 @@ DEFAULT_PARAMS = {
     "binq": {"refine_factor": "8"},
     "flat": {},
 }
+# The params set_params accepts (handlers.go:323-354).
+PARAM_KEYS = {"efsearch", "nprobe", "M", "efConstruction", "nlist", "m", "nbits", "maxElements", "refine_factor"}
 
 _DOC_SCHEMA_FIELDS = [
     T.StructField("id", T.StringType(), False),
@@ -78,6 +80,34 @@ class Collection:
     params: dict = field(default_factory=dict)
     metadata: dict = field(default_factory=dict)
     index_version: int = 0
+
+
+def _check_params(index_type: str, dimension: int, params: dict) -> None:
+    """Validate a collection's full params, as create_collection stores
+    them and as set_params would leave them: every known key is a
+    positive integer (nlist may be "auto", sqrt(N) sizing resolved at
+    build time), and ivfpq needs dimension % m == 0 with 8-bit codes
+    (ivfpq.go:98-103). Keys outside PARAM_KEYS are not checked: a key a
+    catalog.json already holds, but set_params no longer accepts, is
+    ignored rather than locking the collection's params."""
+    for k in PARAM_KEYS & params.keys():
+        v = params[k]
+        if k == "nlist" and str(v).lower() == "auto":
+            continue
+        try:
+            n = int(v)
+        except (TypeError, ValueError):
+            raise errors.ErrInvalidParams(f"param {k} must be an integer, got {v!r}") from None
+        if n <= 0:
+            raise errors.ErrInvalidParams(f"param {k} must be positive, got {v}")
+    if index_type == "ivfpq":
+        m = int(params.get("m", "8"))
+        if dimension % m != 0:
+            raise errors.ErrInvalidParams(
+                f"ivfpq requires dimension % m == 0, got dim={dimension}, m={m}"
+            )
+        if int(params.get("nbits", "8")) != 8:
+            raise errors.ErrInvalidParams("ivfpq supports nbits=8 only")
 
 
 def _replace_file(path: str, text: str) -> None:
@@ -229,14 +259,7 @@ class Catalog:
             raise errors.ErrInvalidParams(f"unknown space {space!r}")
         merged = dict(DEFAULT_PARAMS.get(index_type, {}))
         merged.update({k: str(v) for k, v in (params or {}).items()})
-        if index_type == "ivfpq":
-            m = int(merged.get("m", "8"))
-            if dimension % m != 0:
-                raise errors.ErrInvalidParams(
-                    f"ivfpq requires dimension % m == 0, got dim={dimension}, m={m}"
-                )
-            if int(merged.get("nbits", "8")) != 8:
-                raise errors.ErrInvalidParams("ivfpq supports nbits=8 only")
+        _check_params(index_type, dimension, merged)
         if index_type in ("ivfpq", "ivfsq", "binq") and space == "hamming":
             # quantized codes are not a binary representation; hamming
             # collections use flat (packed XOR-popcount kernel) or IVF
@@ -270,24 +293,12 @@ class Catalog:
         catalog; the search planner reads them (handlers.go:323-354)."""
         records = self._records()
         rec = self._record(records, name)
-        valid = {"efsearch", "nprobe", "M", "efConstruction", "nlist", "m", "nbits", "maxElements", "refine_factor", "adaptive_nprobe"}
-        for k, v in params.items():
-            if k not in valid:
+        for k in params:
+            if k not in PARAM_KEYS:
                 raise errors.ErrInvalidParams(f"unknown param {k!r}")
-            if k == "nlist" and str(v).lower() == "auto":
-                continue  # sqrt(N) sizing resolved at build time
-            if k == "adaptive_nprobe":
-                if str(v) not in ("0", "1"):
-                    raise errors.ErrInvalidParams(f"adaptive_nprobe must be 0 or 1, got {v!r}")
-                continue
-            try:
-                if int(v) <= 0:
-                    raise errors.ErrInvalidParams(f"param {k} must be positive, got {v}")
-            except (TypeError, ValueError) as e:
-                if isinstance(e, errors.ErrInvalidParams):
-                    raise
-                raise errors.ErrInvalidParams(f"param {k} must be an integer, got {v!r}")
-        rec["params"].update({k: str(v) for k, v in params.items()})
+        merged = {**rec["params"], **{k: str(v) for k, v in params.items()}}
+        _check_params(rec["index_type"], rec["dimension"], merged)
+        rec["params"] = merged
         self._save(records)
 
     def bump_index_version(self, name: str) -> int:

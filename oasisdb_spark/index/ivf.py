@@ -38,7 +38,7 @@ from oasisdb_spark.index.flat import topk_per_query
 from oasisdb_spark.index.kernels import distances_from_dots, local_topk, nearest_centroids, scored_schema, write_lists
 from oasisdb_spark.index.kmeans import kmeans_fit
 
-__all__ = ["train_centroids", "assign_clusters", "build_ivf", "load_ivf", "add_to_ivf", "append_ivf", "knn_ivf", "rank_probes", "deterministic_sample", "ivf_search_stats"]
+__all__ = ["train_centroids", "assign_clusters", "build_ivf", "load_ivf", "append_ivf", "knn_ivf", "rank_probes", "deterministic_sample", "ivf_search_stats"]
 
 DEFAULT_NLIST = 100  # const.go:26-30
 DEFAULT_NPROBE = 10
@@ -152,35 +152,19 @@ def load_ivf(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame]:
     )
 
 
-def add_to_ivf(
-    new_df: DataFrame,
-    centroids_df: DataFrame,
-    lists_dir: str,
-    id_col: str = "id",
-    vec_col: str = "vector",
-) -> DataFrame:
+def append_ivf(new_df: DataFrame, out_dir: str) -> None:
     """Add-after-build (ivf.go:99-127 Add/AddBatch; exercised by the
-    reference's add-after-train test, ivf_test.go:96): assign new vectors
-    to the EXISTING centroids — no retrain — and append them to the
-    on-disk inverted lists.
+    reference's add-after-train test, ivf_test.go:96): assign new
+    (id, vector) rows to the EXISTING centroids of the index at out_dir
+    — no retrain — and append them to its on-disk inverted lists.
 
     The append writes new immutable parquet files into the matching
-    cluster_id partition dirs; a subsequent read of the lists sees them.
+    cluster_id partition dirs; a subsequent load_ivf sees them.
     Centroids drift as data grows, so periodic build_index rebuilds stay
-    the compaction analogue; this is the cheap write path between them.
-    Returns a fresh reader over the updated lists."""
-    assigned = assign_clusters(
-        new_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector")),
-        _centroid_matrix(centroids_df),
-    )
-    write_lists(assigned, lists_dir, "append")
-    return new_df.sparkSession.read.parquet(lists_dir)
-
-
-def append_ivf(new_df: DataFrame, out_dir: str) -> None:
-    """add_to_ivf against the index build_ivf wrote to out_dir."""
+    the compaction analogue; this is the cheap write path between them."""
     cent_df, _ = load_ivf(new_df.sparkSession, out_dir)
-    add_to_ivf(new_df, cent_df, os.path.join(out_dir, "lists"))
+    assigned = assign_clusters(new_df.select("id", "vector"), _centroid_matrix(cent_df))
+    write_lists(assigned, os.path.join(out_dir, "lists"), "append")
 
 
 def rank_probes(

@@ -42,7 +42,7 @@ from oasisdb_spark.index.ivf import apply_id_filter, rank_probes, run_query_chun
 from oasisdb_spark.index.kernels import nearest_centroids, refine_exact, scored_schema, write_lists
 from oasisdb_spark.index.kmeans import kmeans_fit
 
-__all__ = ["train_pq", "encode_pq", "build_ivfpq", "load_ivfpq", "add_to_ivfpq", "append_ivfpq", "knn_ivfpq"]
+__all__ = ["train_pq", "encode_pq", "build_ivfpq", "load_ivfpq", "append_ivfpq", "knn_ivfpq"]
 
 KSUB = 256  # 2^nbits, nbits=8 only (ivfpq.go:104-106)
 
@@ -153,32 +153,14 @@ def load_ivfpq(spark, out_dir: str) -> tuple[np.ndarray, np.ndarray, DataFrame]:
     )
 
 
-def add_to_ivfpq(
-    new_df: DataFrame,
-    centroids: np.ndarray,
-    codebooks: np.ndarray,
-    lists_dir: str,
-    id_col: str = "id",
-    vec_col: str = "vector",
-) -> DataFrame:
-    """Add-after-build (ivfpq.go Add path): encode new vectors against
-    the EXISTING coarse centroids + codebooks — no retrain — and append
-    the codes to the on-disk inverted lists. Same append-only file
-    semantics as ivf.add_to_ivf. Returns a fresh reader."""
-    spark = new_df.sparkSession
-    encoded = encode_pq(
-        new_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector")),
-        centroids,
-        codebooks,
-    )
-    write_lists(encoded, lists_dir, "append")
-    return spark.read.parquet(lists_dir)
-
-
 def append_ivfpq(new_df: DataFrame, out_dir: str) -> None:
-    """add_to_ivfpq against the index build_ivfpq wrote to out_dir."""
+    """Add-after-build (ivfpq.go Add path): encode new (id, vector) rows
+    against the EXISTING coarse centroids + codebooks of the index at
+    out_dir — no retrain — and append the codes to its on-disk inverted
+    lists. Same append-only file semantics as ivf.append_ivf."""
     centroids, codebooks, _ = load_ivfpq(new_df.sparkSession, out_dir)
-    add_to_ivfpq(new_df, centroids, codebooks, os.path.join(out_dir, "lists"))
+    encoded = encode_pq(new_df.select("id", "vector"), centroids, codebooks)
+    write_lists(encoded, os.path.join(out_dir, "lists"), "append")
 
 
 def knn_ivfpq(

@@ -32,7 +32,7 @@ from oasisdb_spark.index.flat import topk_per_query
 from oasisdb_spark.index.ivf import run_query_chunks
 from oasisdb_spark.index.kernels import distances_from_dots, local_topk, scored_schema
 
-__all__ = ["knn_brute_batched", "cosine_topk_batched"]
+__all__ = ["knn_brute_batched"]
 
 
 def _packbits64(M: np.ndarray) -> np.ndarray:
@@ -151,9 +151,3 @@ def knn_brute_batched(
     scored = b.mapInPandas(_score, schema=out_schema)
     return topk_per_query(scored, k)
 
-
-def cosine_topk_batched(
-    queries: DataFrame, base: DataFrame, k: int, **kw
-) -> DataFrame:
-    """Cosine top-k — the embedding-similarity-search entry point."""
-    return knn_brute_batched(queries, base, k, space="cos", **kw)

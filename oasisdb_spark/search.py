@@ -12,9 +12,7 @@ Reference mapping:
                       filter is real and applied as a PRE-filter pushed
                       below the kNN — candidates are restricted before
                       distance computation, so the filter prunes the
-                      scan instead of post-truncating results. A
-                      post-filter mode (reference design.md:58's k*2
-                      fallback) is offered for comparison.
+                      scan instead of post-truncating results.
 - set_params        → catalog.set_params (S11); efsearch maps to nprobe
                       for the hnsw tier (SURVEY.md Q6: efsearch⇒nprobe).
 
@@ -57,7 +55,6 @@ class _Search(NamedTuple):
     space: str
     refine_base: DataFrame  # the collection's (id, vector) rows
     id_filter: DataFrame | None
-    nprobe_boost: int
 
 
 class _Tier(NamedTuple):
@@ -81,13 +78,13 @@ def _nlist(params: dict, data: DataFrame) -> int:
 
 
 def _nprobe(s: _Search) -> int:
-    return int(s.params.get("nprobe", "10")) * s.nprobe_boost  # the knn functions cap at nlist
+    return int(s.params.get("nprobe", "10"))  # the knn functions cap at nlist
 
 
 def _efsearch_nprobe(s: _Search) -> int:
     # efsearch⇒nprobe mapping: scan roughly efsearch/ef_default
     # fraction of lists, floor 1 (SURVEY.md §7 phase 3.5)
-    return max(1, int(s.params.get("efsearch", "10")) // 2) * s.nprobe_boost
+    return max(1, int(s.params.get("efsearch", "10")) // 2)
 
 
 def _ivf_tier(nprobe: Callable[[_Search], int]) -> _Tier:
@@ -247,21 +244,9 @@ def search_vectors(
     # |probed candidates|, not an index reshuffle. Exactness under a
     # filter matches the index's usual contract (exact at nprobe=nlist).
     id_filter = candidates.select("id") if candidates is not None else None
-    nprobe_boost = 1
-    if id_filter is not None and coll.params.get("adaptive_nprobe", "0") not in ("0", "", "false"):
-        # opt-in (set_params(adaptive_nprobe=1)): scale nprobe by
-        # ~1/selectivity — a 1-in-s filter thins every probed list by s,
-        # so fixed nprobe loses recall proportionally (RECALL.md filtered
-        # curve). Costs two count jobs per search (pushdown-pruned
-        # scans); serving paths that know their selectivity should set
-        # nprobe directly instead.
-        n_filtered = candidates.count()
-        n_total = catalog.read_documents(name).count()
-        if n_filtered > 0:
-            nprobe_boost = max(1, math.ceil(n_total / n_filtered))
     *model, lists = tier.load(catalog.spark, catalog.index_path(name, coll.index_version))
     index = (*model, _without_tombstones(catalog, name, lists))
-    return tier.search(queries, index, k, _Search(coll.params, coll.space, data, id_filter, nprobe_boost))
+    return tier.search(queries, index, k, _Search(coll.params, coll.space, data, id_filter))
 
 
 def cached_search_vectors(
@@ -305,28 +290,18 @@ def search_documents(
     queries: DataFrame,
     k: int,
     metadata_filter: Column | None = None,
-    post_filter: bool = False,
 ) -> DataFrame:
     """kNN + join documents back (document.go:171-247 — but done as one
     join, not the reference's per-id GetDocument loop) with a WORKING
     metadata filter.
 
-    pre-filter (default): filter the collection, then kNN over the
+    The filter is a pre-filter: filter the collection, then kNN over the
     survivors — top-k is correct under the predicate. With a built
     non-flat index the filter pushes INTO the index as a post-probe
     semi-join (filtered ANN: costs |probed candidates|, exact at
     nprobe=nlist); without one it's an exact brute scan.
-    post_filter=True: reference design.md:58 style — fetch k*2 unfiltered
-    candidates, then filter (may return < k rows; kept for parity study).
     """
     data = catalog.read_documents(name)
-    if metadata_filter is not None and not post_filter:
-        hits = search_vectors(catalog, name, queries, k, candidates=data.filter(metadata_filter))
-    elif metadata_filter is not None:
-        hits = search_vectors(catalog, name, queries, k * 2)
-    else:
-        hits = search_vectors(catalog, name, queries, k)
-    out = hits.join(data, on="id")
-    if metadata_filter is not None and post_filter:
-        out = out.filter(metadata_filter)
-    return out.select("query_id", "id", "distance", "rank", "vector", "parameters")
+    candidates = data.filter(metadata_filter) if metadata_filter is not None else None
+    hits = search_vectors(catalog, name, queries, k, candidates=candidates)
+    return hits.join(data, on="id").select("query_id", "id", "distance", "rank", "vector", "parameters")

@@ -23,9 +23,11 @@ handlers.go:30-354 (request/response JSON shapes). Every route maps 1:1:
 
 Built on the stdlib ThreadingHTTPServer — a thin serving shell, not a
 scale path: queries execute on the embedded SparkSession, and a single
-driver-side lock serializes catalog mutations (the Spark driver is the
-real concurrency boundary). For production serving you'd put the same
-OasisClient behind a real ASGI server; the contract is what's tested.
+driver-side lock serializes every request, reads included (the Spark
+driver is the real concurrency boundary; the wait for it is what
+perfbench reports as server.lock_wait_ms). For production serving
+you'd put the same OasisClient behind a real ASGI server; the contract
+is what's tested.
 
 Error mapping (handlers.go parity): unknown collection/document → 404,
 malformed JSON / invalid params → 400, everything else → 500.
@@ -217,8 +219,7 @@ def _make_handler(srv: OasisServer):
                     doc["dimension"] = len(doc["vector"])
                     self._json(200, doc)
                 elif method == "DELETE":
-                    client.get_document(name, doc_id)  # 404 first, like the reference
-                    client.delete_document(name, doc_id)
+                    client.delete_document(name, doc_id)  # a missing id raises → 404
                     self._json(200)
                 else:
                     self._json(405, {"error": "method not allowed"})

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from oasisdb_spark.index.flat import knn_flat
-from oasisdb_spark.pipeline.ann import cosine_topk_batched, knn_brute_batched
+from oasisdb_spark.pipeline.ann import knn_brute_batched
 
 
 def _base(embeddings):
@@ -31,12 +31,6 @@ def test_batched_matches_flat(spark, embeddings, space):
         # FIXTURES.md tolerance: rtol 1e-5; abs floor covers GEMM
         # cancellation on near-zero distances
         assert f[key][1] == pytest.approx(s[key][1], rel=1e-5, abs=1e-6)
-
-
-def test_cosine_entry_point(spark, embeddings):
-    res = cosine_topk_batched(_q(embeddings, 3), _base(embeddings), k=5)
-    top1 = {r["query_id"]: r["id"] for r in res.filter(F.col("rank") == 1).collect()}
-    assert top1 == {0: 0, 1: 1, 2: 2}
 
 
 def test_unknown_space_rejected(spark, embeddings):

@@ -96,6 +96,17 @@ def test_set_params(catalog):
         catalog.set_params("c", {"nprobe": "not_an_int"})
     with pytest.raises(errors.ErrInvalidParams):
         catalog.set_params("c", {"nprobe": 0})
+    with pytest.raises(errors.ErrInvalidParams):
+        catalog.set_params("c", {"adaptive_nprobe": 1})
+    assert catalog.get_collection("c").params == {"nlist": "100", "nprobe": "32"}
+    # set_params validates the merged params as create_collection does:
+    # ivfpq builds 8-bit codes only, and m must divide the dimension
+    catalog.create_collection("pq", dimension=64, index_type="ivfpq")
+    before = catalog.get_collection("pq").params
+    for bad in ({"nbits": 4}, {"m": 7}):
+        with pytest.raises(errors.ErrInvalidParams):
+            catalog.set_params("pq", bad)
+        assert catalog.get_collection("pq").params == before
 
 
 def test_compact_collection(catalog, spark):

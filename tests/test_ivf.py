@@ -74,13 +74,14 @@ def test_ivf_add_after_build(spark, tiny_vectors, tmp_path):
     """Add-after-train (ivf_test.go:96): vectors appended to a built
     index — no retrain — are found by subsequent searches, and full
     probing still equals the exact result over the grown set."""
-    from oasisdb_spark.index.ivf import add_to_ivf
+    from oasisdb_spark.index.ivf import append_ivf, load_ivf
 
     first = tiny_vectors.filter(F.col("id").cast("int") <= 10)
     rest = tiny_vectors.filter(F.col("id").cast("int") > 10)
     d = str(tmp_path / "ivf")
-    cent, idx = build_ivf(first, nlist=4, out_dir=d)
-    idx = add_to_ivf(rest, cent, d + "/lists")
+    build_ivf(first, nlist=4, out_dir=d)
+    append_ivf(rest, d)
+    cent, idx = load_ivf(spark, d)
     assert idx.count() == 20
     q = spark.createDataFrame(
         [("q", [20.0, 0.0, 0.0, 0.0])], "query_id STRING, query_vec ARRAY<FLOAT>"

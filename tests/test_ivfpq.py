@@ -91,7 +91,7 @@ def test_ivfpq_add_after_build(spark, embeddings, tmp_path):
     exact-refine stage pins the added vector to rank 1)."""
     from pyspark.sql import functions as F
 
-    from oasisdb_spark.index.ivfpq import add_to_ivfpq, build_ivfpq, knn_ivfpq
+    from oasisdb_spark.index.ivfpq import append_ivfpq, build_ivfpq, knn_ivfpq, load_ivfpq
 
     base = embeddings.select(
         F.col("vec_id").cast("string").alias("id"), F.col("embedding").alias("vector")
@@ -99,8 +99,9 @@ def test_ivfpq_add_after_build(spark, embeddings, tmp_path):
     first = base.filter(F.col("id").cast("int") < 150)
     rest = base.filter(F.col("id").cast("int") >= 150)
     d = str(tmp_path / "pq")
-    cents, books, idx = build_ivfpq(first, nlist=4, m=8, out_dir=d)
-    idx = add_to_ivfpq(rest, cents, books, d + "/lists")
+    build_ivfpq(first, nlist=4, m=8, out_dir=d)
+    append_ivfpq(rest, d)
+    cents, books, idx = load_ivfpq(spark, d)
     assert idx.count() == base.count()
     q = (
         embeddings.filter(F.col("vec_id") == 180)

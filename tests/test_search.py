@@ -56,18 +56,6 @@ def test_search_documents_prefilter(spark, loaded, embeddings):
     assert all(labels[int(r["id"])] == 1 for r in res)
 
 
-def test_search_documents_postfilter_maybe_short(spark, loaded, embeddings):
-    """Post-filter (reference design.md:58 k*2 mode): results satisfy the
-    predicate but may be fewer than k — the parity-mode behavior."""
-    res = search_documents(
-        loaded, "emb", _q(spark, embeddings, 2), k=5,
-        metadata_filter=F.col("parameters")["label"] == "1", post_filter=True,
-    ).collect()
-    labels = {r["vec_id"]: r["label"] for r in embeddings.collect()}
-    assert all(labels[int(r["id"])] == 1 for r in res)
-    assert len(res) <= 10
-
-
 def test_search_documents_joins_payload(spark, loaded, embeddings):
     res = search_documents(loaded, "emb", _q(spark, embeddings, 1), k=3).collect()
     assert len(res) == 3
@@ -215,26 +203,6 @@ def test_filtered_search_pushes_into_ivf_index(spark, loaded, embeddings):
     }
     labels = {r["vec_id"]: r["label"] for r in embeddings.collect()}
     assert len(res) == 10 and all(labels[int(r["id"])] == 1 for r in res)
-
-
-def test_adaptive_nprobe_recovers_filtered_recall(spark, loaded, embeddings):
-    """adaptive_nprobe=1 scales nprobe by ~1/selectivity: with nprobe=1
-    and a selective filter, the boosted probe count recovers the exact
-    filtered top-k (boost pushes nprobe past nlist, capped there)."""
-    build_index(loaded, "emb")
-    loaded.set_params("emb", {"nprobe": 1, "adaptive_nprobe": 1})
-    pred = F.col("parameters")["label"] == "1"
-    res = search_documents(
-        loaded, "emb", _q(spark, embeddings, 2), k=5, metadata_filter=pred
-    ).collect()
-    from oasisdb_spark.pipeline.ann import knn_brute_batched
-
-    ref = knn_brute_batched(
-        _q(spark, embeddings, 2), loaded.read_documents("emb").filter(pred), 5, space="l2"
-    ).collect()
-    assert {(r["query_id"], r["id"], r["rank"]) for r in res} == {
-        (r["query_id"], r["id"], r["rank"]) for r in ref
-    }
 
 
 @pytest.mark.parametrize("space", ["l2", "ip"])
