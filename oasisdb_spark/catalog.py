@@ -339,9 +339,11 @@ class Catalog:
     def read_documents(self, name: str) -> DataFrame:
         self.get_collection(name)  # existence check, matching document.go:136-145
         p = self._resolve(self.data_path(name))
-        if p is None or not any(f.endswith(".parquet") for f in os.listdir(p)):
+        if p is None:
             return self.spark.createDataFrame([], T.StructType(_DOC_SCHEMA_FIELDS))
-        return self.spark.read.parquet(p)
+        # explicit schema: no inference job, and a generation written
+        # from an empty frame (no parquet footers) reads as 0 rows
+        return self.spark.read.schema(T.StructType(_DOC_SCHEMA_FIELDS)).parquet(p)
 
     def _validate_dims(self, df: DataFrame, dimension: int) -> DataFrame:
         """Ingest-time row assertion (document.go:70-73,280-285).

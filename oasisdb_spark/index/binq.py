@@ -35,8 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from oasisdb_spark.index.flat import topk_per_query
-from oasisdb_spark.index.ivf import apply_id_filter, deterministic_sample, run_query_chunks
-from oasisdb_spark.index.kernels import local_topk, refine_exact, scored_schema
+from oasisdb_spark.index.ivf import apply_id_filter, deterministic_sample
+from oasisdb_spark.index.kernels import local_topk, per_query_batch, refine_exact, scored_schema
 from oasisdb_spark.pipeline.ann import _packbits64, _popcount64
 
 __all__ = ["train_binq", "encode_binq", "build_binq", "load_binq", "append_binq", "knn_binq"]
@@ -116,10 +116,10 @@ def load_binq(spark, out_dir: str) -> tuple[np.ndarray, DataFrame]:
     )
 
 
-def append_binq(new_df: DataFrame, out_dir: str) -> None:
+def append_binq(new_df: DataFrame, out_dir: str, means: np.ndarray) -> None:
     """Add-after-build: encode new (id, vector) rows against the
-    trained means of the index at out_dir and append their codes."""
-    means, _ = load_binq(new_df.sparkSession, out_dir)
+    trained means of the index at out_dir (as load_binq returns them)
+    and append their codes."""
     encode_binq(new_df, means).write.mode("append").parquet(os.path.join(out_dir, "codes"))
 
 
@@ -131,68 +131,47 @@ def knn_binq(
     refine_base: DataFrame | None = None,
     refine_factor: int = 4,
     space: str = "l2",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    max_query_rows: int = 65_536,
     id_filter: DataFrame | None = None,
 ) -> DataFrame:
     """BQ search: hamming scan over packed codes → per-query shortlist of
     k·refine_factor → exact re-rank against refine_base in the declared
     space. Without refine_base, ranks by the hamming proxy itself
-    (distance = code hamming — recall measured in RECALL.md).
+    (distance = code hamming — recall measured in RECALL.md). queries
+    has columns (query_id, query_vec); batches past kernels.
+    QUERY_BATCH_ROWS run as unioned passes.
 
     id_filter (filtered ANN): semi-joins the CODE scan before scoring —
     unlike the IVF tiers there is no probe stage to defer it past, but
-    the reshuffle it costs is over 32×-compressed codes.
-
-    max_query_rows: ann.py's chunk guard — larger query batches run as
-    unioned chunks."""
+    the reshuffle it costs is over 32×-compressed codes."""
     if space not in ("l2", "ip", "cos"):
         raise ValueError(f"knn_binq refines in l2/ip/cos, got {space!r}")
-    spark = queries.sparkSession
-    q_rows = queries.select(query_id_col, query_vec_col).collect()
-    chunked = run_query_chunks(
-        spark, q_rows, queries.select(query_id_col, query_vec_col).schema, max_query_rows,
-        lambda chunk: knn_binq(
-            chunk, means, code_df, k, refine_base, refine_factor, space,
-            query_id_col, query_vec_col, max_query_rows, id_filter,
-        ),
-    )
-    if chunked is not None:
-        return chunked
-    qids = [r[query_id_col] for r in q_rows]
-    Q = np.array([r[query_vec_col] for r in q_rows], dtype=np.float32)
-    q_codes = _pack_rows(Q, np.ascontiguousarray(means, dtype=np.float32))
-    bc_q = spark.sparkContext.broadcast((np.array(qids, dtype=object), q_codes))
     shortlist = max(k, k * max(refine_factor, 1)) if refine_base is not None else k
-    code_df = apply_id_filter(code_df, id_filter)
+    codes = apply_id_filter(code_df, id_filter)
 
-    out_schema = scored_schema(
-        queries.schema[query_id_col].dataType, code_df.schema["id"].dataType, T.LongType()
-    )
+    def search(frame: DataFrame, ids: list, vectors: np.ndarray) -> DataFrame:
+        q_codes = _pack_rows(vectors.astype(np.float32), np.ascontiguousarray(means, dtype=np.float32))
+        bc_q = codes.sparkSession.sparkContext.broadcast((np.array(ids, dtype=object), q_codes))
+        out_schema = scored_schema(
+            frame.schema["query_id"].dataType, codes.schema["id"].dataType, T.LongType()
+        )
 
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_arr, qc = bc_q.value
-        qc64 = qc.view(np.uint64)
-        if len(ids_arr) == 0:
-            return
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.array(pdf["code"].tolist(), dtype=np.int64).view(np.uint64)
-            # (nb, nq) hamming distances via XOR + popcount
-            D = _popcount64(codes[:, None, :] ^ qc64[None, :, :])
-            yield local_topk(ids_arr, pdf["id"].values, D, shortlist)
+        def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            ids_arr, qc = bc_q.value
+            qc64 = qc.view(np.uint64)
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                code = np.array(pdf["code"].tolist(), dtype=np.int64).view(np.uint64)
+                # (nb, nq) hamming distances via XOR + popcount
+                D = _popcount64(code[:, None, :] ^ qc64[None, :, :])
+                yield local_topk(ids_arr, pdf["id"].values, D, shortlist)
 
-    top = topk_per_query(code_df.mapInPandas(_scan, schema=out_schema), shortlist)
-    if refine_base is None:
-        top = top.withColumn("distance", F.col("distance").cast("double"))
-    else:
+        top = topk_per_query(codes.mapInPandas(_scan, schema=out_schema), shortlist)
+        if refine_base is None:
+            return top.withColumn("distance", F.col("distance").cast("double"))
         # the exact re-rank scores the float32 query vectors the codes
         # were packed from
-        q = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).cast("array<float>").alias("query_vec"),
-        )
-        top = refine_exact(top, q, refine_base, k, space)
-    return top.select("query_id", "id", "rank", "distance")
+        q = frame.withColumn("query_vec", F.col("query_vec").cast("array<float>"))
+        return refine_exact(top, q, refine_base, k, space)
+
+    return per_query_batch(queries, search).select("query_id", "id", "rank", "distance")

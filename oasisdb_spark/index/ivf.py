@@ -10,8 +10,9 @@ Reference: internal/index/ivf.go —
 
 Spark design (SURVEY.md §4 row 1):
 - The index is a DataFrame (cluster_id, id, vector) written PARTITIONED
-  BY cluster_id, plus a tiny centroids table. Partitioning by cluster_id
-  is the inverted list: a probe of p clusters reads only p/nlist of the
+  BY cluster_id, plus a tiny centroids table, read back on the driver as
+  an (nlist, dim) numpy array. Partitioning by cluster_id is the
+  inverted list: a probe of p clusters reads only p/nlist of the
   data — partition pruning does at scan time what the reference's
   in-memory list indirection does in RAM.
 - Assignment and probe-selection are vectorized numpy against BROADCAST
@@ -26,19 +27,21 @@ Spark design (SURVEY.md §4 row 1):
 from __future__ import annotations
 
 import os
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from oasisdb_spark.index.flat import topk_per_query
-from oasisdb_spark.index.kernels import distances_from_dots, local_topk, nearest_centroids, scored_schema, write_lists
+from oasisdb_spark.index.kernels import distances_from_dots, local_topk, nearest_centroids
+from oasisdb_spark.index.kernels import per_query_batch, refine_exact, scored_schema, write_lists
 from oasisdb_spark.index.kmeans import kmeans_fit
 
-__all__ = ["train_centroids", "assign_clusters", "build_ivf", "load_ivf", "append_ivf", "knn_ivf", "rank_probes", "deterministic_sample", "ivf_search_stats"]
+__all__ = ["train_centroids", "assign_clusters", "build_ivf", "load_ivf", "append_ivf", "knn_ivf", "knn_probed", "rank_probes", "deterministic_sample", "ivf_search_stats"]
 
 DEFAULT_NLIST = 100  # const.go:26-30
 DEFAULT_NPROBE = 10
@@ -122,48 +125,49 @@ def build_ivf(
     id_col: str = "id",
     vec_col: str = "vector",
     out_dir: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[np.ndarray, DataFrame]:
     """Index build (S8 / ivf.go Train+AddBatch): returns
-    (centroids_df(cluster_id, centroid), index_df(cluster_id, id, vector)).
-    If out_dir is given, both are persisted — index partitioned by
-    cluster_id (the on-disk inverted lists)."""
+    (centroids (nlist, dim) float32, index_df(cluster_id, id, vector)).
+    If out_dir is given, both are persisted — a centroids(cluster_id,
+    centroid) table, and the index partitioned by cluster_id (the
+    on-disk inverted lists)."""
     spark = base.sparkSession
     centroids = train_centroids(base, nlist, vec_col)
-    cent_df = spark.createDataFrame(
-        [(int(i), [float(v) for v in c]) for i, c in enumerate(centroids)],
-        "cluster_id INT, centroid ARRAY<FLOAT>",
-    )
     index_df = assign_clusters(
         base.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector")), centroids
     )
     if out_dir:
-        cent_df.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "centroids"))
+        spark.createDataFrame(
+            [(int(i), [float(v) for v in c]) for i, c in enumerate(centroids)],
+            "cluster_id INT, centroid ARRAY<FLOAT>",
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "centroids"))
         write_lists(index_df, os.path.join(out_dir, "lists"), "overwrite")
         return load_ivf(spark, out_dir)
-    return cent_df, index_df
+    return centroids, index_df
 
 
-def load_ivf(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame]:
+def load_ivf(spark: SparkSession, out_dir: str) -> tuple[np.ndarray, DataFrame]:
     """Read back the index build_ivf wrote to out_dir: the same
-    (centroids_df, index_df) pair build_ivf returns."""
-    return (
-        spark.read.parquet(os.path.join(out_dir, "centroids")),
-        spark.read.parquet(os.path.join(out_dir, "lists")),
-    )
+    (centroids, index_df) pair build_ivf returns. The centroids table is
+    a few KB, so pyarrow reads it on the driver — no Spark job."""
+    t = pq.read_table(os.path.join(out_dir, "centroids"))
+    order = np.argsort(t.column("cluster_id").to_numpy())
+    centroids = np.array(t.column("centroid").to_pylist(), dtype=np.float32)[order]
+    return centroids, spark.read.parquet(os.path.join(out_dir, "lists"))
 
 
-def append_ivf(new_df: DataFrame, out_dir: str) -> None:
+def append_ivf(new_df: DataFrame, out_dir: str, centroids: np.ndarray) -> None:
     """Add-after-build (ivf.go:99-127 Add/AddBatch; exercised by the
     reference's add-after-train test, ivf_test.go:96): assign new
     (id, vector) rows to the EXISTING centroids of the index at out_dir
-    — no retrain — and append them to its on-disk inverted lists.
+    (as load_ivf returns them) — no retrain — and append them to its
+    on-disk inverted lists.
 
     The append writes new immutable parquet files into the matching
     cluster_id partition dirs; a subsequent load_ivf sees them.
     Centroids drift as data grows, so periodic build_index rebuilds stay
     the compaction analogue; this is the cheap write path between them."""
-    cent_df, _ = load_ivf(new_df.sparkSession, out_dir)
-    assigned = assign_clusters(new_df.select("id", "vector"), _centroid_matrix(cent_df))
+    assigned = assign_clusters(new_df.select("id", "vector"), centroids)
     write_lists(assigned, os.path.join(out_dir, "lists"), "append")
 
 
@@ -206,7 +210,7 @@ def rank_probes(
 
 def knn_ivf(
     queries: DataFrame,
-    centroids_df: DataFrame,
+    centroids: np.ndarray,
     index_df: DataFrame,
     k: int,
     nprobe: int = DEFAULT_NPROBE,
@@ -233,11 +237,8 @@ def knn_ivf(
     the usual last-ulp summation noise vs the fold expression — keep
     oracle-gated runs on 'expr'.
 
-    id_filter: optional one-column (id) frame — filtered ANN: candidates
-    are semi-joined against it AFTER probe pruning, so the filter costs
-    |probed candidates|, never a reshuffle of the whole index (AQE turns
-    the semi-join into a broadcast when the filter is selective — the
-    common case). With nprobe=nlist this is exact filtered kNN; at
+    id_filter: optional one-column (id) frame — filtered ANN
+    (apply_id_filter). With nprobe=nlist this is exact filtered kNN; at
     partial probes it inherits IVF recall, and selective filters warrant
     a higher nprobe (the standard filtered-ANN tradeoff).
 
@@ -252,7 +253,6 @@ def knn_ivf(
 
     if kernel not in ("expr", "gemm"):
         raise ValueError(f"knn_ivf: kernel must be expr|gemm, got {kernel!r}")
-    centroids = _centroid_matrix(centroids_df)
     probes = rank_probes(queries, centroids, nprobe, query_id_col, query_vec_col)
     if kernel == "gemm":
         return _knn_ivf_gemm(probes, index_df, k, space, id_filter)
@@ -348,15 +348,50 @@ def apply_id_filter(cand: DataFrame, id_filter: DataFrame | None) -> DataFrame:
     return cand.join(id_filter.select("id"), on="id", how="left_semi")
 
 
-def run_query_chunks(spark, q_rows, schema, max_rows: int, search_chunk):
-    """Scale guard shared by the collect-and-broadcast searchers: if the
-    collected query batch exceeds max_rows, re-run `search_chunk` per
-    max_rows-sized chunk DataFrame and union the results; returns None
-    when the batch fits (caller proceeds unchunked)."""
-    if len(q_rows) <= max_rows:
-        return None
-    out = None
-    for lo in range(0, len(q_rows), max_rows):
-        part = search_chunk(spark.createDataFrame(q_rows[lo : lo + max_rows], schema))
-        out = part if out is None else out.unionByName(part)
-    return out
+
+def knn_probed(
+    queries: DataFrame,
+    centroids: np.ndarray,
+    index_df: DataFrame,
+    k: int,
+    nprobe: int,
+    space: str,
+    refine_base: DataFrame | None,
+    refine_factor: int,
+    id_filter: DataFrame | None,
+    score: Callable,
+    model: tuple,
+) -> DataFrame:
+    """The search skeleton of the quantized IVF tiers (knn_ivfpq,
+    knn_ivfsq), run per query batch: probe, candidates, score, then
+    top-k or refine. The probes broadcast-join the partition-pruned
+    lists and id_filter semi-joins the candidates after that pruning.
+    score(pdf, q, space, model) gives the (n,) distances of one Arrow
+    batch of candidate rows, q being each row's query vector (float64)
+    and model the tier's broadcast numpy state; the queries are
+    broadcast, so candidate rows carry only their codes. With
+    refine_base (id, vector), the top k·refine_factor are re-ranked
+    with the exact metric (the FAISS IVFPQR pattern)."""
+
+    def search(frame: DataFrame, ids: list, vectors: np.ndarray) -> DataFrame:
+        bc = index_df.sparkSession.sparkContext.broadcast((ids, vectors, model))
+        probes = rank_probes(frame, centroids, nprobe).select("query_id", "cluster_id")
+        cand = apply_id_filter(F.broadcast(probes).join(index_df, on="cluster_id"), id_filter)
+
+        def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            qids, Q, state = bc.value
+            qpos = {q: i for i, q in enumerate(qids)}
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                q = Q[[qpos[x] for x in pdf["query_id"]]]
+                d = score(pdf, q, space, state)
+                yield pd.DataFrame({"query_id": pdf["query_id"], "id": pdf["id"], "distance": d})
+
+        out_schema = scored_schema(frame.schema["query_id"].dataType, index_df.schema["id"].dataType)
+        scored = cand.mapInPandas(_score, schema=out_schema)
+        if refine_base is None:
+            return topk_per_query(scored, k)
+        return refine_exact(topk_per_query(scored, k * refine_factor), frame, refine_base, k, space)
+
+    return per_query_batch(queries, search)

@@ -19,10 +19,11 @@ Spark design:
 - Codebooks ((m, 256, sub_dim) float32) and coarse centroids are a few
   MB — broadcast to every executor.
 - The ADC kernel is genuinely not expressible as efficient SQL (table
-  lookup per candidate); it runs as an Arrow-batched mapInPandas with
-  numpy fancy-indexing, grouped per (query, cluster) inside each batch
-  so each distance table is built once per probed list — mirroring the
-  reference's per-probe precompute, but vectorized over candidates.
+  lookup per candidate); it is the per-batch numpy scorer of the shared
+  ivf.knn_probed skeleton, with numpy fancy-indexing, grouped per
+  (query, cluster) inside each batch so each distance table is built
+  once per probed list — mirroring the reference's per-probe
+  precompute, but vectorized over candidates.
 """
 
 from __future__ import annotations
@@ -37,9 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from oasisdb_spark.errors import ErrInvalidParams
-from oasisdb_spark.index.flat import topk_per_query
-from oasisdb_spark.index.ivf import apply_id_filter, rank_probes, run_query_chunks, train_centroids
-from oasisdb_spark.index.kernels import nearest_centroids, refine_exact, scored_schema, write_lists
+from oasisdb_spark.index.ivf import knn_probed, train_centroids
+from oasisdb_spark.index.kernels import nearest_centroids, write_lists
 from oasisdb_spark.index.kmeans import kmeans_fit
 
 __all__ = ["train_pq", "encode_pq", "build_ivfpq", "load_ivfpq", "append_ivfpq", "knn_ivfpq"]
@@ -153,12 +153,12 @@ def load_ivfpq(spark, out_dir: str) -> tuple[np.ndarray, np.ndarray, DataFrame]:
     )
 
 
-def append_ivfpq(new_df: DataFrame, out_dir: str) -> None:
+def append_ivfpq(new_df: DataFrame, out_dir: str, centroids: np.ndarray, codebooks: np.ndarray) -> None:
     """Add-after-build (ivfpq.go Add path): encode new (id, vector) rows
     against the EXISTING coarse centroids + codebooks of the index at
-    out_dir — no retrain — and append the codes to its on-disk inverted
-    lists. Same append-only file semantics as ivf.append_ivf."""
-    centroids, codebooks, _ = load_ivfpq(new_df.sparkSession, out_dir)
+    out_dir (as load_ivfpq returns them) — no retrain — and append the
+    codes to its on-disk inverted lists. Same append-only file
+    semantics as ivf.append_ivf."""
     encoded = encode_pq(new_df.select("id", "vector"), centroids, codebooks)
     write_lists(encoded, os.path.join(out_dir, "lists"), "append")
 
@@ -171,15 +171,14 @@ def knn_ivfpq(
     k: int,
     nprobe: int = 10,
     space: str = "l2",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     refine_base: DataFrame | None = None,
     refine_factor: int = 4,
-    max_query_rows: int = 65_536,
     id_filter: DataFrame | None = None,
 ) -> DataFrame:
-    """ADC search (ivfpq.go:230-304): probe -> partition-pruned join ->
-    per-(query,cluster) distance-table lookup -> top-k.
+    """ADC search (ivfpq.go:230-304) through the ivf.knn_probed
+    skeleton: probe -> partition-pruned join -> per-(query,cluster)
+    distance-table lookup -> top-k. queries has columns (query_id,
+    query_vec).
 
     Approximate distances (like the reference): returns
     (query_id, id, distance, rank) where distance is the ADC estimate.
@@ -192,89 +191,44 @@ def knn_ivfpq(
     PQ codes are not a binary representation (Catalog.create_collection
     enforces the same at declaration time).
 
-    refine_base: optional (id, vector) table. When given, an ADC
-    shortlist of k*refine_factor candidates is re-ranked with the EXACT
-    declared metric against the original vectors (the FAISS IVFPQR
-    pattern — the reference has no refinement, ADC error is its floor;
-    ours recovers exact-rank quality at shortlist cost: the join touches
-    only k*refine_factor rows per query, id-pruned at the parquet scan).
-
-    max_query_rows bounds the driver collect/broadcast of the query
-    batch: larger batches run as chunks, results unioned (ann.py's
-    scale guard).
-    """
+    refine_base: optional (id, vector) table; an ADC shortlist of
+    k*refine_factor is re-ranked exactly (the reference has no
+    refinement, ADC error is its floor; the refine join touches only
+    k*refine_factor rows per query, id-pruned at the parquet scan)."""
     if space not in ("l2", "ip", "cos"):
         raise ValueError(f"knn_ivfpq supports l2/ip/cos, got {space!r}")
-    spark = queries.sparkSession
-    m, ksub, sub = codebooks.shape
-    # Broadcast the query vectors (the batch is small by contract — it
-    # is collected/broadcast in every exact path too) instead of
-    # carrying a 64-float query_vec column on every candidate row
-    # through the join + Arrow boundary: ~10× less transfer per
-    # candidate (codes are m bytes; the query column would be dim·4).
-    q_rows = queries.select(query_id_col, query_vec_col).collect()
-    chunked = run_query_chunks(
-        spark, q_rows, queries.select(query_id_col, query_vec_col).schema, max_query_rows,
-        lambda chunk: knn_ivfpq(
-            chunk, centroids, codebooks, index_df, k, nprobe, space,
-            query_id_col, query_vec_col, refine_base, refine_factor, max_query_rows, id_filter,
-        ),
-    )
-    if chunked is not None:
-        return chunked
-    bc_c = spark.sparkContext.broadcast(centroids.astype(np.float32))
-    bc_b = spark.sparkContext.broadcast(codebooks.astype(np.float32))
-    bc_q = spark.sparkContext.broadcast(
-        {r[query_id_col]: np.asarray(r[query_vec_col], dtype=np.float32) for r in q_rows}
+    return knn_probed(
+        queries, centroids, index_df, k, nprobe, space, refine_base, refine_factor, id_filter,
+        _adc, (centroids, codebooks),
     )
 
-    probes = rank_probes(queries, centroids, nprobe, query_id_col, query_vec_col).select(
-        "query_id", "cluster_id"
-    )
-    cand = apply_id_filter(F.broadcast(probes).join(index_df, on="cluster_id"), id_filter)
 
-    out_schema = scored_schema(queries.schema[query_id_col].dataType, index_df.schema["id"].dataType)
-
-    def _adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc_c.value
-        books = bc_b.value.astype(np.float64)
-        qvecs = bc_q.value
-        jj = np.arange(m)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            outs = []
-            # one distance table per (query, probed cluster) group — the
-            # reference's per-probe precompute (ivfpq.go:262-277)
-            for (qid, cl), grp in pdf.groupby(["query_id", "cluster_id"], sort=False):
-                qv = qvecs[qid].astype(np.float64)
-                codes = np.array(grp["codes"].tolist(), dtype=np.int64)
-                if space == "l2":
-                    rs = (qv - cents[cl].astype(np.float64)).reshape(m, sub)
-                    # dtable[j, c] = || resid_j - codebook[j, c] ||^2
-                    dtable = ((rs[:, None, :] - books) ** 2).sum(axis=2)
-                    dist = dtable[jj[None, :], codes].sum(axis=1)
-                else:
-                    # dot(q, x̂) = q·centroid + Σ_j q_j·codebook[j,code_j]
-                    qrs = qv.reshape(m, sub)
-                    dtable = np.einsum("ms,mcs->mc", qrs, books)
-                    dot = qv @ cents[cl].astype(np.float64) + dtable[jj[None, :], codes].sum(axis=1)
-                    if space == "ip":
-                        dist = -dot
-                    else:  # cos: reconstruction-norm table (query-independent)
-                        crs = cents[cl].astype(np.float64).reshape(m, 1, sub)
-                        ntable = ((crs + books) ** 2).sum(axis=2)
-                        x_norm = np.sqrt(np.maximum(ntable[jj[None, :], codes].sum(axis=1), 1e-30))
-                        q_norm = max(float(np.sqrt((qv**2).sum())), 1e-30)
-                        dist = 1.0 - dot / (x_norm * q_norm)
-                outs.append(pd.DataFrame({"query_id": qid, "id": grp["id"].values, "distance": dist}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    scored = cand.mapInPandas(_adc, schema=out_schema)
-    if refine_base is None:
-        return topk_per_query(scored, k)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("query_vec")
-    )
-    return refine_exact(topk_per_query(scored, k * refine_factor), q, refine_base, k, space)
+def _adc(pdf: pd.DataFrame, q: np.ndarray, space: str, model: tuple) -> np.ndarray:
+    """ADC distances of one batch of candidate rows (cluster_id, codes)
+    to their queries q: one distance table per (query, probed cluster)
+    group — the reference's per-probe precompute (ivfpq.go:262-277)."""
+    cents, books = model
+    books = books.astype(np.float64)
+    m, _, sub = books.shape
+    jj = np.arange(m)
+    codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
+    dist = np.empty(len(pdf))
+    groups = pdf.groupby(["query_id", "cluster_id"], sort=False, dropna=False).indices
+    for (_, cl), at in groups.items():
+        qv, cent, lookup = q[at[0]], cents[cl].astype(np.float64), (jj[None, :], codes[at])
+        if space == "l2":
+            rs = (qv - cent).reshape(m, sub)
+            # dtable[j, c] = || resid_j - codebook[j, c] ||^2
+            dist[at] = ((rs[:, None, :] - books) ** 2).sum(axis=2)[lookup].sum(axis=1)
+            continue
+        # dot(q, x̂) = q·centroid + Σ_j q_j·codebook[j,code_j]
+        dtable = np.einsum("ms,mcs->mc", qv.reshape(m, sub), books)
+        dot = qv @ cent + dtable[lookup].sum(axis=1)
+        if space == "ip":
+            dist[at] = -dot
+        else:  # cos: reconstruction-norm table (query-independent)
+            ntable = ((cent.reshape(m, 1, sub) + books) ** 2).sum(axis=2)
+            x_norm = np.sqrt(np.maximum(ntable[lookup].sum(axis=1), 1e-30))
+            q_norm = max(float(np.sqrt((qv**2).sum())), 1e-30)
+            dist[at] = 1.0 - dot / (x_norm * q_norm)
+    return dist

@@ -11,9 +11,9 @@ recall stays near-exact without a refine pass.
 Spark design mirrors index/ivf.py: the index is a DataFrame
 (cluster_id, id, codes BINARY) partitioned by cluster_id (partition-
 pruned probes), the quantizer state (centroids + vmin/vmax vectors) is
-broadcast, and search decodes candidates batch-wise in an Arrow pass —
-dequantize is a fused multiply-add, then the same GEMM + top-k shape as
-the other kernels.
+broadcast, and search runs the shared ivf.knn_probed skeleton with a
+per-batch scorer that decodes the candidates — dequantize is a fused
+multiply-add, then one dot per candidate row and the usual top-k.
 
 Add-after-build quantizes arrivals against the TRAINED [vmin, vmax]
 (values outside the trained range clamp to the boundary code — the same
@@ -32,13 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from oasisdb_spark.index.flat import topk_per_query
-from oasisdb_spark.index.ivf import (
-    apply_id_filter, deterministic_sample, rank_probes, run_query_chunks, train_centroids,
-)
-from oasisdb_spark.index.kernels import (
-    distances_from_dots, nearest_centroids, refine_exact, scored_schema, write_lists,
-)
+from oasisdb_spark.index.ivf import deterministic_sample, knn_probed, train_centroids
+from oasisdb_spark.index.kernels import distances_from_dots, nearest_centroids, write_lists
 
 __all__ = ["train_sq", "encode_sq", "build_ivfsq", "load_ivfsq", "append_ivfsq", "knn_ivfsq"]
 
@@ -138,11 +133,12 @@ def load_ivfsq(spark, out_dir: str):
     )
 
 
-def append_ivfsq(new_df: DataFrame, out_dir: str) -> None:
+def append_ivfsq(
+    new_df: DataFrame, out_dir: str, centroids: np.ndarray, vmin: np.ndarray, vmax: np.ndarray
+) -> None:
     """Add-after-build: quantize new (id, vector) rows against the
-    trained centroids and ranges of the index at out_dir and append
-    them to its inverted lists — no retrain."""
-    centroids, vmin, vmax, _ = load_ivfsq(new_df.sparkSession, out_dir)
+    trained centroids and ranges of the index at out_dir (as load_ivfsq
+    returns them) and append them to its inverted lists — no retrain."""
     encoded = encode_sq(new_df.select("id", "vector"), centroids, vmin, vmax)
     write_lists(encoded, os.path.join(out_dir, "lists"), "append")
 
@@ -156,17 +152,13 @@ def knn_ivfsq(
     k: int,
     nprobe: int = 10,
     space: str = "l2",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     refine_base: DataFrame | None = None,
     refine_factor: int = 4,
-    max_query_rows: int = 65_536,
     id_filter: DataFrame | None = None,
 ) -> DataFrame:
     """Probe-pruned search with asymmetric distance (exact query vs
-    dequantized candidates): probes broadcast-join the partition-pruned
-    lists, each Arrow batch dequantizes its codes and scores one GEMM
-    against the broadcast query block, then the usual top-k merge.
+    dequantized candidates) through the ivf.knn_probed skeleton.
+    queries has columns (query_id, query_vec).
 
     space: l2 (squared) | ip (-dot) | cos (1-cos) — the collection's
     declared metric is honored end-to-end (probe ranking stays L2-to-
@@ -174,61 +166,24 @@ def knn_ivfsq(
     rejected: SQ8 codes are not a binary representation (Catalog.
     create_collection enforces the same rule at declaration time).
 
-    refine_base: optional (id, vector) table. When given, a k*refine_
-    factor shortlist of dequantized-distance candidates is re-ranked
-    with the EXACT metric against original vectors (same FAISS IVFPQR
-    pattern as knn_ivfpq) — with refine_factor*k >= N this makes the
-    search metric-exact end-to-end, the driver-gate configuration.
-
-    max_query_rows bounds the driver collect/broadcast of the query
-    batch: larger batches run as chunks, each its own probe join,
-    results unioned (ann.py's scale guard)."""
+    refine_base: optional (id, vector) table; a k*refine_factor
+    shortlist is re-ranked exactly, as in knn_ivfpq — with
+    refine_factor*k >= N the search is metric-exact end-to-end, the
+    driver-gate configuration."""
     if space not in ("l2", "ip", "cos"):
         raise ValueError(f"knn_ivfsq supports l2/ip/cos, got {space!r}")
-    spark = queries.sparkSession
-    dim = centroids.shape[1]
-    q_rows = queries.select(query_id_col, query_vec_col).collect()
-    chunked = run_query_chunks(
-        spark, q_rows, queries.select(query_id_col, query_vec_col).schema, max_query_rows,
-        lambda chunk: knn_ivfsq(
-            chunk, centroids, vmin, vmax, index_df, k, nprobe, space,
-            query_id_col, query_vec_col, refine_base, refine_factor, max_query_rows, id_filter,
-        ),
+    return knn_probed(
+        queries, centroids, index_df, k, nprobe, space, refine_base, refine_factor, id_filter,
+        _sq_distances, (vmin, vmax),
     )
-    if chunked is not None:
-        return chunked
-    qids = [r[query_id_col] for r in q_rows]
-    Q = np.array([r[query_vec_col] for r in q_rows], dtype=np.float64)
-    bc_q = spark.sparkContext.broadcast((qids, Q))
-    bc_r = spark.sparkContext.broadcast((vmin, vmax))
 
-    probes = rank_probes(queries, centroids, nprobe, query_id_col, query_vec_col).select(
-        "query_id", "cluster_id"
-    )
-    cand = apply_id_filter(F.broadcast(probes).join(index_df, on="cluster_id"), id_filter)
-    out_schema = scored_schema(queries.schema[query_id_col].dataType, index_df.schema["id"].dataType)
 
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_qids, Qm = bc_q.value
-        qpos = {q: i for i, q in enumerate(all_qids)}
-        q_sq = (Qm**2).sum(axis=1)
-        lo, hi = bc_r.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.frombuffer(b"".join(bytes(b) for b in pdf["codes"]), dtype=np.uint8)
-            X = _dequantize(codes.reshape(len(pdf), dim), lo, hi)
-            cols = np.array([qpos[q] for q in pdf["query_id"]])
-            # row-wise distance to each row's own query (candidates come
-            # pre-paired with a query by the probe join)
-            dot = np.einsum("ij,ij->i", X, Qm[cols])
-            d = distances_from_dots(space, dot, (X**2).sum(axis=1), q_sq[cols])
-            yield pd.DataFrame({"query_id": pdf["query_id"], "id": pdf["id"], "distance": d})
-
-    scored = cand.mapInPandas(_score, schema=out_schema)
-    if refine_base is None:
-        return topk_per_query(scored, k)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("query_vec")
-    )
-    return refine_exact(topk_per_query(scored, k * refine_factor), q, refine_base, k, space)
+def _sq_distances(pdf: pd.DataFrame, q: np.ndarray, space: str, model: tuple) -> np.ndarray:
+    """Distances of one batch of candidate rows (codes) to their queries
+    q: decode the SQ8 codes, then one dot per row (each candidate comes
+    pre-paired with its query by the probe join)."""
+    lo, hi = model
+    codes = np.frombuffer(b"".join(bytes(b) for b in pdf["codes"]), dtype=np.uint8)
+    X = _dequantize(codes.reshape(len(pdf), len(lo)), lo, hi)
+    dot = np.einsum("ij,ij->i", X, q)
+    return distances_from_dots(space, dot, (X**2).sum(axis=1), (q**2).sum(axis=1))

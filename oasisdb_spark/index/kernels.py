@@ -3,10 +3,15 @@
 Each numeric kernel exists once here so the tiers cannot drift apart:
 nearest-centroid assignment, distances from dot products, the per-batch
 top-k trim, the schema of scored rows, the exact re-rank of a
-shortlist, and the partitioned write of inverted lists.
+shortlist, and the partitioned write of inverted lists. The kNN kernels
+that collect and broadcast their queries share one query-batch path,
+per_query_batch.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -17,7 +22,41 @@ from pyspark.sql import types as T
 from oasisdb_spark.functions.distance import distance_expr
 from oasisdb_spark.index.flat import topk_per_query
 
-__all__ = ["nearest_centroids", "distances_from_dots", "local_topk", "scored_schema", "refine_exact", "write_lists"]
+__all__ = ["per_query_batch", "nearest_centroids", "distances_from_dots", "local_topk", "scored_schema", "refine_exact", "write_lists"]
+
+# Most queries one kernel pass collects and broadcasts: about 16 MB of
+# 64-d float32. A larger query frame runs as several passes, each its
+# own broadcast and scan, results unioned (SCALING.md).
+QUERY_BATCH_ROWS = 65_536
+
+
+def per_query_batch(
+    queries: DataFrame, search: Callable[[DataFrame, list, np.ndarray], DataFrame], hard_cap: int | None = None
+) -> DataFrame:
+    """Collect the (query_id, query_vec) frame once and run
+    search(frame, ids, vectors) on each batch of at most
+    QUERY_BATCH_ROWS queries, unioning the results: frame is the batch
+    as a (query_id, query_vec) DataFrame for the Spark side, ids and the
+    (n, dim) float64 vectors are the same rows on the driver. A frame
+    that fits one batch is passed on as it is; a larger one is
+    re-created batch by batch from the collected rows. hard_cap raises
+    instead when there are more queries than that."""
+    frame = queries.select("query_id", "query_vec")
+    rows, n = frame.collect(), QUERY_BATCH_ROWS
+    if hard_cap is not None and len(rows) > hard_cap:
+        raise ValueError(
+            f"query batch has {len(rows)} rows, over the caller's hard cap {hard_cap} — "
+            "brute scoring at this size is quadratic; use an index or raise the cap explicitly"
+        )
+
+    def batch(part: DataFrame, part_rows: list) -> DataFrame:
+        vectors = np.array([r["query_vec"] for r in part_rows], dtype=np.float64)
+        return search(part, [r["query_id"] for r in part_rows], vectors)
+
+    if len(rows) <= n:
+        return batch(frame, rows)
+    parts = [rows[lo : lo + n] for lo in range(0, len(rows), n)]
+    return reduce(DataFrame.unionByName, [batch(frame.sparkSession.createDataFrame(p, frame.schema), p) for p in parts])
 
 
 def nearest_centroids(x: np.ndarray, centroids: np.ndarray, p: int | None = None) -> np.ndarray:

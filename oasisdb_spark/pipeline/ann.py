@@ -26,11 +26,9 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from oasisdb_spark.index.flat import topk_per_query
-from oasisdb_spark.index.ivf import run_query_chunks
-from oasisdb_spark.index.kernels import distances_from_dots, local_topk, scored_schema
+from oasisdb_spark.index.kernels import distances_from_dots, local_topk, per_query_batch, scored_schema
 
 __all__ = ["knn_brute_batched"]
 
@@ -58,15 +56,11 @@ def knn_brute_batched(
     base: DataFrame,
     k: int,
     space: str = "l2",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "id",
-    vec_col: str = "vector",
-    max_query_rows: int = 65_536,
     gemm_dtype: str = "float32",
     hard_query_cap: int | None = None,
 ) -> DataFrame:
     """Exact kNN via broadcast queries + per-batch GEMM + two-level top-k.
+    queries has columns (query_id, query_vec), base has (id, vector).
 
     space: l2 (squared) | ip (-dot) | cos (1-cos) | hamming (#unequal
     components, distance.go:5-41 parity).
@@ -78,11 +72,8 @@ def knn_brute_batched(
     vectorized elementwise-inequality count. Both scan the base once
     with broadcast queries — same shape as the GEMM spaces.
 
-    max_query_rows bounds the broadcast: a query batch larger than this
-    runs as ceil(nq/max) chunks, each its own broadcast + base scan,
-    results unioned. At 64-d float32 the default keeps each broadcast
-    ~16 MB; the trade (extra base scans vs unbounded broadcast) is the
-    scale guard SCALING.md documents.
+    A query frame past kernels.QUERY_BATCH_ROWS runs as several
+    broadcast + base scan passes, results unioned (SCALING.md).
 
     gemm_dtype: 'float32' (default — half the memory traffic, 2x BLAS
     throughput; last-ulp distance noise ~1e-7 relative) or 'float64'
@@ -90,64 +81,47 @@ def knn_brute_batched(
     gate and a 1e-7 wobble could flip a rounding boundary, as
     mutual_knn_pairs does).
 
-    hard_query_cap: raise (instead of chunking) when the collected
-    query batch exceeds it — the loud-guard hook for callers whose
+    hard_query_cap: raise (instead of batching) when the collected
+    query frame exceeds it — the loud-guard hook for callers whose
     query set IS the base (mutual_knn_pairs' self-kNN): checking the
     length of the collect this kernel pays anyway costs no extra job.
     """
     if space not in ("l2", "ip", "cos", "hamming"):
         raise ValueError(f"knn_brute_batched supports l2/ip/cos/hamming, got {space!r}")
-    spark = base.sparkSession
-    q_rows = queries.select(query_id_col, query_vec_col).collect()
-    if hard_query_cap is not None and len(q_rows) > hard_query_cap:
-        raise ValueError(
-            f"knn_brute_batched: query batch has {len(q_rows)} rows, over the "
-            f"caller's hard cap {hard_query_cap} — brute scoring at this size "
-            "is quadratic; use the IVF composition or raise the cap explicitly"
-        )
-    chunked = run_query_chunks(
-        spark, q_rows, queries.select(query_id_col, query_vec_col).schema, max_query_rows,
-        lambda chunk: knn_brute_batched(
-            chunk, base, k, space, query_id_col, query_vec_col, id_col, vec_col, max_query_rows, gemm_dtype
-        ),
-    )
-    if chunked is not None:
-        return chunked
-    q_ids = [r[query_id_col] for r in q_rows]
+    b = base.select("id", "vector")
     _dt = np.float64 if gemm_dtype == "float64" else np.float32
-    Q = np.array([r[query_vec_col] for r in q_rows], dtype=_dt)
-    bc = spark.sparkContext.broadcast((q_ids, Q))
 
-    out_schema = scored_schema(queries.schema[query_id_col].dataType, base.schema[id_col].dataType)
-    b = base.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector"))
+    def search(frame: DataFrame, ids: list, vectors: np.ndarray) -> DataFrame:
+        bc = b.sparkSession.sparkContext.broadcast((ids, vectors.astype(_dt)))
 
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids, Qm = bc.value
-        q_sq = (Qm.astype(np.float64) ** 2).sum(axis=1)  # (nq,)
-        nq = len(qids)
-        q_binary = space == "hamming" and bool(np.isin(Qm, (0.0, 1.0)).all())
-        q_packed = _packbits64(Qm) if q_binary else None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf["vector"].tolist(), dtype=Qm.dtype)  # (nb, dim)
-            if space != "hamming":
-                G = (X @ Qm.T).astype(np.float64)  # (nb, nq) dot products
-                x_sq = (X.astype(np.float64) ** 2).sum(axis=1)
-                D = distances_from_dots(space, G, x_sq[:, None], q_sq[None, :])
-            elif q_binary and bool(np.isin(X, (0.0, 1.0)).all()):
-                # packed-bits path: XOR + popcount over uint64 words
-                D = _popcount64(_packbits64(X)[:, None, :] ^ q_packed[None, :, :])
-            else:
-                # general floats: elementwise-inequality count, chunked
-                # over queries to bound the (nb, chunk, dim) bool cube
-                step = max(1, (1 << 24) // max(1, X.shape[0] * X.shape[1]))
-                D = np.concatenate(
-                    [(X[:, None, :] != Qm[None, lo : lo + step, :]).sum(axis=2) for lo in range(0, nq, step)],
-                    axis=1,
-                )
-            yield local_topk(qids, pdf["id"].values, D.astype(np.float64, copy=False), k)
+        def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            qids, Qm = bc.value
+            q_sq = (Qm.astype(np.float64) ** 2).sum(axis=1)  # (nq,)
+            nq = len(qids)
+            q_binary = space == "hamming" and bool(np.isin(Qm, (0.0, 1.0)).all())
+            q_packed = _packbits64(Qm) if q_binary else None
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                X = np.array(pdf["vector"].tolist(), dtype=Qm.dtype)  # (nb, dim)
+                if space != "hamming":
+                    G = (X @ Qm.T).astype(np.float64)  # (nb, nq) dot products
+                    x_sq = (X.astype(np.float64) ** 2).sum(axis=1)
+                    D = distances_from_dots(space, G, x_sq[:, None], q_sq[None, :])
+                elif q_binary and bool(np.isin(X, (0.0, 1.0)).all()):
+                    # packed-bits path: XOR + popcount over uint64 words
+                    D = _popcount64(_packbits64(X)[:, None, :] ^ q_packed[None, :, :])
+                else:
+                    # general floats: elementwise-inequality count, chunked
+                    # over queries to bound the (nb, chunk, dim) bool cube
+                    step = max(1, (1 << 24) // max(1, X.shape[0] * X.shape[1]))
+                    D = np.concatenate(
+                        [(X[:, None, :] != Qm[None, lo : lo + step, :]).sum(axis=2) for lo in range(0, nq, step)],
+                        axis=1,
+                    )
+                yield local_topk(qids, pdf["id"].values, D.astype(np.float64, copy=False), k)
 
-    scored = b.mapInPandas(_score, schema=out_schema)
-    return topk_per_query(scored, k)
+        out_schema = scored_schema(frame.schema["query_id"].dataType, b.schema["id"].dataType)
+        return topk_per_query(b.mapInPandas(_score, schema=out_schema), k)
 
+    return per_query_batch(queries, search, hard_cap=hard_query_cap)

@@ -28,6 +28,7 @@ Distances are in-order float64 fold Column expressions
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -79,7 +80,6 @@ def mine_candidates_broadcast(
     row-identical to the batch cross-join path and the batch oracle
     applies. Supported spaces: l2 (squared), ip (-dot).
     """
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -441,7 +441,7 @@ def mutual_knn_pairs(
 
 def mutual_knn_pairs_ivf(
     base: DataFrame,
-    centroids_df: DataFrame,
+    centroids: np.ndarray,
     index_df: DataFrame,
     k: int,
     nprobe: int,
@@ -490,7 +490,7 @@ def mutual_knn_pairs_ivf(
     )
     # fetch k+1 (self rides along at distance 0), drop self, re-rank
     raw = knn_ivf(
-        q, centroids_df, index_df, k + 1, nprobe=nprobe, space=space,
+        q, centroids, index_df, k + 1, nprobe=nprobe, space=space,
         broadcast_probes=False, kernel=kernel,
     ).where(F.col("query_id") != F.col("id"))
     w = Window.partitionBy("query_id").orderBy(

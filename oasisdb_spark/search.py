@@ -62,8 +62,11 @@ class _Tier(NamedTuple):
 
     build(data, out_dir, params) writes the index files; load(spark,
     out_dir) reads them back as the tuple the tier's knn function takes
-    before k — (model..., lists); add(docs, out_dir) appends to the
-    lists; search(queries, index, k, _Search) runs the kNN. Flat keeps
+    before k — (model..., lists), where the model is numpy arrays for
+    every tier (IVF centroids; IVF-PQ centroids and codebooks; IVF-SQ
+    centroids and ranges; binq means) and lists is a DataFrame;
+    add(docs, out_dir, *model) appends docs to the lists against that
+    model; search(queries, index, k, _Search) runs the kNN. Flat keeps
     no index files (the collection IS the index, flat.go:14-20), so it
     has only build, and its searches take the exact scan."""
 
@@ -196,11 +199,11 @@ def add_to_index(catalog: Catalog, name: str, docs: DataFrame) -> None:
     if coll.index_version == 0 or tier.add is None:
         return
     d = catalog.index_path(name, coll.index_version)
+    *model, lists = tier.load(catalog.spark, d)
     # genuinely-new ids only: an id already in the lists keeps its built
     # vector until the next rebuild (documented upsert-staleness
     # semantics) — appending it again would duplicate it in the index
-    existing = tier.load(catalog.spark, d)[-1].select("id")
-    tier.add(docs.join(existing, on="id", how="left_anti"), d)
+    tier.add(docs.join(lists.select("id"), on="id", how="left_anti"), d, *model)
 
 
 def _without_tombstones(catalog: Catalog, name: str, lists: DataFrame) -> DataFrame:

@@ -4,6 +4,7 @@ and checks the scale-critical properties:
 - knn_flat:       query side broadcast (no shuffle of the base table)
 - vector_lookup:  id predicate pushed to the parquet scan
 - knn_ivf:        probe join is broadcast + reads the partitioned index
+- knn_ivfpq/sq:   the same probe shape over their code lists
 - q1:             partial aggregation (map-side combine) before shuffle
 - text_stats:     whole-stage codegen covers the projection
 - q3:             broadcast hash joins for the dim tables
@@ -123,6 +124,25 @@ def main() -> None:
         knn_ivf(q, cent, lists, 10, nprobe=4),
         ["BroadcastHashJoin", "dynamicpruningexpression(cluster_id"],
     )
+
+    # 6b. the quantized IVF tiers share knn_ivf's probe shape: the probe
+    # join is broadcast and the cluster_id-partitioned lists scan is
+    # pruned to the probed clusters
+    from oasisdb_spark.index.ivfpq import build_ivfpq, knn_ivfpq
+    from oasisdb_spark.index.ivfsq import build_ivfsq, knn_ivfsq
+
+    for name, knn, index, codes in (
+        ("knn_ivfpq", knn_ivfpq, build_ivfpq(base, nlist=8, m=8, out_dir=os.path.join(d, "pq")),
+         "codes:array<smallint>"),
+        ("knn_ivfsq", knn_ivfsq, build_ivfsq(base, nlist=8, out_dir=os.path.join(d, "sq")),
+         "codes:binary"),
+    ):
+        failures += not audit(
+            f"{name} broadcast probes + dynamic partition pruning",
+            knn(q, *index, 10, nprobe=4),
+            ["BroadcastExchange", "BroadcastHashJoin [cluster_id", "dynamicpruningexpression(cluster_id",
+             f"ReadSchema: struct<id:bigint,{codes}>"],
+        )
 
     # 7. exact_dedup: partial agg on the 60-bit hash, shuffling only (hash, id)
     plan = plan_of(m.queries()["exact_dedup"](spark, sf_dir))

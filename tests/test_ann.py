@@ -62,20 +62,44 @@ def test_hamming_packed_binary_matches_flat(spark, embeddings):
     assert fast == slow
 
 
-def test_gemm_query_chunking_matches_unchunked(spark, embeddings):
-    """max_query_rows smaller than the batch → chunked passes union to
-    the identical result set."""
-    from pyspark.sql import functions as F
+def _chunk_search(kernel, base):
+    """The kNN call for kernel over base, as a function of the queries."""
+    from oasisdb_spark.index.binq import build_binq, knn_binq
+    from oasisdb_spark.index.ivfpq import build_ivfpq, knn_ivfpq
+    from oasisdb_spark.index.ivfsq import build_ivfsq, knn_ivfsq
 
-    from oasisdb_spark.pipeline.ann import knn_brute_batched
+    if kernel == "knn_brute_batched":
+        return lambda q: knn_brute_batched(q, base, k=5)
+    if kernel == "knn_ivfpq":
+        index = build_ivfpq(base, nlist=4, m=8)
+        return lambda q: knn_ivfpq(q, *index, k=5, nprobe=2, refine_base=base)
+    if kernel == "knn_ivfsq":
+        index = build_ivfsq(base, nlist=4)
+        return lambda q: knn_ivfsq(q, *index, k=5, nprobe=2)
+    index = build_binq(base)
+    return lambda q: knn_binq(q, *index, k=5, refine_base=base)
 
-    base = embeddings.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vector"))
-    q = embeddings.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    whole = {(r["query_id"], r["rank"]): r["id"] for r in knn_brute_batched(q, base, k=5).collect()}
-    chunked = {
-        (r["query_id"], r["rank"]): r["id"]
-        for r in knn_brute_batched(q, base, k=5, max_query_rows=3).collect()
-    }
-    assert chunked == whole
+
+@pytest.mark.parametrize("kernel", ["knn_brute_batched", "knn_ivfpq", "knn_ivfsq", "knn_binq"])
+def test_query_chunking_matches_unchunked(spark, embeddings, monkeypatch, kernel):
+    """A query frame larger than kernels.QUERY_BATCH_ROWS runs as
+    several collect-and-broadcast passes whose union equals the one-pass
+    result in ids, ranks and distances. The brute float32 GEMM is the one
+    exception on distances: BLAS picks its kernel by matrix shape, so a
+    one-query pass may differ from a ten-query pass in the last float32
+    ulp; the other kernels score each row on its own and match exactly."""
+    from oasisdb_spark.index import kernels
+
+    search = _chunk_search(kernel, _base(embeddings))
+    q = _q(embeddings, 10)
+
+    def rows():
+        return sorted((r["query_id"], r["rank"], r["id"], r["distance"]) for r in search(q).collect())
+
+    whole = rows()
+    monkeypatch.setattr(kernels, "QUERY_BATCH_ROWS", 3)
+    chunked = rows()
+    assert len(whole) == 10 * 5
+    assert [r[:3] for r in chunked] == [r[:3] for r in whole]
+    rel = 1e-6 if kernel == "knn_brute_batched" else 0
+    assert [r[3] for r in chunked] == pytest.approx([r[3] for r in whole], rel=rel, abs=0)

@@ -177,8 +177,8 @@ def test_null_vector_and_null_id_rejected_at_ingest(catalog, spark):
 
 
 def test_metadata_calls_run_no_spark_jobs(spark, tmp_path):
-    """Catalog lookups and a result-cache hit are driver-only: the
-    serving path pays no Spark job for metadata."""
+    """Catalog lookups, planning a document read and a result-cache hit
+    are driver-only: the serving path pays no Spark job for metadata."""
     client = OasisClient(spark, str(tmp_path / "wh"))
     client.create_collection("c", 4, index_type="ivf_flat")
     client.batch_upsert_documents(
@@ -190,6 +190,7 @@ def test_metadata_calls_run_no_spark_jobs(spark, tmp_path):
         "get_collection": lambda: cat.get_collection("c"),
         "list_collections": cat.list_collections,
         "set_params": lambda: cat.set_params("c", {"nprobe": 3}),
+        "read_documents": lambda: cat.read_documents("c"),
         "cache_hit": lambda: client.search_vectors("c", [1.0, 0.0, 0.0, 0.0], limit=2),
     }
     try:

@@ -64,7 +64,7 @@ def test_ivf_recall_at_10(spark, embeddings):
 
 def test_ivf_persist_roundtrip(spark, tiny_vectors, tmp_path):
     cent, idx = build_ivf(tiny_vectors, nlist=4, out_dir=str(tmp_path / "ivf"))
-    assert cent.count() == 4
+    assert cent.shape == (4, 4) and cent.dtype == np.float32
     assert idx.count() == 20
     # partitioned layout on disk = on-disk inverted lists
     assert any(p.name.startswith("cluster_id=") for p in (tmp_path / "ivf" / "lists").iterdir())
@@ -80,7 +80,7 @@ def test_ivf_add_after_build(spark, tiny_vectors, tmp_path):
     rest = tiny_vectors.filter(F.col("id").cast("int") > 10)
     d = str(tmp_path / "ivf")
     build_ivf(first, nlist=4, out_dir=d)
-    append_ivf(rest, d)
+    append_ivf(rest, d, load_ivf(spark, d)[0])
     cent, idx = load_ivf(spark, d)
     assert idx.count() == 20
     q = spark.createDataFrame(
@@ -135,7 +135,7 @@ def test_knn_ivf_id_filter_exact_under_full_probe(spark, embeddings):
     }
 
 
-def test_ivf_search_stats_counts_probed_candidates(spark, embeddings):
+def test_ivf_search_stats_counts_probed_candidates(spark, embeddings, tmp_path):
     """Counters parity (reference HNSW runtime stats): n_candidates is
     the exact probed-list volume; full probe counts the whole base."""
     from pyspark.sql import functions as F
@@ -144,7 +144,9 @@ def test_ivf_search_stats_counts_probed_candidates(spark, embeddings):
 
     base = embeddings.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vector"))
     n = base.count()
-    cent, idx = build_ivf(base, nlist=4)
+    _, idx = build_ivf(base, nlist=4, out_dir=str(tmp_path / "ivf"))
+    # ivf_search_stats takes the on-disk centroids table as a DataFrame
+    cent = spark.read.parquet(str(tmp_path / "ivf" / "centroids"))
     q = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )

@@ -100,7 +100,7 @@ def test_ivfpq_add_after_build(spark, embeddings, tmp_path):
     rest = base.filter(F.col("id").cast("int") >= 150)
     d = str(tmp_path / "pq")
     build_ivfpq(first, nlist=4, m=8, out_dir=d)
-    append_ivfpq(rest, d)
+    append_ivfpq(rest, d, *load_ivfpq(spark, d)[:2])
     cents, books, idx = load_ivfpq(spark, d)
     assert idx.count() == base.count()
     q = (

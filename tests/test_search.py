@@ -106,6 +106,38 @@ def test_add_to_index_incremental(spark, tmp_path, embeddings):
     assert res[0]["id"] == "180" and abs(res[0]["distance"]) < 1e-6
 
 
+def test_add_to_index_reads_the_index_once(spark, tmp_path, embeddings, monkeypatch):
+    """add_to_index loads the built index once and hands its model to the
+    tier's append: Spark reads the index's lists once (for the anti-join
+    of existing ids) and never its centroids table, which load_ivf reads
+    on the driver."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from oasisdb_spark.index.ivf import load_ivf
+    from oasisdb_spark.search import add_to_index
+
+    cat = Catalog(spark, str(tmp_path / "once"))
+    cat.create_collection("once", dimension=64, index_type="ivf_flat", params={"nlist": 4})
+    docs = embeddings.select(F.col("vec_id").cast("string").alias("id"), F.col("embedding").alias("vector"))
+    cat.upsert_documents("once", docs.filter(F.col("vec_id") < 150))
+    v = build_index(cat, "once")
+    new = docs.filter(F.col("vec_id").between(150, 159))
+    cat.upsert_documents("once", new)
+    reads, parquet = [], DataFrameReader.parquet
+
+    def counting_parquet(self, *paths, **kwargs):
+        reads.extend(paths)
+        return parquet(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+    add_to_index(cat, "once", new)
+    d = cat.index_path("once", v)
+    assert [p for p in reads if p.startswith(d)] == [os.path.join(d, "lists")]
+    assert load_ivf(spark, d)[1].count() == 160
+
+
 def test_indexed_search_excludes_deleted(spark, tmp_path, embeddings):
     """Deleting a document after the index is built must remove it from
     indexed search results too (the reference leaves it in — IVF delete
