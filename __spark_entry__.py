@@ -292,8 +292,9 @@ def _knn_hamming_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-matrix exact kNN (pipeline/ann.py) — the GEMM scale path.
-    Distances rounded to 3dp for the oracle (GEMM vs in-order-fold
-    summation differ in the last ulps)."""
+    The GEMM picks the survivors and the kernel emits their in-order
+    float64 fold, knn_flat's distance; rounded to 3dp, as its
+    oracle_sql twin is."""
     from oasisdb_spark.pipeline.ann import knn_brute_batched
 
     res = knn_brute_batched(_emb_queries(spark, sf_dir, 10), _emb_base(spark, sf_dir), k=10)
@@ -4485,16 +4486,14 @@ def _mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions arrive => count 2) — no self-join of the neighbor
     frame. The oracle replays (distance, id)-ranked windows over
     in-order float64 folds; distances round to 3dp on both sides (the
-    knn_brute GEMM-twin contract — identical pair sets, last-ulp
-    noise)."""
+    knn_brute output convention — the kernel emits the same fold)."""
     from oasisdb_spark.pipeline.mining import mutual_knn_pairs
 
     emb = _table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
     )
     out = mutual_knn_pairs(emb, k=5, space="l2", scorer="gemm")
-    # GEMM twin contract (same as knn_brute): identical pair sets,
-    # last-ulp distance noise — round to 3dp for the hash gate
+    # same output convention as knn_brute: round to 3dp for the hash gate
     return out.select(
         "id_a", "id_b", F.round(F.col("distance"), 3).alias("distance")
     )

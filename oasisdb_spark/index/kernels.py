@@ -1,11 +1,11 @@
 """Vector kernels shared by every index tier and the brute-force scan.
 
 Each numeric kernel exists once here so the tiers cannot drift apart:
-nearest-centroid assignment, distances from dot products, the per-batch
-top-k trim, the schema of scored rows, the exact re-rank of a
-shortlist, and the partitioned write of inverted lists. The kNN kernels
-that collect and broadcast their queries share one query-batch path,
-per_query_batch.
+nearest-centroid assignment, distances from dot products, exact
+distances by the in-order column fold, the per-batch top-k trim, the
+schema of scored rows, the exact re-rank of a shortlist, and the
+partitioned write of inverted lists. The kNN kernels that collect and
+broadcast their queries share one query-batch path, per_query_batch.
 """
 
 from __future__ import annotations
@@ -22,10 +22,10 @@ from pyspark.sql import types as T
 from oasisdb_spark.functions.distance import distance_expr
 from oasisdb_spark.index.flat import topk_per_query
 
-__all__ = ["per_query_batch", "nearest_centroids", "distances_from_dots", "local_topk", "scored_schema", "refine_exact", "write_lists"]
+__all__ = ["per_query_batch", "nearest_centroids", "distances_from_dots", "fold_distances", "local_topk", "scored_schema", "refine_exact", "write_lists"]
 
-# Most queries one kernel pass collects and broadcasts: about 16 MB of
-# 64-d float32. A larger query frame runs as several passes, each its
+# Most queries one kernel pass collects and broadcasts: about 32 MB of
+# 64-d float64. A larger query frame runs as several passes, each its
 # own broadcast and scan, results unioned (SCALING.md).
 QUERY_BATCH_ROWS = 65_536
 
@@ -86,7 +86,34 @@ def distances_from_dots(space: str, dots: np.ndarray, x_sq: np.ndarray, q_sq: np
         return np.where(denom > 0, 1.0 - dots / denom, 1.0)
 
 
-def local_topk(qids, ids: np.ndarray, D: np.ndarray, k: int) -> pd.DataFrame:
+def fold_distances(space: str, q: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Exact l2 (squared) / ip (−dot) / cos (1−cos, zero norm → 1.0)
+    distance of each row pair (q[i], x[i]), as distance_expr(space, q, x)
+    computes it: float64, summed one column at a time in order
+    (acc += q[:, j] * x[:, j]). That fold is bit-identical to Spark's
+    aggregate; numpy's .sum(axis=1) adds in another order and is not."""
+    q, x = q.astype(np.float64, copy=False), x.astype(np.float64, copy=False)
+
+    def fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+        acc = np.zeros(len(a))
+        for j in range(a.shape[1]):
+            acc += a[:, j] * b[:, j]
+        return acc
+
+    if space == "l2":
+        d = q - x
+        return fold(d, d)
+    dots = fold(q, x)
+    if space == "ip":
+        return -dots
+    nq, nx = np.sqrt(fold(q, q)), np.sqrt(fold(x, x))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where((nq == 0.0) | (nx == 0.0), 1.0, 1.0 - dots / (nq * nx))
+
+
+def local_topk(
+    qids, ids: np.ndarray, D: np.ndarray, k: int, rescore: Callable[[np.ndarray, np.ndarray], np.ndarray] | None = None
+) -> pd.DataFrame:
     """The k smallest of each column of an (nb, nq) distance matrix, in
     exact (distance, id) order, as (query_id, id, distance) rows.
 
@@ -94,7 +121,11 @@ def local_topk(qids, ids: np.ndarray, D: np.ndarray, k: int) -> pd.DataFrame:
     value (O(nb) per query, no full sort), every row strictly below it
     is kept, and the rows tied at it fill the rest in id order. So the
     rows that survive to the global (distance, id) merge are exactly the
-    ones a full sort would keep. NaN distances sort last, as in Spark."""
+    ones a full sort would keep. NaN distances sort last, as in Spark.
+
+    rescore(rows, cols), when given, returns the distances emitted for
+    the kept positions of D (rows index the batch as passed in) in place
+    of D's own: D then only chooses the survivors."""
     order = np.argsort(ids, kind="stable")
     ids, D = ids[order], D[order]
     kk = min(k, len(ids))
@@ -104,9 +135,8 @@ def local_topk(qids, ids: np.ndarray, D: np.ndarray, k: int) -> pd.DataFrame:
     tied = (D == kth) | (kth_nan & nan)
     keep = below | (tied & (np.cumsum(tied, axis=0) <= kk - below.sum(axis=0)))
     cols, rows = np.nonzero(keep.T)
-    return pd.DataFrame(
-        {"query_id": np.asarray(qids)[cols], "id": ids[rows], "distance": D[rows, cols]}
-    )
+    distance = D[rows, cols] if rescore is None else rescore(order[rows], cols)
+    return pd.DataFrame({"query_id": np.asarray(qids)[cols], "id": ids[rows], "distance": distance})
 
 
 def scored_schema(

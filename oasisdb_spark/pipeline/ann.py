@@ -15,8 +15,9 @@ Three tiers (SURVEY.md Q3-Q6 capability, re-shaped for 100 TB):
 
 knn_flat (index/flat.py) remains the expression-based executable spec —
 bit-reproducible against SQL oracles; this module is the fast twin
-(float32 GEMM, last-ulp differences from fold order, identical id sets
-on non-degenerate data).
+(a float32 GEMM picks each batch's survivors, which are then re-scored
+by the same in-order float64 fold, so ids, ranks and distances equal
+knn_flat's on non-degenerate data).
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from oasisdb_spark.index.flat import topk_per_query
-from oasisdb_spark.index.kernels import distances_from_dots, local_topk, per_query_batch, scored_schema
+from oasisdb_spark.index.kernels import distances_from_dots, fold_distances, local_topk, per_query_batch, scored_schema
 
 __all__ = ["knn_brute_batched"]
 
@@ -76,10 +77,13 @@ def knn_brute_batched(
     broadcast + base scan passes, results unioned (SCALING.md).
 
     gemm_dtype: 'float32' (default — half the memory traffic, 2x BLAS
-    throughput; last-ulp distance noise ~1e-7 relative) or 'float64'
-    (noise ~1e-14 — use when downstream ROUNDS distances for a hash
-    gate and a 1e-7 wobble could flip a rounding boundary, as
-    mutual_knn_pairs does).
+    throughput) or 'float64'. It decides only which rows of each Arrow
+    batch survive a near-tie at the k-th place: the GEMM distances pick
+    each batch's top k, and the kept (row, query) pairs are re-scored by
+    kernels.fold_distances, the float64 in-order fold of knn_flat. So an
+    l2 / ip / cos distance is knn_flat's bit for bit, whatever the dtype
+    or the number of queries in the BLAS call (OpenBLAS picks its kernel
+    by call shape, so GEMM values would differ between batch sizes).
 
     hard_query_cap: raise (instead of batching) when the collected
     query frame exceeds it — the loud-guard hook for callers whose
@@ -92,22 +96,26 @@ def knn_brute_batched(
     _dt = np.float64 if gemm_dtype == "float64" else np.float32
 
     def search(frame: DataFrame, ids: list, vectors: np.ndarray) -> DataFrame:
-        bc = b.sparkSession.sparkContext.broadcast((ids, vectors.astype(_dt)))
+        # float64 as collected: the exact re-score needs the queries unrounded
+        bc = b.sparkSession.sparkContext.broadcast((ids, vectors))
 
         def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids, Qm = bc.value
-            q_sq = (Qm.astype(np.float64) ** 2).sum(axis=1)  # (nq,)
+            qids, Q = bc.value
+            Qm = Q.astype(_dt)  # the GEMM operand
+            q_sq = (Q**2).sum(axis=1)  # (nq,)
             nq = len(qids)
-            q_binary = space == "hamming" and bool(np.isin(Qm, (0.0, 1.0)).all())
-            q_packed = _packbits64(Qm) if q_binary else None
+            q_binary = space == "hamming" and bool(np.isin(Q, (0.0, 1.0)).all())
+            q_packed = _packbits64(Q) if q_binary else None
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                X = np.array(pdf["vector"].tolist(), dtype=Qm.dtype)  # (nb, dim)
+                X = np.array(pdf["vector"].tolist(), dtype=np.float64)  # (nb, dim)
+                rescore = None
                 if space != "hamming":
-                    G = (X @ Qm.T).astype(np.float64)  # (nb, nq) dot products
-                    x_sq = (X.astype(np.float64) ** 2).sum(axis=1)
-                    D = distances_from_dots(space, G, x_sq[:, None], q_sq[None, :])
+                    # the GEMM picks each query's survivors; the fold scores them
+                    G = (X.astype(_dt, copy=False) @ Qm.T).astype(np.float64)  # (nb, nq) dot products
+                    D = distances_from_dots(space, G, (X**2).sum(axis=1)[:, None], q_sq[None, :])
+                    rescore = lambda rows, cols: fold_distances(space, Q[cols], X[rows])
                 elif q_binary and bool(np.isin(X, (0.0, 1.0)).all()):
                     # packed-bits path: XOR + popcount over uint64 words
                     D = _popcount64(_packbits64(X)[:, None, :] ^ q_packed[None, :, :])
@@ -116,10 +124,10 @@ def knn_brute_batched(
                     # over queries to bound the (nb, chunk, dim) bool cube
                     step = max(1, (1 << 24) // max(1, X.shape[0] * X.shape[1]))
                     D = np.concatenate(
-                        [(X[:, None, :] != Qm[None, lo : lo + step, :]).sum(axis=2) for lo in range(0, nq, step)],
+                        [(X[:, None, :] != Q[None, lo : lo + step, :]).sum(axis=2) for lo in range(0, nq, step)],
                         axis=1,
                     )
-                yield local_topk(qids, pdf["id"].values, D.astype(np.float64, copy=False), k)
+                yield local_topk(qids, pdf["id"].values, D.astype(np.float64, copy=False), k, rescore)
 
         out_schema = scored_schema(frame.schema["query_id"].dataType, b.schema["id"].dataType)
         return topk_per_query(b.mapInPandas(_score, schema=out_schema), k)

@@ -375,9 +375,10 @@ def mutual_knn_pairs(
     with dimension) or 'expr' (the executable Column spec — distances
     are in-order float64 folds, bit-reproducible against SQL; the
     oracle dialect). Both select identical neighbor ID SETS on
-    non-degenerate data (GEMM differs in the last ulps — the knn_flat
-    vs knn_brute twin contract); the row-identity is test-pinned on
-    the fixture.
+    non-degenerate data, with equal distances: the GEMM only picks each
+    batch's survivors, which knn_brute_batched re-scores by the same
+    in-order float64 fold (the knn_flat vs knn_brute twin contract);
+    the row-identity is test-pinned on the fixture.
 
     ``max_base_rows``: BOTH scorers are brute self-kNN — O(N²) distance
     computations by definition — so the base is loudly capped (the

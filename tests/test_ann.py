@@ -84,10 +84,10 @@ def _chunk_search(kernel, base):
 def test_query_chunking_matches_unchunked(spark, embeddings, monkeypatch, kernel):
     """A query frame larger than kernels.QUERY_BATCH_ROWS runs as
     several collect-and-broadcast passes whose union equals the one-pass
-    result in ids, ranks and distances. The brute float32 GEMM is the one
-    exception on distances: BLAS picks its kernel by matrix shape, so a
-    one-query pass may differ from a ten-query pass in the last float32
-    ulp; the other kernels score each row on its own and match exactly."""
+    result in ids, ranks and distances. The brute float32 GEMM is no
+    exception: BLAS picks its kernel by matrix shape, but the GEMM only
+    picks the survivors, which are re-scored by the in-order fold; the
+    other kernels score each row on its own."""
     from oasisdb_spark.index import kernels
 
     search = _chunk_search(kernel, _base(embeddings))
