@@ -278,9 +278,9 @@ def _knn_lsh(spark: SparkSession, sf_dir: str, num_hash_tables: int = 16) -> Dat
 
 def _knn_hamming_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming-space SCALE path: sign-binarized vectors → packed-uint64
-    XOR + popcount batch kernel (pipeline/ann.py) — 64 components per
-    compared word, base scanned once, queries broadcast. Integer
-    distances, so the SQL oracle matches exactly."""
+    XOR + popcount block kernel (index/kernels.py block_topk) — 64
+    components per compared word, base scanned once, queries broadcast.
+    Integer distances, so the SQL oracle matches exactly."""
     from oasisdb_spark.pipeline.ann import knn_brute_batched
 
     binarize = lambda c: F.transform(c, lambda x: F.when(x > 0, F.lit(1.0)).otherwise(F.lit(0.0)).cast("float"))
@@ -4492,23 +4492,21 @@ def _mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
     )
-    out = mutual_knn_pairs(emb, k=5, space="l2", scorer="gemm")
+    out = mutual_knn_pairs(emb, k=5, space="l2")
     # same output convention as knn_brute: round to 3dp for the hash gate
     return out.select(
         "id_a", "id_b", F.round(F.col("distance"), 3).alias("distance")
     )
 
 
-def _mutual_knn_pairs_ivf(
-    spark: SparkSession, sf_dir: str, nprobe: int = 16, kernel: str = "expr"
-) -> DataFrame:
+def _mutual_knn_pairs_ivf(spark: SparkSession, sf_dir: str, nprobe: int = 16) -> DataFrame:
     """Reciprocal kNN pairs over the IVF index — the sub-quadratic
     composition for bases the brute scan must not touch (VERDICT r06
     #3; pipeline/mining.py mutual_knn_pairs_ivf): self-kNN as the
-    probe-pruned candidate join with the probe edge list NOT broadcast
-    (whole-base query set → cluster_id shuffle join, co-located with
-    the index partitioning), then the same normalize-and-count
-    mutuality tail. Driver entry in EXACT mode (nprobe=nlist=16): the
+    probe-pruned IVF search with the probe edge list NOT broadcast
+    (whole-base query set → cogrouped with the inverted lists on
+    cluster_id, one GEMM per cluster re-scored by the in-order fold),
+    then the same normalize-and-count mutuality tail. Driver entry in EXACT mode (nprobe=nlist=16): the
     full-probe shortlist is the true top-k, so the pair set equals the
     brute GEMM entry's and the SAME windowed-L2 SQL oracle applies
     (the hard_negatives_ivf / _knn_ivf full-probe ≡ exact trick). The
@@ -4521,7 +4519,7 @@ def _mutual_knn_pairs_ivf(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
     )
     cent, idx = _ivf_memo(spark, sf_dir)
-    out = mutual_knn_pairs_ivf(emb, cent, idx, k=5, nprobe=nprobe, kernel=kernel)
+    out = mutual_knn_pairs_ivf(emb, cent, idx, k=5, nprobe=nprobe)
     return out.select(
         "id_a", "id_b", F.round(F.col("distance"), 3).alias("distance")
     )
@@ -5844,15 +5842,10 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # mutual-kNN's scale path: probe-pruned self-kNN (nprobe=4) +
         # the shared mutuality tail — sub-quadratic vs the guarded GEMM
         # default; the exact tier is the driver's mutual_knn_pairs_ivf
-        # entry (full-probe, kernel='expr' for the oracle), which shares
-        # this code path. The bench plan uses the cogrouped per-cluster
-        # GEMM kernel: whole-base probes mean ~|base|²·nprobe/nlist
-        # candidate rows, where the interpreted fold expression is the
-        # bottleneck (sf0.1 min-of-2: expr 12.0 s, Arrow row-kernel
-        # 5.0 s, cogrouped GEMM measured below in BENCH files)
-        "mutual_knn_pairs_ivf_probe": lambda s, d: _mutual_knn_pairs_ivf(
-            s, d, nprobe=4, kernel="gemm"
-        ),
+        # entry (full-probe), which shares this code path: the
+        # cogrouped per-cluster GEMM, since whole-base probes mean
+        # ~|base|²·nprobe/nlist candidate rows
+        "mutual_knn_pairs_ivf_probe": lambda s, d: _mutual_knn_pairs_ivf(s, d, nprobe=4),
         # DSIR's Column/equi-join executable spec (the entry runs the
         # fused Arrow scorer — row-identical, test-pinned, ~5x faster;
         # same economics as minhash_signature_expr vs the fused frame)

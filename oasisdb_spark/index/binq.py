@@ -36,8 +36,7 @@ from pyspark.sql import types as T
 
 from oasisdb_spark.index.flat import topk_per_query
 from oasisdb_spark.index.ivf import apply_id_filter, deterministic_sample
-from oasisdb_spark.index.kernels import local_topk, per_query_batch, refine_exact, scored_schema
-from oasisdb_spark.pipeline.ann import _packbits64, _popcount64
+from oasisdb_spark.index.kernels import local_topk, packbits64, per_query_batch, popcount64, refine_exact, scored_schema
 
 __all__ = ["train_binq", "encode_binq", "build_binq", "load_binq", "append_binq", "knn_binq"]
 
@@ -59,7 +58,7 @@ def _pack_rows(X: np.ndarray, means: np.ndarray) -> np.ndarray:
     """(n, dim) floats → (n, ceil(dim/64)) int64 code words (sign bits
     vs per-dim means; int64 view because Spark has no unsigned type —
     XOR/popcount are bit-level, signedness never matters)."""
-    return _packbits64((X > means[None, :]).astype(np.float64)).view(np.int64)
+    return packbits64((X > means[None, :]).astype(np.float64)).view(np.int64)
 
 
 def encode_binq(
@@ -149,7 +148,9 @@ def knn_binq(
     codes = apply_id_filter(code_df, id_filter)
 
     def search(frame: DataFrame, ids: list, vectors: np.ndarray) -> DataFrame:
-        q_codes = _pack_rows(vectors.astype(np.float32), np.ascontiguousarray(means, dtype=np.float32))
+        # reshape: an empty query frame collects a (0,) array
+        q = vectors.reshape(len(ids), len(means)).astype(np.float32)
+        q_codes = _pack_rows(q, np.ascontiguousarray(means, dtype=np.float32))
         bc_q = codes.sparkSession.sparkContext.broadcast((np.array(ids, dtype=object), q_codes))
         out_schema = scored_schema(
             frame.schema["query_id"].dataType, codes.schema["id"].dataType, T.LongType()
@@ -163,7 +164,7 @@ def knn_binq(
                     continue
                 code = np.array(pdf["code"].tolist(), dtype=np.int64).view(np.uint64)
                 # (nb, nq) hamming distances via XOR + popcount
-                D = _popcount64(code[:, None, :] ^ qc64[None, :, :])
+                D = popcount64(code[:, None, :] ^ qc64[None, :, :])
                 yield local_topk(ids_arr, pdf["id"].values, D, shortlist)
 
         top = topk_per_query(codes.mapInPandas(_scan, schema=out_schema), shortlist)

@@ -36,12 +36,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from oasisdb_spark.functions.distance import SPACES, distance_expr
 from oasisdb_spark.index.flat import topk_per_query
-from oasisdb_spark.index.kernels import distances_from_dots, local_topk, nearest_centroids
+from oasisdb_spark.index.kernels import block_topk, nearest_centroids
 from oasisdb_spark.index.kernels import per_query_batch, refine_exact, scored_schema, write_lists
 from oasisdb_spark.index.kmeans import kmeans_fit
 
-__all__ = ["train_centroids", "assign_clusters", "build_ivf", "load_ivf", "append_ivf", "knn_ivf", "knn_probed", "rank_probes", "deterministic_sample", "ivf_search_stats"]
+__all__ = ["train_centroids", "assign_clusters", "build_ivf", "load_ivf", "append_ivf", "knn_ivf", "knn_ivf_cogrouped", "knn_probed", "rank_probes", "deterministic_sample", "ivf_search_stats"]
 
 DEFAULT_NLIST = 100  # const.go:26-30
 DEFAULT_NPROBE = 10
@@ -215,91 +216,64 @@ def knn_ivf(
     k: int,
     nprobe: int = DEFAULT_NPROBE,
     space: str = "l2",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    kernel: str = "expr",
     id_filter: DataFrame | None = None,
-    broadcast_probes: bool = True,
 ) -> DataFrame:
-    """IVF search (ivf.go:175-228): probe-pruned equi-join + exact
-    distance on the candidates + per-query top-k.
+    """IVF search (ivf.go:175-228): the broadcast probe edge list
+    equi-joins the partition-pruned lists, each candidate is scored by
+    the in-order fold expression (distance_expr, oracle-bit-exact), then
+    the per-query top-k. queries has columns (query_id, query_vec).
 
     Note: probe ranking always uses L2 to centroids (as the reference
     does); the candidate re-ranking uses `space`.
-
-    kernel: 'expr' = oracle-bit-exact fold expression (default, fine
-    while nprobe/nlist keeps candidates small); 'gemm' = cogrouped
-    per-cluster GEMM (l2/ip/cos) — probes and index cogroup on
-    cluster_id and each cluster scores as ONE matrix multiply with a
-    local top-k trim, so each base vector crosses Arrow once per
-    CLUSTER instead of once per candidate row (the right shape for
-    table-sized query sets like whole-base self-kNN). GEMM carries
-    the usual last-ulp summation noise vs the fold expression — keep
-    oracle-gated runs on 'expr'.
 
     id_filter: optional one-column (id) frame — filtered ANN
     (apply_id_filter). With nprobe=nlist this is exact filtered kNN; at
     partial probes it inherits IVF recall, and selective filters warrant
     a higher nprobe (the standard filtered-ANN tradeoff).
 
-    broadcast_probes: True (default) broadcasts the probe edge list —
-    right for interactive query batches (|queries|·nprobe rows, KBs–MBs).
-    Set False when the query set is table-sized (e.g. whole-base
-    self-kNN in mutual_knn_pairs_ivf): the candidate join then shuffles
-    on cluster_id, co-located with the index's cluster_id partitioning,
-    instead of broadcasting a base-sized frame.
+    For a table-sized query set (whole-base self-kNN) use
+    knn_ivf_cogrouped, which returns the same rows.
     """
-    from oasisdb_spark.functions.distance import distance_expr
-
-    if kernel not in ("expr", "gemm"):
-        raise ValueError(f"knn_ivf: kernel must be expr|gemm, got {kernel!r}")
-    probes = rank_probes(queries, centroids, nprobe, query_id_col, query_vec_col)
-    if kernel == "gemm":
-        return _knn_ivf_gemm(probes, index_df, k, space, id_filter)
-    if broadcast_probes:
-        probes = F.broadcast(probes)
+    probes = F.broadcast(rank_probes(queries, centroids, nprobe))
     cand = apply_id_filter(probes.join(index_df, on="cluster_id"), id_filter)
     scored = cand.select("query_id", "id", distance_expr(space, "query_vec", "vector").alias("distance"))
     return topk_per_query(scored, k)
 
 
-def _knn_ivf_gemm(
-    probes: DataFrame,
+def knn_ivf_cogrouped(
+    queries: DataFrame,
+    centroids: np.ndarray,
     index_df: DataFrame,
     k: int,
-    space: str,
-    id_filter: DataFrame | None,
+    nprobe: int = DEFAULT_NPROBE,
+    space: str = "l2",
 ) -> DataFrame:
-    """The cogrouped per-cluster GEMM scorer behind knn_ivf's
-    kernel='gemm': probes (query_id, query_vec, cluster_id) cogroup
-    with the inverted lists on cluster_id; each cluster batch scores as
-    one float64 matrix multiply and emits only its local top-k per
-    query (candidates never materialize as rows), then the global
-    topk_per_query window merges the per-cluster shortlists —
-    <= nprobe·k rows per query reach the final shuffle. Arrow traffic
-    is |probes| + |index| vectors total. The local trim (kernels.
-    local_topk) keeps boundary ties in (distance, id) order, the total
-    order of the global merge."""
-    if space not in ("l2", "ip", "cos"):
-        raise ValueError(
-            f"knn_ivf kernel='gemm' supports l2/ip/cos, got {space!r}; "
-            "use kernel='expr' for hamming"
-        )
-    idx = apply_id_filter(index_df, id_filter)
-    out_schema = scored_schema(probes.schema["query_id"].dataType, idx.schema["id"].dataType)
+    """IVF search for a table-sized query set (e.g. the whole-base
+    self-kNN of mutual_knn_pairs_ivf), with knn_ivf's rows: the probe
+    edge list (query_id, query_vec, cluster_id) is never broadcast but
+    cogroups with the inverted lists on cluster_id, and each cluster is
+    one kernels.block_topk block — a float64 GEMM picks each query's
+    local top-k, the in-order fold scores it — so the |queries|·
+    |cluster| candidate rows never materialize and each base vector
+    crosses Arrow once per cluster. The global topk_per_query window
+    merges the per-cluster shortlists (<= nprobe·k rows per query); the
+    local trim keeps boundary ties in (distance, id) order, the total
+    order of that merge (REPOSE's local top-k plus global merge)."""
+    if space not in SPACES:
+        raise ValueError(f"unknown space: {space!r}; expected one of {SPACES}")
+    probes = rank_probes(queries, centroids, nprobe)
+    out_schema = scored_schema(probes.schema["query_id"].dataType, index_df.schema["id"].dataType)
 
-    def _score(key, probe_pdf: pd.DataFrame, index_pdf: pd.DataFrame):
+    def _score(key, probe_pdf: pd.DataFrame, index_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(probe_pdf) == 0 or len(index_pdf) == 0:
             return pd.DataFrame({"query_id": [], "id": [], "distance": []})
         Q = np.array(probe_pdf["query_vec"].tolist(), dtype=np.float64)
         X = np.array(index_pdf["vector"].tolist(), dtype=np.float64)
-        x_sq, q_sq = (X**2).sum(axis=1), (Q**2).sum(axis=1)
-        D = distances_from_dots(space, X @ Q.T, x_sq[:, None], q_sq[None, :])  # (nb, nq)
-        return local_topk(probe_pdf["query_id"].to_numpy(), index_pdf["id"].to_numpy(), D, k)
+        return block_topk(probe_pdf["query_id"].to_numpy(), Q, k, space)(index_pdf["id"].to_numpy(), X)
 
     shortlists = (
         probes.groupBy("cluster_id")
-        .cogroup(idx.groupBy("cluster_id"))
+        .cogroup(index_df.groupBy("cluster_id"))
         .applyInPandas(_score, schema=out_schema)
     )
     return topk_per_query(shortlists, k)

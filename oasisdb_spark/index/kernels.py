@@ -3,9 +3,10 @@
 Each numeric kernel exists once here so the tiers cannot drift apart:
 nearest-centroid assignment, distances from dot products, exact
 distances by the in-order column fold, the per-batch top-k trim, the
-schema of scored rows, the exact re-rank of a shortlist, and the
-partitioned write of inverted lists. The kNN kernels that collect and
-broadcast their queries share one query-batch path, per_query_batch.
+one block scorer of the GEMM kernels (block_topk), the schema of scored
+rows, the exact re-rank of a shortlist, and the partitioned write of
+inverted lists. The kNN kernels that collect and broadcast their
+queries share one query-batch path, per_query_batch.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from pyspark.sql import types as T
 from oasisdb_spark.functions.distance import distance_expr
 from oasisdb_spark.index.flat import topk_per_query
 
-__all__ = ["per_query_batch", "nearest_centroids", "distances_from_dots", "fold_distances", "local_topk", "scored_schema", "refine_exact", "write_lists"]
+__all__ = ["per_query_batch", "nearest_centroids", "distances_from_dots", "fold_distances", "local_topk", "block_topk", "packbits64", "popcount64", "scored_schema", "refine_exact", "write_lists"]
 
 # Most queries one kernel pass collects and broadcasts: about 32 MB of
 # 64-d float64. A larger query frame runs as several passes, each its
@@ -37,10 +38,11 @@ def per_query_batch(
     search(frame, ids, vectors) on each batch of at most
     QUERY_BATCH_ROWS queries, unioning the results: frame is the batch
     as a (query_id, query_vec) DataFrame for the Spark side, ids and the
-    (n, dim) float64 vectors are the same rows on the driver. A frame
-    that fits one batch is passed on as it is; a larger one is
-    re-created batch by batch from the collected rows. hard_cap raises
-    instead when there are more queries than that."""
+    (n, dim) float64 vectors are the same rows on the driver (an empty
+    frame gives a (0,) array: no row to take the dim from). A frame that
+    fits one batch is passed on as it is; a larger one is re-created
+    batch by batch from the collected rows. hard_cap raises instead when
+    there are more queries than that."""
     frame = queries.select("query_id", "query_vec")
     rows, n = frame.collect(), QUERY_BATCH_ROWS
     if hard_cap is not None and len(rows) > hard_cap:
@@ -137,6 +139,67 @@ def local_topk(
     cols, rows = np.nonzero(keep.T)
     distance = D[rows, cols] if rescore is None else rescore(order[rows], cols)
     return pd.DataFrame({"query_id": np.asarray(qids)[cols], "id": ids[rows], "distance": distance})
+
+
+def packbits64(M: np.ndarray) -> np.ndarray:
+    """(n, dim) 0/1 floats → (n, ceil(dim/64)) uint64 bit words."""
+    bits = (M != 0).astype(np.uint8)
+    pad = (-bits.shape[1]) % 64
+    if pad:
+        bits = np.pad(bits, ((0, 0), (0, pad)))
+    return np.packbits(bits, axis=1).view(np.uint64)
+
+
+_POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
+
+
+def popcount64(words: np.ndarray) -> np.ndarray:
+    """Popcount over the last axis of a uint64 array via a byte LUT."""
+    b = words.view(np.uint8).reshape(*words.shape[:-1], 8 * words.shape[-1])
+    return _POP8[b].sum(axis=-1, dtype=np.int64)
+
+
+def block_topk(
+    qids, Q: np.ndarray, k: int, space: str, dtype: type = np.float64
+) -> Callable[[np.ndarray, np.ndarray], pd.DataFrame]:
+    """The block scorer of the GEMM kernels: score(ids, X) gives the
+    local_topk rows of one non-empty (nb, dim) block X of base rows
+    (ids) against the (nq, dim) float64 queries Q (qids). The query side
+    is prepared once, here, for every block scored against it.
+
+    l2 / ip / cos: a GEMM in dtype picks each query's survivors and
+    fold_distances scores them, so a distance is distance_expr's bit for
+    bit whatever the dtype or the number of queries in the BLAS call
+    (OpenBLAS picks its kernel by call shape). hamming: XOR + popcount
+    over packed uint64 words when both sides are 0/1 (a 64x cut in
+    compared elements), else the elementwise-inequality count, chunked
+    over queries to bound the (nb, chunk, dim) bool cube; both exact.
+    No queries give no rows."""
+    if len(qids) == 0:  # an empty query frame's vectors have no dim
+        return lambda ids, X: local_topk(qids, ids, np.empty((len(ids), 0)), k)
+    if space != "hamming":
+        Qm, q_sq = Q.astype(dtype), (Q**2).sum(axis=1)
+
+        def score(ids: np.ndarray, X: np.ndarray) -> pd.DataFrame:
+            G = (X.astype(dtype, copy=False) @ Qm.T).astype(np.float64)  # (nb, nq) dot products
+            D = distances_from_dots(space, G, (X**2).sum(axis=1)[:, None], q_sq[None, :])
+            return local_topk(qids, ids, D, k, lambda rows, cols: fold_distances(space, Q[cols], X[rows]))
+
+        return score
+    q_packed = packbits64(Q) if np.isin(Q, (0.0, 1.0)).all() else None
+
+    def score(ids: np.ndarray, X: np.ndarray) -> pd.DataFrame:
+        if q_packed is not None and np.isin(X, (0.0, 1.0)).all():
+            D = popcount64(packbits64(X)[:, None, :] ^ q_packed[None, :, :])
+        else:
+            step = max(1, (1 << 24) // max(1, X.shape[0] * X.shape[1]))
+            D = np.concatenate(
+                [(X[:, None, :] != Q[None, lo : lo + step, :]).sum(axis=2) for lo in range(0, len(Q), step)],
+                axis=1,
+            )
+        return local_topk(qids, ids, D.astype(np.float64), k)
+
+    return score
 
 
 def scored_schema(

@@ -346,7 +346,6 @@ def mutual_knn_pairs(
     space: str = "l2",
     id_col: str = "id",
     vec_col: str = "vector",
-    scorer: str = "gemm",
     max_base_rows: int = 100_000,
 ) -> DataFrame:
     """Reciprocal k-nearest-neighbor pairs over one embedding table:
@@ -357,87 +356,61 @@ def mutual_knn_pairs(
     candidate filter embedding-dedup pipelines use to kill the
     hub-match false positives one-directional kNN produces.
 
-    Shape: the self-kNN streams the base once against the broadcast
-    query copy with the partial top-k trim (the knn_flat/hard_negatives
-    contract), then mutuality is ONE pair-keyed partial agg — each
-    directed edge normalizes to its unordered pair and a pair is
-    mutual iff BOTH directions arrive (count = 2). No self-join of the
-    neighbor frame, so the expensive scoring plan is never replayed.
-    Distances must be symmetric for the pair collapse (l2 / cosine /
-    hamming; NOT raw inner product). For bases that cannot brute-scan,
-    feed the IVF candidate set through the same normalize-and-count
-    tail — mutuality is a property of the (query_id, id) edge list,
-    not of the scorer.
+    Shape: the self-kNN is pipeline/ann.py's knn_brute_batched — the
+    base streams once against the broadcast query copy, each Arrow
+    batch scored as ONE matrix multiply whose survivors the in-order
+    float64 fold re-scores, so distances equal knn_flat's (the sf1
+    smoke measured the Column-expression cross join 30x slower). Then
+    mutuality is ONE pair-keyed partial agg — each directed edge
+    normalizes to its unordered pair and a pair is mutual iff BOTH
+    directions arrive (count = 2). No self-join of the neighbor frame,
+    so the expensive scoring plan is never replayed. Distances must be
+    symmetric for the pair collapse (l2 / cosine / hamming; NOT raw
+    inner product). For bases that cannot brute-scan, feed the IVF
+    candidate set through the same normalize-and-count tail —
+    mutuality is a property of the (query_id, id) edge list, not of
+    the scorer.
 
-    ``scorer``: 'gemm' (default — the pipeline/ann.py numpy kernel:
-    base scanned once per Arrow batch as ONE matrix multiply; the sf1
-    smoke measured the expression path 30x slower and it only widens
-    with dimension) or 'expr' (the executable Column spec — distances
-    are in-order float64 folds, bit-reproducible against SQL; the
-    oracle dialect). Both select identical neighbor ID SETS on
-    non-degenerate data, with equal distances: the GEMM only picks each
-    batch's survivors, which knn_brute_batched re-scores by the same
-    in-order float64 fold (the knn_flat vs knn_brute twin contract);
-    the row-identity is test-pinned on the fixture.
-
-    ``max_base_rows``: BOTH scorers are brute self-kNN — O(N²) distance
-    computations by definition — so the base is loudly capped (the
-    skyline ``max_candidates`` discipline). Bases past the cap must use
+    ``max_base_rows``: brute self-kNN is O(N²) distance computations by
+    definition, so the base is loudly capped (the skyline
+    ``max_candidates`` discipline). Bases past the cap must use
     :func:`mutual_knn_pairs_ivf` (sub-quadratic: probe-pruned candidate
     generation, same mutuality tail; at nprobe=nlist it reproduces this
-    function exactly). The default GEMM scorer checks the cap for free
-    on the query collect it pays anyway (the query set IS the base);
-    only the expr scorer spends an early-abort limit scan."""
+    function exactly). The cap is checked for free on the query collect
+    the kernel pays anyway (the query set IS the base)."""
     if space == "ip":
         raise ValueError(
             "mutual_knn_pairs: inner product is not symmetric; use l2/cos/hamming"
         )
-    if scorer not in ("gemm", "expr"):
-        raise ValueError(f"mutual_knn_pairs: scorer must be gemm|expr, got {scorer!r}")
+    from oasisdb_spark.pipeline.ann import knn_brute_batched
+
     # indexable-rows contract: a NULL id cannot name a pair endpoint and
     # a NULL vector has no neighbors (and kills the GEMM packer inside
     # np.asarray) — exclude, the _emb_base convention
     base = base.where(F.col(id_col).isNotNull() & vector_indexable(vec_col))
-    if scorer == "expr" and base.limit(max_base_rows + 1).count() > max_base_rows:
-        raise ValueError(
-            f"mutual_knn_pairs: base exceeds max_base_rows={max_base_rows}; "
-            "brute self-kNN is O(N²) — use mutual_knn_pairs_ivf (probe-pruned "
-            "candidates, same mutuality tail) or raise the cap explicitly"
-        )
     q = base.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
     )
     b = base.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector"))
-    if scorer == "gemm":
-        from oasisdb_spark.pipeline.ann import knn_brute_batched
+    raw = knn_brute_batched(
+        q, b, k + 1, space=space, gemm_dtype="float64", hard_query_cap=max_base_rows
+    )
+    return mutual_pairs_from_edges(_drop_self(raw, k))
 
-        # fetch k+1 (self rides along at distance 0), drop self, re-rank;
-        # the cap rides the kernel's query collect — no extra job
-        raw = knn_brute_batched(
-            q, b, k + 1, space=space, gemm_dtype="float64",
-            hard_query_cap=max_base_rows,
-        ).where(
-            F.col("query_id") != F.col("id")
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("distance").asc(), F.col("id").asc()
-        )
-        nn = (
-            raw.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= k)
-            .drop("_r", "rank")
-        )
-    else:
-        pairs = b.crossJoin(F.broadcast(q)).where(
-            F.col("query_id") != F.col("id")
-        )
-        scored = pairs.select(
-            "query_id",
-            "id",
-            distance_expr(space, "query_vec", "vector").alias("distance"),
-        )
-        nn = topk_per_query(scored, k)
-    return mutual_pairs_from_edges(nn)
+
+def _drop_self(raw: DataFrame, k: int) -> DataFrame:
+    """The top-k edges of a k+1 self-kNN: self (which rides along at
+    distance 0) dropped by id, ranks recomputed, so a duplicate vector
+    at distance 0 can never evict a true neighbor."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("distance").asc(), F.col("id").asc()
+    )
+    return (
+        raw.where(F.col("query_id") != F.col("id"))
+        .withColumn("_r", F.row_number().over(w))
+        .where(F.col("_r") <= k)
+        .drop("_r", "rank")
+    )
 
 
 def mutual_knn_pairs_ivf(
@@ -449,39 +422,30 @@ def mutual_knn_pairs_ivf(
     space: str = "l2",
     id_col: str = "id",
     vec_col: str = "vector",
-    kernel: str = "expr",
 ) -> DataFrame:
     """Reciprocal kNN pairs over an IVF index — the sub-quadratic
     composition for bases the brute scan cannot touch: self-kNN runs as
-    the probe-pruned candidate join (index/ivf.py knn_ivf — each query
-    scores only its nprobe nearest inverted lists, ~nprobe/nlist of the
-    base instead of all of it), then the SAME normalize-and-count
-    mutuality tail as :func:`mutual_knn_pairs`. At nprobe = nlist every
-    list is probed, so the result is EXACTLY the brute pair set (the
-    full-probe ≡ exact trick hard_negatives_ivf / knn_ivf use for their
-    SQL oracles); at partial probes pairs inherit IVF recall — a pair
-    survives only if each side finds the other through its probes,
-    which is the precision-biased direction mutual-NN wants.
+    the probe-pruned IVF search (each query scores only its nprobe
+    nearest inverted lists, ~nprobe/nlist of the base instead of all of
+    it), then the SAME normalize-and-count mutuality tail as
+    :func:`mutual_knn_pairs`. At nprobe = nlist every list is probed,
+    so the result is EXACTLY the brute pair set (the full-probe ≡ exact
+    trick hard_negatives_ivf / knn_ivf use for their SQL oracles); at
+    partial probes pairs inherit IVF recall — a pair survives only if
+    each side finds the other through its probes, which is the
+    precision-biased direction mutual-NN wants.
 
-    The whole base is the query set, so the probe edge list is NOT
-    broadcast (knn_ivf's broadcast_probes=False path): the candidate
-    join shuffles on cluster_id, co-located with the index's
-    cluster_id partitioning. ``kernel``: 'expr' (default — in-order
-    float64 fold Columns, the oracle dialect; right for oracle-gated
-    runs and small candidate volumes) or 'gemm' (cogrouped
-    per-cluster GEMM — the production shape for whole-base self-kNN:
-    |base|·nprobe/nlist·|base| candidate rows
-    never materialize; each cluster scores as one matrix multiply and
-    only local top-k shortlists reach the merge. Last-ulp
-    summation-order noise only — the same GEMM-twin contract the brute
-    scorer's 3dp rounding absorbs). Self matches are dropped by id and
-    ranks recomputed over k+1 fetches, so a duplicate vector at
-    distance 0 can never evict a true neighbor."""
+    The whole base is the query set, so the search is
+    index/ivf.py's knn_ivf_cogrouped: the probe edge list is never
+    broadcast but cogroups with the inverted lists on cluster_id, and
+    each cluster scores as one matrix multiply whose local top-k the
+    in-order fold re-scores — the |base|·nprobe/nlist·|base| candidate
+    rows never materialize, and the distances are knn_ivf's."""
     if space == "ip":
         raise ValueError(
             "mutual_knn_pairs_ivf: inner product is not symmetric; use l2/cos/hamming"
         )
-    from oasisdb_spark.index.ivf import knn_ivf
+    from oasisdb_spark.index.ivf import knn_ivf_cogrouped
 
     # indexable-rows contract (the _emb_base convention): NULL ids /
     # NULL vectors cannot be pair endpoints or probe queries
@@ -489,17 +453,5 @@ def mutual_knn_pairs_ivf(
     q = base.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
     )
-    # fetch k+1 (self rides along at distance 0), drop self, re-rank
-    raw = knn_ivf(
-        q, centroids, index_df, k + 1, nprobe=nprobe, space=space,
-        broadcast_probes=False, kernel=kernel,
-    ).where(F.col("query_id") != F.col("id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col("id").asc()
-    )
-    nn = (
-        raw.withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= k)
-        .drop("_r", "rank")
-    )
-    return mutual_pairs_from_edges(nn)
+    raw = knn_ivf_cogrouped(q, centroids, index_df, k + 1, nprobe=nprobe, space=space)
+    return mutual_pairs_from_edges(_drop_self(raw, k))

@@ -1192,7 +1192,7 @@ def main() -> None:
     # 97. mutual_knn_pairs_ivf (VERDICT r06 #3): the sub-quadratic
     # composition — the candidate join must be a cluster_id EQUI-join
     # with the whole-base probe edge list never on the broadcast/build
-    # side (broadcast_probes=False; AQE may still promote the SMALL
+    # side (cogrouped on cluster_id; AQE may still promote the SMALL
     # index side at fixture scale — BuildRight — which is fine and
     # disappears at real index sizes), never a nested-loop/cartesian;
     # probe ranking is one Arrow pass (a second MapInPandas is the

@@ -625,15 +625,10 @@ def mutual_ivf_section(spark) -> None:
         idx.count()
         print(f"  {tag}: N={n}, nlist={nlist}")
         thunks = {
-            "mutual_knn_pairs_ivf (nprobe=4, gemm)": lambda: mutual_knn_pairs_ivf(
-                emb, cent, idx, k=5, nprobe=4, kernel="gemm"
-            ),
-            "mutual_knn_pairs_ivf (nprobe=4, expr)": lambda: mutual_knn_pairs_ivf(
+            "mutual_knn_pairs_ivf (nprobe=4)": lambda: mutual_knn_pairs_ivf(
                 emb, cent, idx, k=5, nprobe=4
             ),
-            "mutual_knn_pairs (GEMM scan)": lambda: mutual_knn_pairs(
-                emb, k=5, scorer="gemm"
-            ),
+            "mutual_knn_pairs (GEMM scan)": lambda: mutual_knn_pairs(emb, k=5),
         }
         for name, thunk in thunks.items():
             force(thunk())  # warm

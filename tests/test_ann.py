@@ -103,3 +103,19 @@ def test_query_chunking_matches_unchunked(spark, embeddings, monkeypatch, kernel
     assert [r[:3] for r in chunked] == [r[:3] for r in whole]
     rel = 1e-6 if kernel == "knn_brute_batched" else 0
     assert [r[3] for r in chunked] == pytest.approx([r[3] for r in whole], rel=rel, abs=0)
+
+
+def test_empty_query_frame_gives_no_rows(spark, embeddings):
+    """A query frame with no rows returns no rows from every
+    collect-and-broadcast kernel, as knn_ivf does; mutual kNN over an
+    empty base, whose query frame is that base, returns no pairs."""
+    from oasisdb_spark.index.binq import build_binq, knn_binq
+    from oasisdb_spark.pipeline.mining import mutual_knn_pairs
+
+    base, q = _base(embeddings), _q(embeddings, 0)
+    for space in ("l2", "ip", "cos", "hamming"):
+        assert knn_brute_batched(q, base, k=5, space=space).collect() == [], space
+    index = build_binq(base)
+    assert knn_binq(q, *index, k=5).collect() == []
+    assert knn_binq(q, *index, k=5, refine_base=base).collect() == []
+    assert mutual_knn_pairs(base.where(F.col("id") < 0), k=2).collect() == []

@@ -3,11 +3,10 @@
 check vs the Flat oracle mirroring benchmarks/run_benchmarks.py:136-142."""
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from oasisdb_spark.index.flat import knn_flat
-from oasisdb_spark.index.ivf import build_ivf, knn_ivf
+from oasisdb_spark.index.ivf import build_ivf, knn_ivf, knn_ivf_cogrouped
 from oasisdb_spark.index.kmeans import kmeans_fit
 
 
@@ -156,28 +155,11 @@ def test_ivf_search_stats_counts_probed_candidates(spark, embeddings, tmp_path):
     assert all(r["n_probes"] == 1 and 0 < r["n_candidates"] < n for r in partial.values())
 
 
-def test_knn_ivf_shuffled_probe_join_matches_broadcast(spark, embeddings):
-    """broadcast_probes=False (the whole-base self-kNN posture used by
-    mutual_knn_pairs_ivf) must return exactly the broadcast plan's
-    results — the flag changes the join strategy, never the rows."""
-    emb = embeddings.select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
-    )
-    cent, idx = build_ivf(emb, nlist=8)
-    q = embeddings.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    a = sorted(map(tuple, knn_ivf(q, cent, idx, k=5, nprobe=8).collect()))
-    b = sorted(
-        map(tuple, knn_ivf(q, cent, idx, k=5, nprobe=8, broadcast_probes=False).collect())
-    )
-    assert a == b and a
-
-
-def test_knn_ivf_gemm_kernel_matches_expr(spark, embeddings):
-    """kernel='gemm' (cogrouped per-cluster GEMM) must select the same
-    (query, id) rows as the fold-expression kernel at full AND partial
-    probes, with distances equal to rounding (GEMM-twin contract)."""
+def test_knn_ivf_cogrouped_matches_knn_ivf(spark, embeddings):
+    """knn_ivf_cogrouped (probes cogrouped with the lists, one GEMM per
+    cluster whose survivors the in-order fold re-scores) returns
+    knn_ivf's rows — ids, ranks and distances, unrounded — at full AND
+    partial probes, in every space."""
     emb = embeddings.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
     )
@@ -186,16 +168,11 @@ def test_knn_ivf_gemm_kernel_matches_expr(spark, embeddings):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
 
-    def rows(kernel, nprobe, id_filter=None):
-        out = knn_ivf(q, cent, idx, k=5, nprobe=nprobe, kernel=kernel, id_filter=id_filter)
-        return sorted(
-            (r["query_id"], r["id"], r["rank"], round(r["distance"], 6))
-            for r in out.collect()
-        )
+    def rows(search, nprobe, space):
+        out = search(q, cent, idx, k=5, nprobe=nprobe, space=space)
+        return sorted((r["query_id"], r["id"], r["rank"], r["distance"]) for r in out.collect())
 
-    for nprobe in (8, 2):
-        assert rows("gemm", nprobe) == rows("expr", nprobe), nprobe
-    flt = emb.filter(F.col("id") % 3 == 0).select("id")
-    assert rows("gemm", 8, flt) == rows("expr", 8, flt)
-    with pytest.raises(ValueError, match="gemm"):
-        knn_ivf(q, cent, idx, k=5, nprobe=8, space="hamming", kernel="gemm")
+    for space in ("l2", "ip", "cos", "hamming"):
+        for nprobe in (8, 2):
+            want = rows(knn_ivf, nprobe, space)
+            assert rows(knn_ivf_cogrouped, nprobe, space) == want and want, (space, nprobe)

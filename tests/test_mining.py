@@ -287,7 +287,7 @@ def test_mutual_knn_matches_brute_and_drops_one_directional(spark):
     for k in (1, 2, 3):
         got = {
             (r["id_a"], r["id_b"]): r["distance"]
-            for r in mutual_knn_pairs(df, k=k, scorer="expr").collect()
+            for r in mutual_knn_pairs(df, k=k).collect()
         }
         want = _mutual_brute(vecs, k)
         assert got.keys() == want.keys(), f"k={k}"
@@ -303,31 +303,34 @@ def test_mutual_knn_partitioning_invariance_and_ip_rejected(spark):
 
     rows = [(i, [float((i * 7) % 13), float((i * 3) % 11)]) for i in range(40)]
     df = spark.createDataFrame(rows, "id LONG, vector ARRAY<DOUBLE>")
-    base = sorted(map(tuple, mutual_knn_pairs(df, k=4, scorer="expr").collect()))
-    rep = sorted(map(tuple, mutual_knn_pairs(df.repartition(11), k=4, scorer="expr").collect()))
+    base = sorted(map(tuple, mutual_knn_pairs(df, k=4).collect()))
+    rep = sorted(map(tuple, mutual_knn_pairs(df.repartition(11), k=4).collect()))
     assert base == rep and base
     with _pytest.raises(ValueError):
         mutual_knn_pairs(df, k=4, space="ip")
 
 
-def test_mutual_knn_gemm_scorer_row_identical_to_expr(spark, embeddings):
-    from oasisdb_spark.pipeline.mining import mutual_knn_pairs
+def test_mutual_knn_matches_flat_reference(spark, embeddings):
+    """mutual_knn_pairs equals a reference built from the Column spec:
+    knn_flat at k+1, self dropped, ranks recomputed, then the mutuality
+    tail — pairs and distances unrounded."""
+    from pyspark.sql import Window
+
+    from oasisdb_spark.functions.distance import vector_indexable
+    from oasisdb_spark.index.flat import knn_flat
+    from oasisdb_spark.pipeline.mining import mutual_knn_pairs, mutual_pairs_from_edges
 
     emb = embeddings.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
+    ).where(vector_indexable("vector"))
+    q = emb.select(F.col("id").alias("query_id"), F.col("vector").alias("query_vec"))
+    w = Window.partitionBy("query_id").orderBy("distance", "id")
+    nn = (
+        knn_flat(q, emb, k=6).where(F.col("query_id") != F.col("id"))
+        .withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= 5)
     )
-
-    def rows(scorer):
-        out = mutual_knn_pairs(emb, k=5, space="l2", scorer=scorer)
-        return sorted(
-            (r["id_a"], r["id_b"], round(r["distance"], 3)) for r in out.collect()
-        )
-
-    assert rows("gemm") == rows("expr")
-    import pytest
-
-    with pytest.raises(ValueError, match="scorer"):
-        mutual_knn_pairs(emb, k=2, scorer="fast")
+    want = sorted(map(tuple, mutual_pairs_from_edges(nn).collect()))
+    assert sorted(map(tuple, mutual_knn_pairs(emb, k=5).collect())) == want and want
 
 
 def test_mutual_knn_base_guard_raises(spark):
@@ -335,13 +338,11 @@ def test_mutual_knn_base_guard_raises(spark):
 
     rows = [(i, [float(i), 0.0]) for i in range(40)]
     df = spark.createDataFrame(rows, "id LONG, vector ARRAY<DOUBLE>")
-    with pytest.raises(ValueError, match="max_base_rows"):
-        mutual_knn_pairs(df, k=2, scorer="expr", max_base_rows=10)
-    # the GEMM default checks the cap on its query collect (no extra job)
+    # the cap is checked on the kernel's query collect (no extra job)
     with pytest.raises(ValueError, match="hard cap"):
-        mutual_knn_pairs(df, k=2, scorer="gemm", max_base_rows=10)
+        mutual_knn_pairs(df, k=2, max_base_rows=10)
     # raising the cap explicitly unblocks the same call
-    assert mutual_knn_pairs(df, k=2, scorer="expr", max_base_rows=40).count() > 0
+    assert mutual_knn_pairs(df, k=2, max_base_rows=40).count() > 0
 
 
 @pytest.fixture(scope="module")
@@ -358,15 +359,10 @@ def test_mutual_knn_ivf_full_probe_equals_brute(spark, ivf_40):
     from oasisdb_spark.pipeline.mining import mutual_knn_pairs, mutual_knn_pairs_ivf
 
     df, cent, idx = ivf_40
-    brute = sorted(
-        (r["id_a"], r["id_b"], round(r["distance"], 6))
-        for r in mutual_knn_pairs(df, k=4, scorer="expr").collect()
-    )
-    ivf = sorted(
-        (r["id_a"], r["id_b"], round(r["distance"], 6))
-        for r in mutual_knn_pairs_ivf(df, cent, idx, k=4, nprobe=4).collect()
-    )
-    assert brute == ivf and brute
+    for space in ("l2", "cos", "hamming"):
+        brute = sorted(map(tuple, mutual_knn_pairs(df, k=4, space=space).collect()))
+        ivf = sorted(map(tuple, mutual_knn_pairs_ivf(df, cent, idx, k=4, nprobe=4, space=space).collect()))
+        assert brute == ivf and brute, space
 
 
 def test_mutual_knn_ivf_partial_probe_is_precision_biased(spark, ivf_40):

@@ -28,7 +28,7 @@ def test_mutual_knn_excludes_null_ids_and_vectors(spark):
         (3, None),                                  # NULL vector: no neighbors
     ]
     df = spark.createDataFrame(rows, "id LONG, vector ARRAY<DOUBLE>")
-    out = mutual_knn_pairs(df, k=1, scorer="expr").collect()
+    out = mutual_knn_pairs(df, k=1).collect()
     assert {(r["id_a"], r["id_b"]) for r in out} == {(1, 2)}
 
 
