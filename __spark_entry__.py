@@ -264,7 +264,7 @@ def _knn_lsh(spark: SparkSession, sf_dir: str, num_hash_tables: int = 16) -> Dat
     (numHashTables=16, verified vs Flat at sf0.01): the bucket union covers every true
     neighbor at this scale, so the Flat L2 oracle applies. Distances are
     rounded to 3dp — MLlib computes sqrt-then-square, which differs from
-    the in-order fold in the last ulps (same convention as knn_brute).
+    the in-order fold in the last ulps.
     The fast plan (4 tables) is benchmarked via bench_queries()."""
     from oasisdb_spark.index.lsh import fit_lsh, search_lsh
 
@@ -293,12 +293,12 @@ def _knn_hamming_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-matrix exact kNN (pipeline/ann.py) — the GEMM scale path.
     The GEMM picks the survivors and the kernel emits their in-order
-    float64 fold, knn_flat's distance; rounded to 3dp, as its
-    oracle_sql twin is."""
+    float64 fold, knn_flat's distance, so the oracle_sql twin matches it
+    at full precision."""
     from oasisdb_spark.pipeline.ann import knn_brute_batched
 
     res = knn_brute_batched(_emb_queries(spark, sf_dir, 10), _emb_base(spark, sf_dir), k=10)
-    return res.select("query_id", "id", "rank", F.round(F.col("distance"), 3).alias("distance"))
+    return res.select("query_id", "id", "rank", "distance")
 
 
 def _search_documents_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4485,18 +4485,14 @@ def _mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     30x slower), mutuality is ONE pair-keyed partial agg (both
     directions arrive => count 2) — no self-join of the neighbor
     frame. The oracle replays (distance, id)-ranked windows over
-    in-order float64 folds; distances round to 3dp on both sides (the
-    knn_brute output convention — the kernel emits the same fold)."""
+    in-order float64 folds, and the kernel emits the same fold, so the
+    distances match at full precision."""
     from oasisdb_spark.pipeline.mining import mutual_knn_pairs
 
     emb = _table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
     )
-    out = mutual_knn_pairs(emb, k=5, space="l2")
-    # same output convention as knn_brute: round to 3dp for the hash gate
-    return out.select(
-        "id_a", "id_b", F.round(F.col("distance"), 3).alias("distance")
-    )
+    return mutual_knn_pairs(emb, k=5, space="l2").select("id_a", "id_b", "distance")
 
 
 def _mutual_knn_pairs_ivf(spark: SparkSession, sf_dir: str, nprobe: int = 16) -> DataFrame:
@@ -4519,10 +4515,7 @@ def _mutual_knn_pairs_ivf(spark: SparkSession, sf_dir: str, nprobe: int = 16) ->
         F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
     )
     cent, idx = _ivf_memo(spark, sf_dir)
-    out = mutual_knn_pairs_ivf(emb, cent, idx, k=5, nprobe=nprobe)
-    return out.select(
-        "id_a", "id_b", F.round(F.col("distance"), 3).alias("distance")
-    )
+    return mutual_knn_pairs_ivf(emb, cent, idx, k=5, nprobe=nprobe).select("id_a", "id_b", "distance")
 
 
 def _events_ohlc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7327,7 +7320,7 @@ WITH scored AS (
   ) WHERE rn <= 5
 )
 SELECT least(query_id, id) AS id_a, greatest(query_id, id) AS id_b,
-       round(min(distance), 3) AS distance
+       min(distance) AS distance
 FROM nn GROUP BY 1, 2 HAVING count(*) = 2
 """,
         # full-probe IVF ≡ exact (the _knn_ivf / hard_negatives_ivf
@@ -7345,7 +7338,7 @@ WITH scored AS (
   ) WHERE rn <= 5
 )
 SELECT least(query_id, id) AS id_a, greatest(query_id, id) AS id_b,
-       round(min(distance), 3) AS distance
+       min(distance) AS distance
 FROM nn GROUP BY 1, 2 HAVING count(*) = 2
 """,
         # MAD outliers (operators/quality.py mad_outliers): the oracle
@@ -8350,11 +8343,7 @@ WHERE q.label IS DISTINCT FROM e.label
                  " AND len(list_filter(embedding, x -> x IS NULL OR isnan(x))) = 0)",
             extra="", join="",
         ),
-        "knn_brute": f"""
-            SELECT query_id, id, rank, round(distance, 3) AS distance FROM (
-              {_KNN_ORACLE_TMPL.format(dist=_L2_SQL, nq=10, k=10, base=_EMB_NONNULL, extra="", join="")}
-            )
-        """,
+        "knn_brute": _KNN_ORACLE_TMPL.format(dist=_L2_SQL, nq=10, k=10, base=_EMB_NONNULL, extra="", join=""),
         # exact-mode approximate indexes: nprobe=nlist (ivf, ivfpq+full
         # refine) / 8 hash tables (lsh) make each ≡ Flat, so the L2
         # oracle applies end-to-end; approximate-setting quality is

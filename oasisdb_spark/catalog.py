@@ -26,8 +26,10 @@ unlocked reader never sees a torn catalog.
 Scale notes: per-collection data lives partitioned; rewrite-on-upsert is
 the Parquet-only equivalent of Delta MERGE (documented trade-off — with
 Delta/Iceberg available the write path becomes MERGE INTO and is
-incremental). Point lookups (get_document) push an id predicate to the
-parquet scan (min/max pruning).
+incremental). Point reads run on the driver, not on Spark: get_document
+is a pyarrow id predicate on the current generation (min/max pruning),
+and arrow_documents / tombstone_ids hand the search point path the rows
+Spark wrote (search.point_search).
 """
 
 from __future__ import annotations
@@ -39,9 +41,12 @@ import time
 import uuid
 from dataclasses import asdict, dataclass, field
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from oasisdb_spark import errors
 
@@ -69,6 +74,20 @@ _DOC_SCHEMA_FIELDS = [
     T.StructField("vector", T.ArrayType(T.FloatType()), True),
     T.StructField("parameters", T.MapType(T.StringType(), T.StringType()), True),
 ]
+# The same document schema for the driver's pyarrow reads.
+_DOC_ARROW_SCHEMA = to_arrow_schema(T.StructType(_DOC_SCHEMA_FIELDS))
+_TOMBSTONE_ARROW_SCHEMA = pa.schema([("id", pa.string())])
+
+
+def _read_arrow(gen: str | None, schema: pa.Schema, columns: list[str] | None = None, filter=None) -> pa.Table:
+    """Read one generation dir on the driver with pyarrow — no Spark
+    job. The explicit schema reads a generation with no Parquet footers
+    (written from an empty frame), or none at all (gen None), as 0 rows;
+    dataset discovery skips the _- and .-prefixed names Spark leaves
+    beside the data (_SUCCESS, _temporary, .crc files)."""
+    if gen is None:
+        return schema.empty_table().select(columns or schema.names)
+    return ds.dataset(gen, schema=schema, format="parquet").to_table(columns=columns, filter=filter)
 
 
 @dataclass
@@ -335,7 +354,19 @@ class Catalog:
         # UNABLE_TO_INFER_SCHEMA
         return self.spark.read.schema("id STRING").parquet(p)
 
+    def tombstone_ids(self, name: str) -> list[str]:
+        """read_tombstones' ids, read on the driver (no Spark job); []
+        when there are none."""
+        p = self._resolve(self.tombstone_path(name))
+        return _read_arrow(p, _TOMBSTONE_ARROW_SCHEMA).column("id").to_pylist()
+
     # ---------- document CRUD (S6-S10) ----------
+    def arrow_documents(self, name: str, columns: list[str] | None = None, filter=None) -> pa.Table:
+        """read_documents' rows as a pyarrow Table, read on the driver (no
+        Spark job); filter is a pyarrow.dataset expression."""
+        self.get_collection(name)  # existence check, as read_documents
+        return _read_arrow(self._resolve(self.data_path(name)), _DOC_ARROW_SCHEMA, columns, filter)
+
     def read_documents(self, name: str) -> DataFrame:
         self.get_collection(name)  # existence check, matching document.go:136-145
         p = self._resolve(self.data_path(name))
@@ -393,11 +424,16 @@ class Catalog:
         )
         self._atomic_overwrite(deduped, self.data_path(name))
 
-    def get_document(self, name: str, doc_id: str):
-        rows = self.read_documents(name).filter(F.col("id") == str(doc_id)).collect()
+    def get_document(self, name: str, doc_id: str) -> dict:
+        """{id, vector, parameters} of one document (parameters None when
+        it has none), by a pyarrow id filter on the current generation."""
+        rows = self.arrow_documents(name, filter=ds.field("id") == str(doc_id)).slice(0, 1).to_pylist()
         if not rows:
             raise errors.ErrDocumentNotFound(f"document {doc_id!r} not found in {name!r}")
-        return rows[0].asDict()
+        doc = rows[0]
+        if doc["parameters"] is not None:
+            doc["parameters"] = dict(doc["parameters"])  # Arrow gives a map as (key, value) pairs
+        return doc
 
     def delete_document(self, name: str, doc_id: str) -> None:
         """Correct delete (the reference's vector delete is partial/broken —

@@ -19,6 +19,12 @@ swapping the constructor: HTTP server + base_url become a SparkSession
 - search_documents        → .../documents/search (Q2) — here the
                             metadata filter WORKS (pre-filter pushdown;
                             the reference ignores it, design.md:58-59)
+
+Point reads do not run on Spark: get_document, and search_vectors on a
+flat, unbuilt, ivf_flat or hnsw collection (l2, ip, cos), read the
+Parquet files Spark wrote on the driver with pyarrow
+(search.point_search), with no Spark job. Writes, builds,
+search_documents and the other searches run on the SparkSession.
 """
 
 from __future__ import annotations

@@ -31,6 +31,8 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,15 +40,19 @@ from pyspark.sql import types as T
 
 from oasisdb_spark.functions.distance import SPACES, distance_expr
 from oasisdb_spark.index.flat import topk_per_query
-from oasisdb_spark.index.kernels import block_topk, nearest_centroids
+from oasisdb_spark.index.kernels import arrow_matrix, block_topk, nearest_centroids
 from oasisdb_spark.index.kernels import per_query_batch, refine_exact, scored_schema, write_lists
 from oasisdb_spark.index.kmeans import kmeans_fit
 
-__all__ = ["train_centroids", "assign_clusters", "build_ivf", "load_ivf", "append_ivf", "knn_ivf", "knn_ivf_cogrouped", "knn_probed", "rank_probes", "deterministic_sample", "ivf_search_stats"]
+__all__ = ["train_centroids", "assign_clusters", "build_ivf", "load_ivf", "read_centroids", "probed_lists", "append_ivf", "knn_ivf", "knn_ivf_cogrouped", "knn_probed", "rank_probes", "deterministic_sample", "ivf_search_stats"]
 
 DEFAULT_NLIST = 100  # const.go:26-30
 DEFAULT_NPROBE = 10
 TRAIN_SAMPLE_CAP = 200_000  # rows collected to the driver for kmeans fit
+
+# One inverted list's files as the driver reads them: an explicit schema,
+# so no footer is needed to know it (cluster_id is the directory name).
+_LIST_SCHEMA = pa.schema([("id", pa.string()), ("vector", pa.list_(pa.float32()))])
 
 
 def train_centroids(
@@ -149,12 +155,39 @@ def build_ivf(
 
 def load_ivf(spark: SparkSession, out_dir: str) -> tuple[np.ndarray, DataFrame]:
     """Read back the index build_ivf wrote to out_dir: the same
-    (centroids, index_df) pair build_ivf returns. The centroids table is
-    a few KB, so pyarrow reads it on the driver — no Spark job."""
+    (centroids, index_df) pair build_ivf returns."""
+    return read_centroids(out_dir), spark.read.parquet(os.path.join(out_dir, "lists"))
+
+
+def read_centroids(out_dir: str) -> np.ndarray:
+    """The (nlist, dim) float32 centroids of the index at out_dir, by
+    cluster_id. The table is a few KB, so pyarrow reads it on the
+    driver — no Spark job."""
     t = pq.read_table(os.path.join(out_dir, "centroids"))
     order = np.argsort(t.column("cluster_id").to_numpy())
-    centroids = np.array(t.column("centroid").to_pylist(), dtype=np.float32)[order]
-    return centroids, spark.read.parquet(os.path.join(out_dir, "lists"))
+    return arrow_matrix(t.column("centroid"), len(t.column("centroid")[0]))[order]
+
+
+def probed_lists(out_dir: str, q: np.ndarray, nprobe: int, keep: ds.Expression | None = None) -> pa.Table:
+    """The (id, vector) rows of one float32 query's probed lists, read
+    on the driver with pyarrow — no Spark job. The probes are
+    rank_probes' for the same query and centroids, and keep, a row
+    filter on id, masks the rest (the tombstones).
+
+    Only the probed cluster_id=N/ directories are listed, and only
+    their data files read (Spark's rule: names starting with _ or . are
+    not data). A discovery walk over the whole lists/ directory would
+    also descend into the _temporary/ tree of a concurrent append_ivf,
+    which its commit deletes under the walk (FileNotFoundError); the
+    cluster directories themselves only ever gain whole files."""
+    centroids = read_centroids(out_dir)
+    probes = nearest_centroids(q[None, :], centroids, min(nprobe, len(centroids)))[0]
+    files = []
+    for c in probes:
+        d = os.path.join(out_dir, "lists", f"cluster_id={c}")
+        if os.path.isdir(d):  # a list that got no rows has no directory
+            files += [os.path.join(d, f) for f in sorted(os.listdir(d)) if not f.startswith(("_", "."))]
+    return ds.dataset(files, schema=_LIST_SCHEMA, format="parquet").to_table(filter=keep)
 
 
 def append_ivf(new_df: DataFrame, out_dir: str, centroids: np.ndarray) -> None:
@@ -181,13 +214,14 @@ def rank_probes(
 ) -> DataFrame:
     """Top-nprobe nearest centroids per query (ivf.go:186-195) —
     vectorized against broadcast centroids; output one row per
-    (query, probed cluster)."""
+    (query, probed cluster). query_vec keeps the input's type, so the
+    candidates are scored against the query as given."""
     spark = queries.sparkSession
     bc = spark.sparkContext.broadcast(np.ascontiguousarray(centroids, dtype=np.float32))
     schema = T.StructType(
         [
             T.StructField("query_id", queries.schema[query_id_col].dataType, True),
-            T.StructField("query_vec", T.ArrayType(T.FloatType()), True),
+            T.StructField("query_vec", queries.schema[query_vec_col].dataType, True),
             T.StructField("cluster_id", T.IntegerType(), False),
         ]
     )

@@ -3,10 +3,11 @@
 Each numeric kernel exists once here so the tiers cannot drift apart:
 nearest-centroid assignment, distances from dot products, exact
 distances by the in-order column fold, the per-batch top-k trim, the
-one block scorer of the GEMM kernels (block_topk), the schema of scored
-rows, the exact re-rank of a shortlist, and the partitioned write of
-inverted lists. The kNN kernels that collect and broadcast their
-queries share one query-batch path, per_query_batch.
+one block scorer of the GEMM kernels (block_topk), the exact top-k of
+one query on the driver (point_topk), the schema of scored rows, the
+exact re-rank of a shortlist, and the partitioned write of inverted
+lists. The kNN kernels that collect and broadcast their queries share
+one query-batch path, per_query_batch.
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -23,7 +26,7 @@ from pyspark.sql import types as T
 from oasisdb_spark.functions.distance import distance_expr
 from oasisdb_spark.index.flat import topk_per_query
 
-__all__ = ["per_query_batch", "nearest_centroids", "distances_from_dots", "fold_distances", "local_topk", "block_topk", "packbits64", "popcount64", "scored_schema", "refine_exact", "write_lists"]
+__all__ = ["per_query_batch", "nearest_centroids", "distances_from_dots", "fold_distances", "local_topk", "block_topk", "arrow_matrix", "point_topk", "packbits64", "popcount64", "scored_schema", "refine_exact", "write_lists"]
 
 # Most queries one kernel pass collects and broadcasts: about 32 MB of
 # 64-d float64. A larger query frame runs as several passes, each its
@@ -200,6 +203,25 @@ def block_topk(
         return local_topk(qids, ids, D.astype(np.float64), k)
 
     return score
+
+
+def arrow_matrix(vectors: pa.ChunkedArray, dim: int) -> np.ndarray:
+    """An Arrow list<float> column as an (n, dim) float array, in one
+    copy of the flat values (no Python list per row)."""
+    return pc.list_flatten(vectors).to_numpy().reshape(-1, dim)
+
+
+def point_topk(q: np.ndarray, rows: pa.Table, k: int, space: str) -> list[tuple[str, float, int]]:
+    """One query's exact top-k over candidate (id, vector) rows, on the
+    driver: every row is scored by fold_distances, so a distance is
+    distance_expr's bit for bit, and the rows are ordered by (distance,
+    id) as topk_per_query orders them (NaN last). Returns (id, distance,
+    rank) with ranks from 1."""
+    ids = rows.column("id").to_numpy()
+    X = arrow_matrix(rows.column("vector"), len(q))
+    d = fold_distances(space, np.broadcast_to(q.astype(np.float64), X.shape), X)
+    top = np.lexsort((ids, d))[: max(k, 0)]
+    return [(str(ids[i]), float(d[i]), rank) for rank, i in enumerate(top, 1)]
 
 
 def scored_schema(

@@ -19,6 +19,11 @@ Reference mapping:
 Queries always run against the last BUILT index version (catalog
 index_version pinning) — the snapshot-isolation semantic the reference
 leaves undefined (SURVEY.md §4 concurrency notes).
+
+Spark builds the index; one query vector (cached_search_vectors, the
+serving path) is answered on the driver from the Parquet files Spark
+wrote, by point_search, with no Spark job. The DataFrame API
+(search_vectors, search_documents) stays on Spark.
 """
 
 from __future__ import annotations
@@ -28,15 +33,18 @@ import os
 import shutil
 from typing import Callable, NamedTuple
 
+import numpy as np
+import pyarrow.dataset as ds
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from oasisdb_spark import errors
 from oasisdb_spark.catalog import Catalog
 from oasisdb_spark.index.binq import append_binq, build_binq, knn_binq, load_binq
-from oasisdb_spark.index.ivf import append_ivf, build_ivf, knn_ivf, load_ivf
+from oasisdb_spark.index.ivf import append_ivf, build_ivf, knn_ivf, load_ivf, probed_lists
 from oasisdb_spark.index.ivfpq import append_ivfpq, build_ivfpq, knn_ivfpq, load_ivfpq
 from oasisdb_spark.index.ivfsq import append_ivfsq, build_ivfsq, knn_ivfsq, load_ivfsq
+from oasisdb_spark.index.kernels import point_topk
 from oasisdb_spark.pipeline import ann
 
 __all__ = [
@@ -44,6 +52,7 @@ __all__ = [
     "add_to_index",
     "search_vectors",
     "search_documents",
+    "point_search",
     "cached_search_vectors",
 ]
 
@@ -66,38 +75,43 @@ class _Tier(NamedTuple):
     every tier (IVF centroids; IVF-PQ centroids and codebooks; IVF-SQ
     centroids and ranges; binq means) and lists is a DataFrame;
     add(docs, out_dir, *model) appends docs to the lists against that
-    model; search(queries, index, k, _Search) runs the kNN. Flat keeps
-    no index files (the collection IS the index, flat.go:14-20), so it
-    has only build, and its searches take the exact scan."""
+    model; search(queries, index, k, _Search) runs the kNN.
+    point(out_dir, q, params, keep) gives the candidate (id, vector)
+    rows of one float32 query as a pyarrow Table read on the driver,
+    keep masking them by id; a tier without it has no point path. Flat
+    keeps no index files (the collection IS the index, flat.go:14-20),
+    so it has only build, and its searches take the exact scan."""
 
     build: Callable
     load: Callable | None = None
     add: Callable | None = None
     search: Callable | None = None
+    point: Callable | None = None
 
 
 def _nlist(params: dict, data: DataFrame) -> int:
     return _resolve_nlist(params.get("nlist", "100"), data.count())
 
 
-def _nprobe(s: _Search) -> int:
-    return int(s.params.get("nprobe", "10"))  # the knn functions cap at nlist
+def _nprobe(params: dict) -> int:
+    return int(params.get("nprobe", "10"))  # the knn functions cap at nlist
 
 
-def _efsearch_nprobe(s: _Search) -> int:
+def _efsearch_nprobe(params: dict) -> int:
     # efsearch⇒nprobe mapping: scan roughly efsearch/ef_default
     # fraction of lists, floor 1 (SURVEY.md §7 phase 3.5)
-    return max(1, int(s.params.get("efsearch", "10")) // 2)
+    return max(1, int(params.get("efsearch", "10")) // 2)
 
 
-def _ivf_tier(nprobe: Callable[[_Search], int]) -> _Tier:
+def _ivf_tier(nprobe: Callable[[dict], int]) -> _Tier:
     return _Tier(
         build=lambda data, d, p: build_ivf(data, nlist=_nlist(p, data), out_dir=d),
         load=load_ivf,
         add=append_ivf,
         search=lambda q, index, k, s: knn_ivf(
-            q, *index, k, nprobe=nprobe(s), space=s.space, id_filter=s.id_filter
+            q, *index, k, nprobe=nprobe(s.params), space=s.space, id_filter=s.id_filter
         ),
+        point=lambda d, q, p, keep: probed_lists(d, q, nprobe(p), keep),
     )
 
 
@@ -116,7 +130,7 @@ _TIERS = {
         load=load_ivfpq,
         add=append_ivfpq,
         search=lambda q, index, k, s: knn_ivfpq(
-            q, *index, k, nprobe=_nprobe(s), space=s.space, refine_base=s.refine_base,
+            q, *index, k, nprobe=_nprobe(s.params), space=s.space, refine_base=s.refine_base,
             refine_factor=int(s.params.get("refine_factor", "4")), id_filter=s.id_filter,
         ),
     ),
@@ -125,7 +139,7 @@ _TIERS = {
         load=load_ivfsq,
         add=append_ivfsq,
         search=lambda q, index, k, s: knn_ivfsq(
-            q, *index, k, nprobe=_nprobe(s), space=s.space,
+            q, *index, k, nprobe=_nprobe(s.params), space=s.space,
             refine_base=s.refine_base if s.params.get("refine_factor") else None,
             refine_factor=int(s.params.get("refine_factor", "4")), id_filter=s.id_filter,
         ),
@@ -252,6 +266,35 @@ def search_vectors(
     return tier.search(queries, index, k, _Search(coll.params, coll.space, data, id_filter))
 
 
+def point_search(catalog: Catalog, name: str, query_vec: list[float], k: int) -> list[tuple[str, float, int]] | None:
+    """One query vector's top-k on the driver, with no Spark job: the
+    (id, distance, rank) rows that search_vectors(...).collect() gives
+    for it as an ARRAY<FLOAT> query (so the vector is rounded to float32
+    first), equal in ids, ranks and distances.
+
+    Flat and unbuilt collections scan the current data generation; the
+    IVF tiers (ivf_flat, hnsw) read their probed lists (_Tier.point),
+    minus the tombstones. kernels.point_topk scores every candidate by
+    the in-order fold and orders by (distance, id). None where there is
+    no point path — built ivfpq, ivfsq and binq, the hamming space, or
+    a query of the wrong dimension — and the caller runs search_vectors
+    instead."""
+    coll = catalog.get_collection(name)
+    tier = _tier(coll.index_type)
+    q = np.asarray(query_vec, dtype=np.float32)
+    if coll.space == "hamming" or q.shape != (coll.dimension,):
+        return None
+    if coll.index_version == 0 or tier.search is None:
+        rows = catalog.arrow_documents(name, columns=["id", "vector"])
+    elif tier.point is None:
+        return None
+    else:
+        deleted = catalog.tombstone_ids(name)
+        keep = ~ds.field("id").isin(deleted) if deleted else None
+        rows = tier.point(catalog.index_path(name, coll.index_version), q, coll.params, keep)
+    return point_topk(q, rows, k, coll.space)
+
+
 def cached_search_vectors(
     catalog: Catalog,
     name: str,
@@ -261,7 +304,8 @@ def cached_search_vectors(
 ) -> list:
     """Q13 result-cache path for the reference's serving pattern
     (handlers.go:46-54: one query vector per request, cache consulted
-    before the index). Returns collected (id, distance, rank) rows.
+    before the index). Returns collected (id, distance, rank) rows: from
+    point_search where it has a path, else from search_vectors on Spark.
 
     The cache key includes the collection's index_version, so results
     can never be stale after a rebuild; writes that keep the version
@@ -275,14 +319,12 @@ def cached_search_vectors(
     hit = cache.get(key)
     if hit is not None:
         return hit
-    spark = catalog.spark
-    q = spark.createDataFrame(
-        [(0, [float(x) for x in query_vec])], "query_id INT, query_vec ARRAY<FLOAT>"
-    )
-    rows = [
-        (r["id"], r["distance"], r["rank"])
-        for r in search_vectors(catalog, name, q, k).collect()
-    ]
+    rows = point_search(catalog, name, query_vec, k)
+    if rows is None:
+        q = catalog.spark.createDataFrame(
+            [(0, [float(x) for x in query_vec])], "query_id INT, query_vec ARRAY<FLOAT>"
+        )
+        rows = [(r["id"], r["distance"], r["rank"]) for r in search_vectors(catalog, name, q, k).collect()]
     cache.put(key, rows)
     return rows
 

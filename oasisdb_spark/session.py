@@ -15,6 +15,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """spark.driver.memory when SPARK_DRIVER_MEMORY is unset: half the
+    host's physical memory, in whole GB, between 1g and 24g. Local mode
+    runs one JVM whose heap is also executor memory, and the Python
+    workers live outside that heap; a heap sized past the host lets the
+    JVM grow until the kernel kills it instead of raising an
+    OutOfMemoryError."""
+    total_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(24, total_gb // 2))}g"
+
+
 def get_spark(app_name: str = "oasisdb_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -32,7 +43,7 @@ def get_spark(app_name: str = "oasisdb_spark", shuffle_partitions: int | None = 
         # 8g was enough for one query but a 50+-query bench session holds
         # several persisted index frames; GC/eviction pressure showed up
         # as a 2.6x swing in the r02 bench (VERDICT r02 "what's wrong" #1).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.sql.parquet.filterPushdown", "true")
         # the driver's events fixture uses TIMESTAMP(NANOS); read as long
         # and convert (see sources/tables.py)

@@ -14,6 +14,12 @@ One catalog, one collection, four concurrent actors for WALL_SECS:
 - readers x N : search_vectors (k rows expected, finite distances,
                 ids from the committed universe) + get_document point
                 lookups on known-committed ids
+- point readers x M : OasisClient.search_vectors with a fresh query
+                each time (so the result cache never answers), i.e.
+                search.point_search reading the Parquet files on the
+                driver while the writers append to the lists and the
+                rebuilder swaps index versions; the same checks, plus
+                ascending (distance, id) order
 - streamer    : availableNow streaming ingest micro-batches into the
                 same collection via streaming/ingest.py (round-2
                 surface), exercised WHILE rebuilds swap snapshots
@@ -57,6 +63,7 @@ SEED_DOCS = 1000
 BATCH = 50
 K = 5
 N_READERS = 3
+N_POINT_READERS = 2
 WALL_SECS = float(sys.argv[1]) if len(sys.argv) > 1 else 60.0
 
 
@@ -74,6 +81,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from oasisdb_spark.catalog import Catalog
+    from oasisdb_spark.client import OasisClient
     from oasisdb_spark.search import add_to_index, build_index, search_vectors
 
     tmp = tempfile.mkdtemp(prefix="oasis_stress_")
@@ -95,7 +103,7 @@ def main() -> int:
     deleted: set[str] = set()
     stop = threading.Event()
     failures: list[str] = []
-    counters = {"searches": 0, "lookups": 0, "upserts": 0, "rebuilds": 0,
+    counters = {"searches": 0, "point_searches": 0, "lookups": 0, "upserts": 0, "rebuilds": 0,
                 "compactions": 0, "deletes": 0, "stream_batches": 0,
                 "collection_churns": 0}
 
@@ -263,12 +271,39 @@ def main() -> int:
                 fail(f"reader{tag}: search failed: {type(e).__name__}: {str(e)[:400]}")
                 return
 
+    def point_reader(tag: int) -> None:
+        client = OasisClient(spark, tmp)
+        prng = random.Random(200 + tag)
+        while not stop.is_set():
+            try:
+                out = client.search_vectors("c", _vec(prng), limit=K)
+                ids, dists = out["ids"], out["distances"]
+                if len(ids) != K:
+                    fail(f"point_reader{tag}: got {len(ids)} rows, want {K}")
+                    return
+                snap_universe = set(universe)
+                if any(not (d == d and d >= 0.0) for d in dists):
+                    fail(f"point_reader{tag}: bad distances {dists!r}")
+                    return
+                if any(i not in snap_universe for i in ids):
+                    fail(f"point_reader{tag}: unknown id in {ids!r}")
+                    return
+                if list(zip(dists, ids)) != sorted(zip(dists, ids)):
+                    fail(f"point_reader{tag}: rows out of (distance, id) order: {ids!r} {dists!r}")
+                    return
+                counters["point_searches"] += 1
+            except Exception as e:  # noqa: BLE001
+                fail(f"point_reader{tag}: search failed: {type(e).__name__}: {str(e)[:400]}")
+                return
+
     threads = [
         threading.Thread(target=writer, name="writer"),
         threading.Thread(target=rebuilder, name="rebuilder"),
         threading.Thread(target=streamer, name="streamer"),
         threading.Thread(target=churner, name="churner"),
-    ] + [threading.Thread(target=reader, args=(i,), name=f"reader{i}") for i in range(N_READERS)]
+    ] + [threading.Thread(target=reader, args=(i,), name=f"reader{i}") for i in range(N_READERS)] + [
+        threading.Thread(target=point_reader, args=(i,), name=f"point_reader{i}") for i in range(N_POINT_READERS)
+    ]
     for t in threads:
         t.start()
     deadline = time.time() + WALL_SECS

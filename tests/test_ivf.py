@@ -176,3 +176,24 @@ def test_knn_ivf_cogrouped_matches_knn_ivf(spark, embeddings):
         for nprobe in (8, 2):
             want = rows(knn_ivf, nprobe, space)
             assert rows(knn_ivf_cogrouped, nprobe, space) == want and want, (space, nprobe)
+
+
+def test_double_queries_keep_their_precision(spark, embeddings):
+    """ARRAY<DOUBLE> queries are scored as given: at nprobe = nlist,
+    knn_ivf and knn_ivf_cogrouped return knn_flat's rows, distances
+    included, for queries that float32 cannot hold (the fixture cast to
+    double and scaled by 1.1)."""
+    base = embeddings.select(F.col("vec_id").cast("string").alias("id"), F.col("embedding").alias("vector"))
+    q = embeddings.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").cast("string").alias("query_id"),
+        F.transform("embedding", lambda x: x.cast("double") * 1.1).alias("query_vec"),
+    )
+    cent, idx = build_ivf(base, nlist=4)
+
+    def rows(df):
+        return sorted((r["query_id"], r["id"], r["rank"], r["distance"]) for r in df.collect())
+
+    for space in ("l2", "ip", "cos"):
+        want = rows(knn_flat(q, base, k=10, space=space))
+        assert rows(knn_ivf(q, cent, idx, k=10, nprobe=4, space=space)) == want, space
+        assert rows(knn_ivf_cogrouped(q, cent, idx, k=10, nprobe=4, space=space)) == want, space
