@@ -27,9 +27,10 @@ Scale notes: per-collection data lives partitioned; rewrite-on-upsert is
 the Parquet-only equivalent of Delta MERGE (documented trade-off — with
 Delta/Iceberg available the write path becomes MERGE INTO and is
 incremental). Point reads run on the driver, not on Spark: get_document
-is a pyarrow id predicate on the current generation (min/max pruning),
-and arrow_documents / tombstone_ids hand the search point path the rows
-Spark wrote (search.point_search).
+and delete_document's existence probe are pyarrow id predicates on the
+current generation (min/max pruning), and arrow_generation /
+tombstone_ids hand the search point path the rows Spark wrote
+(search.point_search, search.point_documents).
 """
 
 from __future__ import annotations
@@ -361,20 +362,29 @@ class Catalog:
         return _read_arrow(p, _TOMBSTONE_ARROW_SCHEMA).column("id").to_pylist()
 
     # ---------- document CRUD (S6-S10) ----------
-    def arrow_documents(self, name: str, columns: list[str] | None = None, filter=None) -> pa.Table:
-        """read_documents' rows as a pyarrow Table, read on the driver (no
-        Spark job); filter is a pyarrow.dataset expression."""
-        self.get_collection(name)  # existence check, as read_documents
-        return _read_arrow(self._resolve(self.data_path(name)), _DOC_ARROW_SCHEMA, columns, filter)
+    def data_generation(self, name: str) -> str | None:
+        """The collection's current document generation dir (None before
+        its first write). A superseded generation stays on disk for at
+        least _GC_MIN_AGE_S, so several reads of one resolved dir read
+        one snapshot."""
+        return self._resolve(self.data_path(name))
 
-    def read_documents(self, name: str) -> DataFrame:
-        self.get_collection(name)  # existence check, matching document.go:136-145
-        p = self._resolve(self.data_path(name))
-        if p is None:
+    @staticmethod
+    def arrow_generation(gen: str | None, columns: list[str] | None = None, filter=None) -> pa.Table:
+        """A document generation's rows as a pyarrow Table, read on the
+        driver (no Spark job); filter is a pyarrow.dataset expression."""
+        return _read_arrow(gen, _DOC_ARROW_SCHEMA, columns, filter)
+
+    def _generation_frame(self, gen: str | None) -> DataFrame:
+        if gen is None:
             return self.spark.createDataFrame([], T.StructType(_DOC_SCHEMA_FIELDS))
         # explicit schema: no inference job, and a generation written
         # from an empty frame (no parquet footers) reads as 0 rows
-        return self.spark.read.schema(T.StructType(_DOC_SCHEMA_FIELDS)).parquet(p)
+        return self.spark.read.schema(T.StructType(_DOC_SCHEMA_FIELDS)).parquet(gen)
+
+    def read_documents(self, name: str) -> DataFrame:
+        self.get_collection(name)  # existence check, matching document.go:136-145
+        return self._generation_frame(self.data_generation(name))
 
     def _validate_dims(self, df: DataFrame, dimension: int) -> DataFrame:
         """Ingest-time row assertion (document.go:70-73,280-285).
@@ -427,7 +437,9 @@ class Catalog:
     def get_document(self, name: str, doc_id: str) -> dict:
         """{id, vector, parameters} of one document (parameters None when
         it has none), by a pyarrow id filter on the current generation."""
-        rows = self.arrow_documents(name, filter=ds.field("id") == str(doc_id)).slice(0, 1).to_pylist()
+        self.get_collection(name)  # existence check, as read_documents
+        gen = self.data_generation(name)
+        rows = self.arrow_generation(gen, filter=ds.field("id") == str(doc_id)).slice(0, 1).to_pylist()
         if not rows:
             raise errors.ErrDocumentNotFound(f"document {doc_id!r} not found in {name!r}")
         doc = rows[0]
@@ -441,9 +453,10 @@ class Catalog:
         If an index is built, the id is also tombstoned so indexed
         searches exclude it until the next rebuild bakes the delete in."""
         coll = self.get_collection(name)
-        existing = self.read_documents(name)
-        if existing.filter(F.col("id") == str(doc_id)).limit(1).count() == 0:
+        gen = self.data_generation(name)  # the probe and the rewrite read this one snapshot
+        if self.arrow_generation(gen, ["id"], ds.field("id") == str(doc_id)).num_rows == 0:
             raise errors.ErrDocumentNotFound(f"document {doc_id!r} not found in {name!r}")
+        existing = self._generation_frame(gen)
         self._atomic_overwrite(existing.filter(F.col("id") != str(doc_id)), self.data_path(name))
         if coll.index_version > 0 and coll.index_type != "flat":
             # read-merge-flip (not append): the tombstone set is tiny by

@@ -20,11 +20,13 @@ swapping the constructor: HTTP server + base_url become a SparkSession
                             metadata filter WORKS (pre-filter pushdown;
                             the reference ignores it, design.md:58-59)
 
-Point reads do not run on Spark: get_document, and search_vectors on a
-flat, unbuilt, ivf_flat or hnsw collection (l2, ip, cos), read the
-Parquet files Spark wrote on the driver with pyarrow
-(search.point_search), with no Spark job. Writes, builds,
-search_documents and the other searches run on the SparkSession.
+Point reads do not run on Spark: get_document, and search_vectors and
+search_documents (filtered or not) on a flat, unbuilt, ivf_flat or hnsw
+collection (l2, ip, cos), read the Parquet files Spark wrote on the
+driver with pyarrow (search.point_search, search.point_documents), with
+no Spark job. Writes, builds and the other searches run on the
+SparkSession. A search_documents filter that is not a mapping raises
+ErrInvalidParams.
 """
 
 from __future__ import annotations
@@ -32,8 +34,8 @@ from __future__ import annotations
 from typing import Any, Iterable, Mapping, Optional, Sequence
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
+from oasisdb_spark import errors
 from oasisdb_spark.cache import SearchCache
 from oasisdb_spark.catalog import Catalog
 
@@ -181,31 +183,28 @@ class OasisClient:
         limit: int = 10,
         filter: Optional[Mapping[str, Any]] = None,
     ) -> dict[str, Any]:
-        from oasisdb_spark.search import search_documents
+        from oasisdb_spark.search import filter_predicate, point_documents, search_documents
 
-        spark = self.catalog.spark
-        q = spark.createDataFrame(
-            [(0, [float(x) for x in vector])], "query_id INT, query_vec ARRAY<FLOAT>"
-        )
-        pred = None
-        for k, v in (filter or {}).items():
-            c = F.col("parameters").getItem(str(k)) == str(v)
-            pred = c if pred is None else (pred & c)
-        rows = (
-            search_documents(self.catalog, collection, q, limit, metadata_filter=pred)
-            .orderBy("rank")
-            .collect()
-        )
+        if filter is not None and not isinstance(filter, Mapping):
+            raise errors.ErrInvalidParams(f"filter must be an object, got {type(filter).__name__}")
+        rows = point_documents(self.catalog, collection, list(vector), limit, filter)
+        if rows is None:
+            q = self.catalog.spark.createDataFrame(
+                [(0, [float(x) for x in vector])], "query_id INT, query_vec ARRAY<FLOAT>"
+            )
+            pred = filter_predicate(filter)
+            rows = [
+                (r["id"], r["distance"], r["rank"], r["vector"], r["parameters"])
+                for r in search_documents(self.catalog, collection, q, limit, metadata_filter=pred)
+                .orderBy("rank")
+                .collect()
+            ]
         return {
             "documents": [
-                {
-                    "id": r["id"],
-                    "vector": list(r["vector"] or []),
-                    "parameters": dict(r["parameters"] or {}),
-                }
-                for r in rows
+                {"id": i, "vector": list(vec or []), "parameters": dict(params or {})}
+                for i, _, _, vec, params in rows
             ],
-            "distances": [float(r["distance"]) for r in rows],
+            "distances": [float(r[1]) for r in rows],
         }
 
     # Helpers -----------------------------------------------------------

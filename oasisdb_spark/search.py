@@ -20,10 +20,12 @@ Queries always run against the last BUILT index version (catalog
 index_version pinning) — the snapshot-isolation semantic the reference
 leaves undefined (SURVEY.md §4 concurrency notes).
 
-Spark builds the index; one query vector (cached_search_vectors, the
-serving path) is answered on the driver from the Parquet files Spark
-wrote, by point_search, with no Spark job. The DataFrame API
-(search_vectors, search_documents) stays on Spark.
+Spark builds the index; one query vector (cached_search_vectors and
+OasisClient.search_documents, the serving paths) is answered on the
+driver from the Parquet files Spark wrote, by point_search and
+point_documents, with no Spark job, filtered or not. The DataFrame API
+(search_vectors, search_documents) stays on Spark, and so do the tiers
+and spaces the point path does not cover (_point_query).
 """
 
 from __future__ import annotations
@@ -31,15 +33,17 @@ from __future__ import annotations
 import math
 import os
 import shutil
-from typing import Callable, NamedTuple
+from typing import Any, Callable, Mapping, NamedTuple
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from oasisdb_spark import errors
-from oasisdb_spark.catalog import Catalog
+from oasisdb_spark.catalog import Catalog, Collection
 from oasisdb_spark.index.binq import append_binq, build_binq, knn_binq, load_binq
 from oasisdb_spark.index.ivf import append_ivf, build_ivf, knn_ivf, load_ivf, probed_lists
 from oasisdb_spark.index.ivfpq import append_ivfpq, build_ivfpq, knn_ivfpq, load_ivfpq
@@ -53,6 +57,8 @@ __all__ = [
     "search_vectors",
     "search_documents",
     "point_search",
+    "point_documents",
+    "filter_predicate",
     "cached_search_vectors",
 ]
 
@@ -266,33 +272,108 @@ def search_vectors(
     return tier.search(queries, index, k, _Search(coll.params, coll.space, data, id_filter))
 
 
-def point_search(catalog: Catalog, name: str, query_vec: list[float], k: int) -> list[tuple[str, float, int]] | None:
-    """One query vector's top-k on the driver, with no Spark job: the
-    (id, distance, rank) rows that search_vectors(...).collect() gives
-    for it as an ARRAY<FLOAT> query (so the vector is rounded to float32
-    first), equal in ids, ranks and distances.
-
-    Flat and unbuilt collections scan the current data generation; the
-    IVF tiers (ivf_flat, hnsw) read their probed lists (_Tier.point),
-    minus the tombstones. kernels.point_topk scores every candidate by
-    the in-order fold and orders by (distance, id). None where there is
-    no point path — built ivfpq, ivfsq and binq, the hamming space, or
-    a query of the wrong dimension — and the caller runs search_vectors
-    instead."""
-    coll = catalog.get_collection(name)
+def _point_query(coll: Collection, query_vec: list[float]) -> np.ndarray | None:
+    """The query as the float32 vector the Spark path's ARRAY<FLOAT>
+    frame holds, or None where the collection has no point path for it:
+    built ivfpq, ivfsq and binq, the hamming space, or a query of the
+    wrong dimension."""
     tier = _tier(coll.index_type)
     q = np.asarray(query_vec, dtype=np.float32)
     if coll.space == "hamming" or q.shape != (coll.dimension,):
         return None
-    if coll.index_version == 0 or tier.search is None:
-        rows = catalog.arrow_documents(name, columns=["id", "vector"])
-    elif tier.point is None:
+    if coll.index_version > 0 and tier.search is not None and tier.point is None:
         return None
+    return q
+
+
+def _point_hits(
+    catalog: Catalog, coll: Collection, gen: str | None, q: np.ndarray, k: int, ids: pa.Array | None
+) -> list[tuple[str, float, int]]:
+    """The driver core of point_search and point_documents: one
+    float32 query's (id, distance, rank) top-k, with the candidates
+    limited to ids when given (a metadata filter's, as search_vectors'
+    candidates limit them). Flat and unbuilt collections scan the data
+    generation gen; the IVF tiers (ivf_flat, hnsw) read their probed
+    lists (_Tier.point), minus the tombstones. kernels.point_topk scores
+    every candidate by the in-order fold and orders by (distance, id)."""
+    tier = _tier(coll.index_type)
+    keep = None if ids is None else ds.field("id").isin(ids)
+    if coll.index_version == 0 or tier.search is None:
+        rows = catalog.arrow_generation(gen, ["id", "vector"], keep)
     else:
-        deleted = catalog.tombstone_ids(name)
-        keep = ~ds.field("id").isin(deleted) if deleted else None
-        rows = tier.point(catalog.index_path(name, coll.index_version), q, coll.params, keep)
+        deleted = catalog.tombstone_ids(coll.name)
+        if deleted:
+            live = ~ds.field("id").isin(deleted)
+            keep = live if keep is None else keep & live
+        rows = tier.point(catalog.index_path(coll.name, coll.index_version), q, coll.params, keep)
     return point_topk(q, rows, k, coll.space)
+
+
+def point_search(catalog: Catalog, name: str, query_vec: list[float], k: int) -> list[tuple[str, float, int]] | None:
+    """One query vector's top-k on the driver, with no Spark job: the
+    (id, distance, rank) rows that search_vectors(...).collect() gives
+    for it as an ARRAY<FLOAT> query (so the vector is rounded to float32
+    first), equal in ids, ranks and distances. None where there is no
+    point path (_point_query), and the caller runs search_vectors
+    instead."""
+    coll = catalog.get_collection(name)
+    q = _point_query(coll, query_vec)
+    if q is None:
+        return None
+    return _point_hits(catalog, coll, catalog.data_generation(name), q, k, None)
+
+
+def filter_predicate(filter: Mapping[str, Any] | None) -> Column | None:
+    """The Spark predicate of a search_documents filter, {key: value}:
+    parameters[key] == str(value) for every key (a NULL map or a missing
+    key drops the row); None for no filter. point_documents applies the
+    same predicate with pyarrow."""
+    pred = None
+    for key, value in (filter or {}).items():
+        c = F.col("parameters").getItem(str(key)) == str(value)
+        pred = c if pred is None else pred & c
+    return pred
+
+
+def point_documents(
+    catalog: Catalog, name: str, query_vec: list[float], k: int, filter: Mapping[str, Any] | None = None
+) -> list[tuple[str, float, int, list[float], dict | None]] | None:
+    """search_documents for one query vector on the driver, with no
+    Spark job: the (id, distance, rank, vector, parameters) rows of
+    search_documents(...).orderBy("rank").collect() with the metadata
+    filter filter_predicate(filter). None where point_search has no path
+    either.
+
+    One data generation answers the whole call: the filter's ids, the
+    flat scan, and the hits' vector and parameters. As on Spark, a built
+    index's distances come from its lists while the vector comes from
+    the document store (an id upserted again since the build keeps its
+    built distance), and a hit with no document row is dropped, ranks
+    unchanged."""
+    coll = catalog.get_collection(name)
+    q = _point_query(coll, query_vec)
+    if q is None:
+        return None
+    gen = catalog.data_generation(name)
+    ids = None
+    if filter:
+        meta = catalog.arrow_generation(gen, ["id", "parameters"])
+        match = None
+        for key, value in filter.items():
+            m = pc.equal(pc.map_lookup(meta["parameters"], str(key), "first"), str(value))
+            match = m if match is None else pc.and_(match, m)
+        ids = meta["id"].filter(match).combine_chunks()  # a NULL match drops the row
+    hits = _point_hits(catalog, coll, gen, q, k, ids)
+    if not hits:
+        return []
+    docs = catalog.arrow_generation(gen, filter=ds.field("id").isin([h[0] for h in hits])).to_pylist()
+    by_id = {d["id"]: d for d in docs}
+    rows = []
+    for i, dist, rank in hits:
+        if i in by_id:  # the inner join drops a hit with no document row
+            params = by_id[i]["parameters"]  # Arrow gives a map as (key, value) pairs
+            rows.append((i, dist, rank, by_id[i]["vector"], None if params is None else dict(params)))
+    return rows
 
 
 def cached_search_vectors(

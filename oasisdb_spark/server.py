@@ -22,19 +22,21 @@ handlers.go:30-354 (request/response JSON shapes). Every route maps 1:1:
                                                         design.md:58-59)
 
 Built on the stdlib ThreadingHTTPServer — a thin serving shell, not a
-scale path. Point reads no longer run on Spark: a vector search on a
-flat, unbuilt, ivf_flat or hnsw collection and a document get read the
-Parquet files Spark wrote on the driver (search.point_search,
-Catalog.get_document) and run no Spark job. Writes, index builds,
-filtered document searches, and searches of built ivfpq / ivfsq / binq
-or hamming collections execute on the embedded SparkSession. A single
-driver-side lock still serializes every request, reads included (the
-wait for it is what perfbench reports as server.lock_wait_ms). For
-production serving you'd put the same OasisClient behind a real ASGI
-server; the contract is what's tested.
+scale path. Reads do not run on Spark: a vector search or a document
+search (filtered or not) on a flat, unbuilt, ivf_flat or hnsw
+collection, and a document get, read the Parquet files Spark wrote on
+the driver (search.point_search, search.point_documents,
+Catalog.get_document) and run no Spark job. Writes, index builds, and
+searches of built ivfpq / ivfsq / binq or hamming collections execute
+on the embedded SparkSession. A single driver-side lock still
+serializes every request, reads included (the wait for it is what
+perfbench reports as server.lock_wait_ms). For production serving you'd
+put the same OasisClient behind a real ASGI server; the contract is
+what's tested.
 
 Error mapping (handlers.go parity): unknown collection/document → 404,
-malformed JSON / invalid params → 400, everything else → 500.
+malformed JSON / invalid params (a documents/search "filter" that is not
+a JSON object included) → 400, everything else → 500.
 """
 
 from __future__ import annotations

@@ -18,8 +18,11 @@ One catalog, one collection, four concurrent actors for WALL_SECS:
                 each time (so the result cache never answers), i.e.
                 search.point_search reading the Parquet files on the
                 driver while the writers append to the lists and the
-                rebuilder swaps index versions; the same checks, plus
-                ascending (distance, id) order
+                rebuilder swaps index versions, alternating with a
+                filtered OasisClient.search_documents (src == seed,
+                search.point_documents); the same checks, plus
+                ascending (distance, id) order, and for the documents
+                the filter's value and DIM floats
 - streamer    : availableNow streaming ingest micro-batches into the
                 same collection via streaming/ingest.py (round-2
                 surface), exercised WHILE rebuilds swap snapshots
@@ -103,9 +106,9 @@ def main() -> int:
     deleted: set[str] = set()
     stop = threading.Event()
     failures: list[str] = []
-    counters = {"searches": 0, "point_searches": 0, "lookups": 0, "upserts": 0, "rebuilds": 0,
-                "compactions": 0, "deletes": 0, "stream_batches": 0,
-                "collection_churns": 0}
+    counters = {"searches": 0, "point_searches": 0, "point_docsearches": 0, "lookups": 0,
+                "upserts": 0, "rebuilds": 0, "compactions": 0, "deletes": 0,
+                "stream_batches": 0, "collection_churns": 0}
 
     def fail(msg: str) -> None:
         failures.append(msg)
@@ -271,6 +274,18 @@ def main() -> int:
                 fail(f"reader{tag}: search failed: {type(e).__name__}: {str(e)[:400]}")
                 return
 
+    def point_rows_ok(tag: int, ids: list[str], dists: list[float]) -> bool:
+        snap_universe = set(universe)
+        if any(not (d == d and d >= 0.0) for d in dists):
+            fail(f"point_reader{tag}: bad distances {dists!r}")
+        elif any(i not in snap_universe for i in ids):
+            fail(f"point_reader{tag}: unknown id in {ids!r}")
+        elif list(zip(dists, ids)) != sorted(zip(dists, ids)):
+            fail(f"point_reader{tag}: rows out of (distance, id) order: {ids!r} {dists!r}")
+        else:
+            return True
+        return False
+
     def point_reader(tag: int) -> None:
         client = OasisClient(spark, tmp)
         prng = random.Random(200 + tag)
@@ -281,17 +296,20 @@ def main() -> int:
                 if len(ids) != K:
                     fail(f"point_reader{tag}: got {len(ids)} rows, want {K}")
                     return
-                snap_universe = set(universe)
-                if any(not (d == d and d >= 0.0) for d in dists):
-                    fail(f"point_reader{tag}: bad distances {dists!r}")
-                    return
-                if any(i not in snap_universe for i in ids):
-                    fail(f"point_reader{tag}: unknown id in {ids!r}")
-                    return
-                if list(zip(dists, ids)) != sorted(zip(dists, ids)):
-                    fail(f"point_reader{tag}: rows out of (distance, id) order: {ids!r} {dists!r}")
+                if not point_rows_ok(tag, ids, dists):
                     return
                 counters["point_searches"] += 1
+                out = client.search_documents("c", _vec(prng), limit=K, filter={"src": "seed"})
+                docs, dists = out["documents"], out["distances"]
+                if len(docs) > K or any(d["parameters"].get("src") != "seed" for d in docs):
+                    fail(f"point_reader{tag}: docsearch rows outside the filter: {docs!r}")
+                    return
+                if any(len(d["vector"]) != DIM for d in docs):
+                    fail(f"point_reader{tag}: docsearch vector of the wrong dimension")
+                    return
+                if not point_rows_ok(tag, [d["id"] for d in docs], dists):
+                    return
+                counters["point_docsearches"] += 1
             except Exception as e:  # noqa: BLE001
                 fail(f"point_reader{tag}: search failed: {type(e).__name__}: {str(e)[:400]}")
                 return

@@ -2,6 +2,7 @@
 document_test.go and the F5 error-path cases in FIXTURES.md."""
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -203,6 +204,33 @@ def test_metadata_calls_run_no_spark_jobs(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert client.cache.hits == 1
+
+
+def test_delete_document_probe_runs_no_spark_job(spark, catalog):
+    """delete_document finds the id with a pyarrow filter on the
+    generation it rewrites: a missing id raises with no Spark job, and a
+    delete from a flat collection runs only the rewrite's write job."""
+    catalog.create_collection("docs", dimension=4, index_type="flat")
+    catalog.upsert_documents("docs", _docs(spark))
+    sc = spark.sparkContext
+
+    def jobs(call) -> int:
+        group = f"delete-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "delete_document")
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def delete_missing():
+        with pytest.raises(errors.ErrDocumentNotFound):
+            catalog.delete_document("docs", "nope")
+
+    assert jobs(delete_missing) == 0
+    assert jobs(lambda: catalog.delete_document("docs", "3")) == 1
+    assert sorted(r["id"] for r in catalog.read_documents("docs").collect()) == ["0", "1", "2", "4"]
 
 
 def test_failed_catalog_write_keeps_previous_catalog(spark, catalog, monkeypatch):

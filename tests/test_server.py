@@ -98,6 +98,15 @@ def test_search_routes_over_http(srv):
     assert [d["id"] for d in body["documents"]] == ["3", "1", "5"]
     assert all(d["parameters"]["label"] == "1" for d in body["documents"])
     assert all(d["distance"] == dist for d, dist in zip(body["documents"], body["distances"]))
+    # a filter must be a JSON object of key: value pairs; anything else is
+    # a bad request, as Go's JSON bind rejects it, not a server error
+    for bad in (["label"], "label", 1):
+        code, body = _req(srv, "POST", "/v1/collections/c/documents/search",
+                          {"vector": [2.2, 0.0, 0.0, 0.0], "limit": 3, "filter": bad})
+        assert code == 400 and "filter" in body["error"], bad
+    code, body = _req(srv, "POST", "/v1/collections/c/documents/search",
+                      {"vector": [2.2, 0.0, 0.0, 0.0], "limit": 3, "filter": None})
+    assert code == 200 and [d["id"] for d in body["documents"]] == ["2", "3", "1"]
 
 
 def test_buildindex_setparams_over_http(srv):
